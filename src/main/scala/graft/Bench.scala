@@ -243,89 +243,34 @@ object Bench {
     // MID-RUN would otherwise record "host was fast" over a slow run
     // (the inverse of the truth). Both ends land in the artifact.
     val calSecEnd = (1 to 3).map(_ => calProbe()).min
-    // MERGE-LANE ECONOMICS — the `wh:merge` taxonomy rows (round-19):
-    // the driver corpora are static, so Warehouse.servedFrameMerged's
-    // merge lane would otherwise never appear in a measured per-round
-    // artifact (specs + ProfMerge exercised it, but with no regression
-    // signal). Each row stages a +5% append on a SCRATCH copy
-    // (tools.MergeStage — staging shared with ProfMerge) and times the
-    // merge resolution only; the cold build that seeds it is untimed
-    // setup (cold economics live in the artifact_builds ledger). One
-    // family per merge SHAPE: per-doc union (minhash_bands),
-    // batch-touching pair slice (ngram_pairs), boundary-seeded lag
-    // continuation (ev_trans), semilattice distinct (ev_user_days),
-    // additive-df index with cap markers (vb_index).
-    // Rows land in BENCH_FULL.json as "merge_builds" with wh:"merge"
-    // and are EXCLUDED from the stdout total — they measure a staged
-    // growth path, not this corpus's serving cost — adjudicated
-    // against SCALE.md's merge table, not the query baseline.
-    val mergeBuilds: Seq[(String, Double, Double, Double)] = try {
-      val dir = java.nio.file.Files.createTempDirectory("benchmerge").toString
-      import org.apache.spark.sql.functions.col
-      tools.MergeStage.stage(spark, sfDir, dir, "documents")
-      tools.MergeStage.stage(spark, sfDir, dir, "events")
-      def fam(name: String, table: String, fp: String)
-             (cold: => org.apache.spark.sql.DataFrame)
-             (merge: (org.apache.spark.sql.DataFrame,
-                      org.apache.spark.sql.DataFrame) =>
-                       Option[org.apache.spark.sql.DataFrame]): Long =
-        graft.sources.Warehouse.servedFrameMerged(
-          spark, name, dir, table, fp)(cold)(merge).count()
-      val docs = () => spark.read.parquet(s"$dir/documents.parquet")
-      def noCold = sys.error("merge bench: cold must not run")
-        : org.apache.spark.sql.DataFrame
-      val mhMerge = (old: org.apache.spark.sql.DataFrame,
-                     b: org.apache.spark.sql.DataFrame) =>
-        Some(old.unionByName(operators.Dedup.minhashBandIndex(b)))
-      val ngMerge = (old: org.apache.spark.sql.DataFrame,
-                     b: org.apache.spark.sql.DataFrame) =>
-        Some(old.unionByName(operators.Dedup.ngramPairsTouching(
-          docs(), b.select(col("doc_id")))))
-      // Untimed cold seeds at the base scratch state.
-      val dFp1 = tools.MergeStage.fpOf(spark, dir, "documents", "doc_id")
-      val eFp1 = tools.MergeStage.fpOf(spark, dir, "events", "event_id")
-      fam("bm_bands", "documents", dFp1)(
-        operators.Dedup.minhashBandIndex(docs()))(mhMerge)
-      fam("bm_ngram", "documents", dFp1)(
-        operators.Dedup.ngramPairs(docs()))(ngMerge)
-      fam("bm_evtr", "events", eFp1)(
-        operators.Events.transStore(Tables.events(spark, dir)))(
-        operators.Events.transStoreMerged)
-      fam("bm_evud", "events", eFp1)(
-        operators.Events.userDays(Tables.events(spark, dir)))(
-        operators.Events.userDaysMerged)
-      // Width stays fixed across the ~5% append (count moves one
-      // decade only at 10×), so the vb merge arm actually runs.
-      val vbW = operators.Curation.deriveShingleWidth(
-        docs().count())
-      fam("bm_vbidx", "documents", dFp1)(
-        operators.Curation.verbatimIndexStore(docs(), vbW))(
-        operators.Curation.verbatimIndexMerged(vbW))
-      tools.MergeStage.append(spark, dir, "documents", "doc_id")
-      tools.MergeStage.append(spark, dir, "events", "event_id")
-      val dFp2 = tools.MergeStage.fpOf(spark, dir, "documents", "doc_id")
-      val eFp2 = tools.MergeStage.fpOf(spark, dir, "events", "event_id")
-      val timed = Seq[(String, () => Long)](
-        ("minhash_bands", () => fam("bm_bands", "documents", dFp2)(noCold)(mhMerge)),
-        ("ngram_pairs", () => fam("bm_ngram", "documents", dFp2)(noCold)(ngMerge)),
-        ("ev_trans", () => fam("bm_evtr", "events", eFp2)(noCold)(
-          operators.Events.transStoreMerged)),
-        ("ev_user_days", () => fam("bm_evud", "events", eFp2)(noCold)(
-          operators.Events.userDaysMerged)),
-        ("vb_index", () => fam("bm_vbidx", "documents", dFp2)(noCold)(
-          operators.Curation.verbatimIndexMerged(vbW)))
-      ).map { case (name, run) =>
-        val t0 = System.nanoTime()
-        val (_, runS, cpuS) = metered(() => run())
-        (name, (System.nanoTime() - t0) / 1e9, runS, cpuS)
+    // MERGE-LANE ECONOMICS — the `merge_builds` rows (round-19): the
+    // driver corpora are static, so the warehouse's append-merge lane
+    // would otherwise never appear in a measured per-round artifact.
+    // Every artifactBuilders row resolves on a SCRATCH copy
+    // (tools.MergeStage.acrossAppend): once at the base state (setup,
+    // not reported — cold economics live in artifact_builds), then
+    // again after a staged append; the second resolution is the row,
+    // with the lane each of its families took.
+    // Rows land in BENCH_FULL.json as "merge_builds" and are EXCLUDED
+    // from the stdout total — they measure a staged growth path, not
+    // this corpus's serving cost — adjudicated against SCALE.md's
+    // merge table, not the query baseline.
+    val mergeBuilds: Seq[(String, (Double, Double, Double), Map[String, String])] =
+      try {
+        val dir = java.nio.file.Files.createTempDirectory("benchmerge").toString
+        val rows = tools.MergeStage.acrossAppend(spark, sfDir, dir,
+            artifactBuilders) { f =>
+          val t0 = System.nanoTime()
+          val (_, runS, cpuS) = metered(f)
+          ((System.nanoTime() - t0) / 1e9, runS, cpuS)
+        }
+        tools.MergeStage.cleanup(spark, dir)
+        graft.sources.Warehouse.drainHits(spark) // scratch labels are not ledger rows
+        rows.map { case (name, _, grown, lanes) => (name, grown, lanes) }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] merge_builds FAILED: ${e.getMessage}")
+        Seq.empty
       }
-      tools.MergeStage.cleanup(spark, dir)
-      graft.sources.Warehouse.drainHits(spark) // scratch labels are not ledger rows
-      timed
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] merge_builds FAILED: ${e.getMessage}")
-      Seq.empty
-    }
     // A query is an error only if it has NO successful timing (a failed
     // contention re-run after a good first run is not an error).
     val errors = results.collect { case (name, None, _) => name }
@@ -372,9 +317,11 @@ object Bench {
     val qcpu = results.map { case (k, v, _) =>
       "\"" + k + "\":" + fmt(v.map(_._3).getOrElse(-1.0)) }
       .mkString("{", ",", "}")
-    val mb = mergeBuilds.map { case (k, w, r, c) =>
+    val mb = mergeBuilds.map { case (k, (w, r, c), lanes) =>
       "\"" + k + "\":{\"wall\":" + fmt(w) + ",\"run\":" + fmt(r) +
-        ",\"cpu\":" + fmt(c) + ",\"wh\":\"merge\"}" }
+        ",\"cpu\":" + fmt(c) + ",\"lanes\":" + lanes.toSeq.sorted
+          .map { case (f, l) => "\"" + f + "\":\"" + l + "\"" }
+          .mkString("{", ",", "}") + "}" }
       .mkString("{", ",", "}")
     val full = line.dropRight(1) +
       s""","shuffle_bytes":$sh,"retried":$rt,"artifact_builds":$ab,"artifact_builds_metric":$abm,"merge_builds":$mb,"warehouse_preexisting":$whp,"queries_cpu":$qcpu,"calibration":$cal}"""

@@ -231,21 +231,20 @@ object Curation {
     * width holds; a [[deriveShingleWidth]] step DECLINES to cold
     * (every stored key hashes width-token windows — the lsh_buckets
     * convention, predicate [[shingleWidthCrossed]]). */
-  def docShingleStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"doc-shingles:$dir")(
+  def docShingleStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"doc-shingles:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "doc_shingles", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir)) {
+        s, "doc_shingles", dir, "documents", fp) {
         val docs = Tables.documents(s, dir)
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", docs, "doc_id")._1
+        val n = graft.sources.Warehouse.docsStats(s, dir)._1
         shingles(docs, deriveShingleWidth(n))
       } { (old, batch) =>
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+        val n = graft.sources.Warehouse.docsStats(s, dir)._1
         if (shingleWidthCrossed(n, batch.count())) None
         else Some(old.unionByName(shingles(batch, deriveShingleWidth(n))))
       })
+  }
 
   /** Build the doc-shingle store NOW — Bench's explicit artifact-build
     * row (the warmMinhashBands accounting rule: the build is its own
@@ -549,20 +548,20 @@ object Curation {
       emptied: DataFrame, s5: DataFrame,
       semanticDrops: DataFrame, s6: DataFrame)
 
-  /** ONE FunnelFrames build per (session, corpus dir) — the round-9
+  /** ONE FunnelFrames build per (session, corpus state) — the round-9
     * verdict's funnel-pair memoization: `q_corpus_funnel` and
     * `q_corpus_funnel_reasons` are two VIEWS of the same checkpointed
     * stage frames, so whichever runs first builds them and the other
     * reads (the per-stage localCheckpoint already stands in for the
-    * stage table a production funnel writes — this cache is just the
-    * "read the table you already wrote" half of that story). Stopped
-    * sessions are evicted, as in [[Artifacts]]. */
-  private val funnelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), FunnelFrames]()
-
+    * stage table a production funnel writes — this memo is just the
+    * "read the table you already wrote" half of that story). The
+    * [[Artifacts]] entry carries the combined documents + embeddings
+    * fingerprint, the two tables the funnel reads. */
   private def funnelFramesArtifact(s: SparkSession, dir: String): FunnelFrames = {
-    funnelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    funnelCache.computeIfAbsent((s, dir), _ => {
+    val docsFp = graft.sources.Warehouse.docsFp(s, dir)
+    val semFp = graft.sources.Warehouse.combineFp(
+      docsFp, graft.sources.Warehouse.embFp(s, dir))
+    Artifacts.cached(s, s"funnel-frames:$dir", semFp) {
       // Warehouse materializer (round 16): s1 and the five drop sets
       // persist as per-stage tables keyed by path digest + corpus
       // fingerprint — the funnel's six stages resolve table-by-table,
@@ -583,9 +582,6 @@ object Curation {
       // rebuild the whole text pipeline when only the embeddings
       // moved. WarehouseSpec pins both sides: an embeddings-only
       // mutation misses fn_semdrops and hits fn_s1.
-      val docsFp = graft.sources.Warehouse.docsFp(s, dir)
-      val semFp = graft.sources.Warehouse.combineFp(
-        docsFp, graft.sources.Warehouse.embFp(s, dir))
       val mat: (String, () => DataFrame) => DataFrame = (family, build) => {
         if (family == "fn_s1")
           // The ONE merge-lane funnel stage (round-19): qualityGate is
@@ -613,13 +609,12 @@ object Curation {
           s.table(name)
         }
       }
-      val (nDocs, _) = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")
+      val (nDocs, _) = graft.sources.Warehouse.docsStats(s, dir)
       funnelFrames(Tables.documents(s, dir), Tables.embeddings(s, dir),
         mat, nInputHint = nDocs,
         bandIndex = Some(() => Dedup.minhashBandStore(s, dir)),
         docShingles = Some(() => docShingleStore(s, dir)))
-    })
+    }
   }
 
   /** Build the shared span-family artifacts now (index → matches →
@@ -927,7 +922,7 @@ object Curation {
     * artifact reuses the live broadcast; stopped sessions evicted on
     * every construction (their torrent blocks are gone and the key
     * pins the dead SparkSession). */
-  private def cachedGateBroadcast[T: scala.reflect.ClassTag](
+  private[operators] def cachedGateBroadcast[T: scala.reflect.ClassTag](
       s: SparkSession, key: String)(
       mk: => T): org.apache.spark.broadcast.Broadcast[T] = {
     gateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
@@ -1323,17 +1318,17 @@ object Curation {
     * BUILD FROM THIS TABLE, so even their cold rebuilds never
     * re-shingle the corpus; only the index's own cold build (first
     * contact or a declined merge) pays the shingle pass. */
-  private def verbatimIndexArtifact(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"verbatim-index:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+  private def verbatimIndexArtifact(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"verbatim-index:$dir", fp) {
+      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_index", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "vb_index", dir, "documents", fp)(
         verbatimIndexStore(Tables.documents(s, dir), width))(
         verbatimIndexMerged(width))
     }
+  }
 
   /** The persisted corpus-side index of the INCREMENTAL verbatim key —
     * [[verbatimIndexStore]] over the settled slice (doc_id % 5 ≠ 0) at
@@ -1349,19 +1344,19 @@ object Curation {
     * settled-slice rows (df additivity holds on any disjoint doc
     * split); a width step declines inside the shared callback. */
   private[graft] def vbIncIndexArtifact(s: SparkSession,
-                                        dir: String): DataFrame =
-    Artifacts.cached(s, s"vb-inc-index:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+                                        dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"vb-inc-index:$dir", fp) {
+      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_inc_idx", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "vb_inc_idx", dir, "documents", fp)(
         verbatimIndexStore(
           Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0), width))(
         (old, delta) => verbatimIndexMerged(width)(
           old, delta.filter(col("doc_id") % 5 =!= 0)))
     }
+  }
 
   /** Crossed-THIS-STEP keys, recomputable without the superseded index
     * variant: a marker in the NEW index whose pre-delta df
@@ -1414,13 +1409,12 @@ object Curation {
     * accessor drops it, so every consumer sees the round-9 schema. */
   private def verbatimMatchesArtifact(s: SparkSession, dir: String): DataFrame = {
     val index = verbatimIndexArtifact(s, dir)
-    Artifacts.cached(s, s"verbatim-matches:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"verbatim-matches:$dir", fp) {
+      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_matches", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "vb_matches", dir, "documents", fp)(
         verbatimMatchesFrom(index.filter(col("doc_id").isNotNull)
           .select("sh_key", "doc_id", "pos")).withColumn("w", lit(width)))(
         verbatimMatchesMerged(width, index))
@@ -1471,13 +1465,12 @@ object Curation {
     // the nested-computeIfAbsent crash class structurally impossible).
     val index = verbatimIndexArtifact(s, dir)
     val matches = verbatimMatchesArtifact(s, dir)
-    Artifacts.cached(s, s"verbatim-offsets:$dir") {
-      val nDocs = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"verbatim-offsets:$dir", fp) {
+      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
       val width = deriveShingleWidth(nDocs)
       graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_offsets", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "vb_offsets", dir, "documents", fp)(
         verbatimOffsetsFrom(matches, width).withColumn("w", lit(width)))(
         verbatimOffsetsMerged(width, index, matches))
     }.drop("w")
@@ -2267,8 +2260,7 @@ object Curation {
       // never rescanned and the batch is never re-folded; the cached
       // countMax stats pass replaces the per-key max(doc_id) job.
       val sh = docShingleStore(s, dir)
-      val cut = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._2 * 4 / 5
+      val cut = graft.sources.Warehouse.docsStats(s, dir)._2 * 4 / 5
       val index = sh.filter(col("doc_id") < cut)
         .select(col("sh_key")).distinct()
       noveltyBatchFromShingles(sh.filter(col("doc_id") >= cut), index)
@@ -2329,8 +2321,7 @@ object Curation {
       val docs = Tables.documents(s, dir)
       verbatimRemoveFrom(docs.select(col("doc_id"), col("text")),
         verbatimOffsetsArtifact(s, dir),
-        deriveShingleWidth(graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", docs, "doc_id")._1))
+        deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1))
         .orderBy("doc_id")
     }),
 
@@ -2347,8 +2338,7 @@ object Curation {
     // text) proves incremental == from-scratch.
     "q_verbatim_removal_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val width = deriveShingleWidth(graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", docs, "doc_id")._1)
+      val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
       val batch = docs.filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text"))
       // Store-fed (round-22): the settled slice's persisted index
@@ -2487,8 +2477,7 @@ object Curation {
       // deriveShingleWidth step, where the key falls back to the
       // inline fold rather than serve stale-width keys (the decline-
       // to-cold discipline, applied at the read side).
-      val n = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+      val n = graft.sources.Warehouse.docsStats(s, dir)._1
       val w = deriveShingleWidth(n + 1)
       val sh =
         if (w == deriveShingleWidth(n))

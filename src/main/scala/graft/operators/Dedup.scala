@@ -1321,11 +1321,11 @@ object Dedup {
     * `q_dedup_ngram` keeps the inline derivation — it IS the audit
     * whose plan is the reference. Deterministic (prefix rule + exact
     * Jaccard + rounded emission) ⟹ reuse == rebuild. */
-  private def ngramPairStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"ngram-pairs:$dir")(
+  private def ngramPairStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"ngram-pairs:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "ngram_pairs", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "ngram_pairs", dir, "documents", fp)(
         ngramPairs(Tables.documents(s, dir)))(
         // Append-merge lane (round-18): old-state pairs ∪ the
         // batch-touching slice — see [[ngramPairsTouching]] for why
@@ -1334,6 +1334,7 @@ object Dedup {
         (old, batch) => Some(old.unionByName(
           ngramPairsTouching(Tables.documents(s, dir),
             batch.select(col("doc_id")))))))
+  }
 
   /** The EMBEDDING near-dup pair store — the `ngram_pairs` convention
     * on the semantic side (round-17): the LSH-bucketed cosine pair
@@ -1343,14 +1344,13 @@ object Dedup {
     * The capped serving twin reads it; `q_dedup_embedding` keeps the
     * inline derivation as the pair-machinery reference (the
     * q_dedup_ngram split). */
-  private def embPairStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"emb-pairs:$dir")(
+  private def embPairStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"emb-pairs:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "emb_pairs", dir, "embeddings",
-        graft.sources.Warehouse.embFp(s, dir)) {
+        s, "emb_pairs", dir, "embeddings", fp) {
         val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", vectors, "vec_id")._1
+        val n = Similarity.embCount(s, dir)
         embeddingPairs(vectors, 0.35, Similarity.derivePlanes(n))
       } { (old, batch) =>
         // Append-merge lane (round-18): valid ONLY while the
@@ -1360,13 +1360,13 @@ object Dedup {
         // crossing DECLINES (cold rebuild), per the
         // [[embeddingPairsTouching]] contract.
         val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", vectors, "vec_id")._1
+        val n = Similarity.embCount(s, dir)
         if (Similarity.planeBlockCrossed(n, batch.count())) None
         else Some(old.unionByName(embeddingPairsTouching(
           vectors, batch.select(col("vec_id")), 0.35,
           Similarity.derivePlanes(n))))
       })
+  }
 
   /** Build the embedding pair store AND its CC labels NOW — Bench's
     * explicit artifact-build row for the semantic near-dup family
@@ -1389,17 +1389,18 @@ object Dedup {
     * settled corpus. Deterministic (md5-fold base hash + xxhash64
     * band fold) ⟹ reuse == rebuild. */
   private[operators] def minhashBandStore(s: SparkSession,
-                                          dir: String): DataFrame =
-    Artifacts.cached(s, s"minhash-bands:$dir")(
+                                          dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"minhash-bands:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "minhash_bands", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "minhash_bands", dir, "documents", fp)(
         minhashBandIndex(Tables.documents(s, dir)))(
         // Append-merge lane (round-18): bands are a PER-DOC function
         // (shingle→md5-fold→min — no corpus-global input), so the
         // merged index is the cold rebuild exactly; per-append cost is
         // batch-linear (WarehouseSpec pins the hash equality).
         (old, batch) => Some(old.unionByName(minhashBandIndex(batch)))))
+  }
 
   /** Build the band index NOW — Bench's explicit artifact-build row. */
   def warmMinhashBands(s: SparkSession, dir: String): Unit = {
@@ -1414,16 +1415,17 @@ object Dedup {
     * runs once per corpus state at ingest; serving pays banding + the
     * hamming verify only. Deterministic (md5-fold token hash, sign
     * votes) ⟹ reuse == rebuild. */
-  private def simhashSketchStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"simhash-sketches:$dir")(
+  private def simhashSketchStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"simhash-sketches:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "simhash_sk", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "simhash_sk", dir, "documents", fp)(
         simhashed(Tables.documents(s, dir).filter(col("lang") === "fr")))(
         // Append-merge lane: sketches are per-doc (token votes), so
         // old ∪ sketch(batch slice) == the cold rebuild exactly.
         (old, batch) => Some(old.unionByName(
           simhashed(batch.filter(col("lang") === "fr"))))))
+  }
 
   /** Build the sketch store NOW — Bench's explicit artifact-build
     * row. */
@@ -1439,15 +1441,16 @@ object Dedup {
     * chunk profile, size histogram) and the incremental gate's index
     * side read it back — content is never re-chunked. Deterministic
     * (stateless Rabin cuts + md5-fold keys) ⟹ reuse == rebuild. */
-  private def cdcChunkStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"cdc-chunks:$dir")(
+  private def cdcChunkStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"cdc-chunks:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "cdc_chunks", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "cdc_chunks", dir, "documents", fp)(
         cdcChunks(Tables.documents(s, dir)))(
         // Append-merge lane: CDC cuts are stateless per-doc (content-
         // defined), so old ledger ∪ chunks(batch) == the cold rebuild.
         (old, batch) => Some(old.unionByName(cdcChunks(batch)))))
+  }
 
   /** Build the chunk ledger NOW — Bench's explicit artifact-build
     * row. */
@@ -1463,8 +1466,9 @@ object Dedup {
     * representative. Same lifecycle as the text labels: built off the
     * persisted pair STORE, persisted as the `emb_cc` warehouse family
     * (min-label CC is deterministic ⟹ reuse == rebuild). */
-  private def embClusterLabels(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"emb-cc-labels:$dir") {
+  private def embClusterLabels(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"emb-cc-labels:$dir", fp) {
       // APPEND-MERGE (round-19): [[ccLabelsMerged]] over the persisted
       // pair store. DECLINES across a derivePlanes block boundary —
       // the emb pair SET is candidate-generation-dependent (LSH
@@ -1472,15 +1476,13 @@ object Dedup {
       // growth-invariant only while the plane count holds: the exact
       // condition the pair store's own merge declines on.
       graft.sources.Warehouse.servedFrameMerged(
-        s, "emb_cc", dir, "embeddings",
-        graft.sources.Warehouse.embFp(s, dir))(
+        s, "emb_cc", dir, "embeddings", fp)(
         connectedComponents(
           embPairStore(s, dir)
             .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
           .select(col("doc_id").as("vec_id"), col("cluster_rep"))
       ) { (old, delta) =>
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+        val n = Similarity.embCount(s, dir)
         val deltaIds = delta.select(col("vec_id"))
         if (Similarity.planeBlockCrossed(n, deltaIds.count())) None
         else Some(ccLabelsMerged(
@@ -1491,9 +1493,10 @@ object Dedup {
           .select(col("doc_id").as("vec_id"), col("cluster_rep")))
       }
     }
+  }
 
   /** The SHARED near-dup labeling artifact: ngram pair graph → CC
-    * labels, built ONCE per (session, corpus dir) and served to every
+    * labels, built ONCE per (session, corpus state) and served to every
     * consumer key (`q_dedup_cluster`, `_representative`, `_stats`) —
     * the round-9 verdict's "one labeling pass" composition. In
     * production this is the labels TABLE the clustering job writes and
@@ -1502,8 +1505,9 @@ object Dedup {
     * write. Output is byte-identical to each key deriving its own
     * labels (same pair graph, same fixed point), so every oracle hash
     * is unchanged — only the redundant recomputation is gone. */
-  private def ngramClusterLabels(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"ngram-cc-labels:$dir") {
+  private def ngramClusterLabels(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.docsFp(s, dir)
+    Artifacts.cached(s, s"ngram-cc-labels:$dir", fp) {
       // The labels PERSIST through the warehouse lifecycle (round 16):
       // the clustering job writes once, every later process — not just
       // every later key in one session — reads the table back; a
@@ -1518,8 +1522,7 @@ object Dedup {
       // filter is a complete candidate rule at any global token
       // order), so settled pairs are growth-invariant unconditionally.
       graft.sources.Warehouse.servedFrameMerged(
-        s, "ngram_cc", dir, "documents",
-        graft.sources.Warehouse.docsFp(s, dir))(
+        s, "ngram_cc", dir, "documents", fp)(
         connectedComponents(
           ngramPairStore(s, dir).select(col("doc_a"), col("doc_b")))
       ) { (old, delta) =>
@@ -1528,6 +1531,7 @@ object Dedup {
           delta.select(col("doc_id"))))
       }
     }
+  }
 
   /** Build the shared labeling artifact NOW (Bench's explicit
     * artifact-build pass — the build is timed there as its own row so
@@ -1706,13 +1710,6 @@ object Dedup {
         count(lit(1)).as("n_occ"))
       .filter(col("df") >= minDf)
 
-  /** Per-(session, index-digest) broadcast cache for [[lineGate]]'s
-    * over-threshold path — the contaminationGate cache discipline
-    * (evict stopped sessions on every construction). */
-  private val lineGateBroadcasts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      org.apache.spark.broadcast.Broadcast[Set[String]]]()
-
   /** Spark-md5-identical JVM hex (lowercase) for the gate's UDF path. */
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -1733,16 +1730,15 @@ object Dedup {
     * conservative default; null-screening is the quality gate's job).
     * Batch/stream agnostic — the spec pins stream == batch rewrites. */
   def lineGate(stream: DataFrame, boilerKeys: Seq[String]): DataFrame = {
-    lineGateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
     val cleaned: Column =
       if (boilerKeys.size <= Curation.GateInlineMax) {
         val arr = lit(boilerKeys.toArray)
         array_join(filter(split(col("text"), "\n"),
           l => !array_contains(arr, md5(l))), "\n")
       } else {
-        val key = (stream.sparkSession, md5Hex(boilerKeys.sorted.mkString("\u0000")))
-        val bc = lineGateBroadcasts.computeIfAbsent(key,
-          _ => stream.sparkSession.sparkContext.broadcast(boilerKeys.toSet))
+        val bc = Curation.cachedGateBroadcast(stream.sparkSession,
+          "line:" + md5Hex(boilerKeys.sorted.mkString("\u0000")))(
+          boilerKeys.toSet)
         val cut = udf((t: String) =>
           t.split("\n", -1).filter(l => !bc.value.contains(md5Hex(l)))
             .mkString("\n"))
@@ -1761,12 +1757,6 @@ object Dedup {
     cdcChunks(corpus).groupBy("chunk_key")
       .agg(count(lit(1)).as("n")).filter(col("n") > 1)
       .select("chunk_key")
-
-  /** Session-cached broadcasts for [[cdcGate]]'s over-threshold path —
-    * the lineGate cache discipline. */
-  private val cdcGateBroadcasts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      org.apache.spark.broadcast.Broadcast[Set[Long]]]()
 
   /** JVM twin of the 60-bit md5 fold (`Tables.md5FoldSql`) for the
     * gate's UDF path — hex-identical to Spark's md5 on UTF-8 bytes. */
@@ -1805,7 +1795,6 @@ object Dedup {
     * `bytes.length != t.length` in the UDF), so the paths cannot
     * disagree and neither can crash. */
   def cdcGate(stream: DataFrame, dupKeys: Seq[Long]): DataFrame = {
-    cdcGateBroadcasts.keySet.removeIf(_._1.sparkContext.isStopped)
     if (dupKeys.isEmpty) return stream
     val keep: Column =
       if (dupKeys.size <= Curation.GateInlineMax) {
@@ -1823,10 +1812,8 @@ object Dedup {
             0L, (acc, c) -> acc + (c.fin - c.st + 1)) * 2
           <= length(text)""")
       } else {
-        val key = (stream.sparkSession,
-          md5Hex(dupKeys.sorted.mkString(",")))
-        val bc = cdcGateBroadcasts.computeIfAbsent(key,
-          _ => stream.sparkSession.sparkContext.broadcast(dupKeys.toSet))
+        val bc = Curation.cachedGateBroadcast(stream.sparkSession,
+          "cdc:" + md5Hex(dupKeys.sorted.mkString(",")))(dupKeys.toSet)
         val ok = udf((t: String) => if (t == null) true else {
           val bytes = t.getBytes("UTF-8")
           if (bytes.length != t.length) true // non-ASCII: pass (see doc)
@@ -2042,8 +2029,7 @@ object Dedup {
       // text, as ingest would. max(doc_id) rides the memoized corpus
       // stats pass.
       val docs = Tables.documents(s, dir)
-      val cut = graft.sources.Warehouse.countMax(
-        s, s"docs:$dir", docs, "doc_id")._2 * 4 / 5
+      val cut = graft.sources.Warehouse.docsStats(s, dir)._2 * 4 / 5
       val index = cdcChunkStore(s, dir).filter(col("doc_id") < cut)
         .select("chunk_key").distinct()
       cdcDedupBatch(docs.filter(col("doc_id") >= cut), index)
@@ -2255,8 +2241,7 @@ object Dedup {
       // corpus with NULL-text fr rows the store undercounts and the
       // derived width could flip at a block boundary while the
       // oracle's stays put (round-18 advice).
-      val n = graft.sources.Warehouse.countMax(
-        s, s"docs-fr:$dir",
+      val n = graft.sources.Warehouse.countMax(s, "docs-fr", dir, "documents",
         Tables.documents(s, dir).filter(col("lang") === "fr"), "doc_id")._1
       simhashPairsFrom(simhashSketchStore(s, dir),
         chunks = SimhashBits / deriveSimhashWidth(n))

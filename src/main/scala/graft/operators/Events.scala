@@ -982,11 +982,13 @@ object Events {
     * distribution view every key reads. Deterministic (integer day/gap
     * math over a total order) ⟹ reuse == rebuild; WarehouseSpec pins
     * merged ≡ cold bit for bit and the late-delta decline. */
-  private def transStoreFull(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"ev-trans:$dir")(
+  private def transStoreFull(s: SparkSession, dir: String): DataFrame = {
+    val fp = eventsFp(s, dir)
+    Artifacts.cached(s, s"ev-trans:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "ev_trans", dir, "events", eventsFp(s, dir))(
+        s, "ev_trans", dir, "events", fp)(
         transStore(Tables.events(s, dir)))(transStoreMerged))
+  }
 
   /** The transition-DISTRIBUTION view of [[transStoreFull]] (round-18
     * shape, unchanged for consumers): the six transition/markov/dwell/
@@ -1029,11 +1031,13 @@ object Events {
     * all re-derived it per key; the store pays the distinct once per
     * corpus state, and per corpus APPEND only the [[userDaysMerged]]
     * delta distinct (round-19). */
-  private def userDayStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"ev-ud:$dir")(
+  private def userDayStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = eventsFp(s, dir)
+    Artifacts.cached(s, s"ev-ud:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "ev_user_days", dir, "events", eventsFp(s, dir))(
+        s, "ev_user_days", dir, "events", fp)(
         userDays(Tables.events(s, dir)))(userDaysMerged))
+  }
 
   /** Build both event stores NOW — Bench's explicit artifact-build
     * row (the warmClusterLabels accounting rule). */

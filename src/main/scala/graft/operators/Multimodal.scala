@@ -865,7 +865,7 @@ object Multimodal {
   private def phashSketchWithTwins(
       s: SparkSession, dir: String): (DataFrame, Int) = {
     val docs = Tables.documents(s, dir)
-    val n = graft.sources.Warehouse.countMax(s, s"docs:$dir", docs, "doc_id")._1
+    val n = graft.sources.Warehouse.docsStats(s, dir)._1
     // Sketch + twin re-key are both PER-DOC functions, so the store
     // joins the append-merge lane (round-18): a corpus-growth step
     // decodes ONLY the new part files' payloads — the whole point of a
@@ -882,9 +882,10 @@ object Multimodal {
         .select((col("doc_id") + PhashPlantBase).as("doc_id"),
           col("phash")))
     }
-    val sk = Artifacts.cached(s, s"phash-sketch:$dir")(
+    val fp = docsFp(s, dir)
+    val sk = Artifacts.cached(s, s"phash-sketch:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_sketch", dir, "documents", docsFp(s, dir))(
+        s, "phash_sketch", dir, "documents", fp)(
         sketchOf(docs))(
         (old, batch) => Some(old.unionByName(sketchOf(batch)))))
     (sk, phashChunkWidth(n + PhashPlantCount))
@@ -1077,17 +1078,16 @@ object Multimodal {
   private def phashIvfArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val fp = docsFp(s, dir)
-    val cents = Artifacts.cached(s, s"phash-ivf-cents:$dir") {
+    val cents = Artifacts.cached(s, s"phash-ivf-cents:$dir", fp) {
       graft.sources.Warehouse.servedFrame(s, "phash_cents", dir, fp) {
         val (sk, _) = phashSketchWithTwins(s, dir)
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1 +
+        val n = graft.sources.Warehouse.docsStats(s, dir)._1 +
           PhashPlantCount
         phashIvfCells(sk, math.ceil(math.sqrt(n.toDouble)).toInt)
       }.localCheckpoint(true)
     }
     val table = graft.sources.Warehouse.tableName("phash_ivf", dir, fp)
-    val assigned = Artifacts.cached(s, s"phash-ivf-index:$dir") {
+    val assigned = Artifacts.cached(s, s"phash-ivf-index:$dir", fp) {
       graft.sources.Warehouse.servedTable(
         s, "phash_ivf", dir, fp,
         bucket = Some(("cell", PhashIdxBuckets))) { name =>
@@ -1269,8 +1269,7 @@ object Multimodal {
   private def phashIvfTrainedArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val fp = docsFp(s, dir)
-    val n = graft.sources.Warehouse.countMax(
-      s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+    val n = graft.sources.Warehouse.docsStats(s, dir)._1
     // RETRAIN CYCLE (round-20): the Similarity.trainedIndexArtifacts
     // convention mirrored into hamming space — the trained centroid
     // table records its trained-at count; a below-ratio growth step
@@ -1281,7 +1280,7 @@ object Multimodal {
     // current untrained chain and declines the merge (cold reassign).
     val centsTable = graft.sources.Warehouse.tableName(
       "phash_tr_cents", dir, fp)
-    val cents = Artifacts.cached(s, s"phash-ivf-trained-cents:$dir") {
+    val cents = Artifacts.cached(s, s"phash-ivf-trained-cents:$dir", fp) {
       val prior: Option[DataFrame] =
         if (graft.sources.Warehouse.variantComplete(s, centsTable)) None
         else graft.sources.Warehouse
@@ -1321,7 +1320,7 @@ object Multimodal {
     // rows record which training event assigned them; the merge lane
     // requires the recorded stamp to name the served cents.
     val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
-    val assigned = Artifacts.cached(s, s"phash-ivf-trained-idx:$dir") {
+    val assigned = Artifacts.cached(s, s"phash-ivf-trained-idx:$dir", fp) {
       graft.sources.Warehouse.servedFrameMerged(
         s, "phash_ivf_tr", dir, "documents", fp,
         bucket = Some(("cell", PhashIdxBuckets))) {
@@ -1386,14 +1385,15 @@ object Multimodal {
     * reference, plan-asserted). Cached so the two recall audits and
     * the quantizer policy pay ONE corpus pass between them instead of
     * three. */
-  private def phashBruteTruth(s: SparkSession, dir: String): DataFrame =
+  private def phashBruteTruth(s: SparkSession, dir: String): DataFrame = {
     // Persisted per corpus state (warehouse family `phash_truth`,
     // round-17 — the knnBruteTruth twin): the exact pass is the
     // expensive audit input at lake scale; a warm process reads
     // probes×k rows.
-    Artifacts.cached(s, s"phash-brute-truth:$dir")(
+    val fp = docsFp(s, dir)
+    Artifacts.cached(s, s"phash-brute-truth:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_truth", dir, "documents", docsFp(s, dir)) {
+        s, "phash_truth", dir, "documents", fp) {
         val (sk, _) = phashSketchWithTwins(s, dir)
         val probes = sk.filter(col("doc_id") < PhashProbeCount)
           .select(col("doc_id").as("probe_id"),
@@ -1424,6 +1424,7 @@ object Multimodal {
             (lit(PhashBits) - col("score")).cast("int").as("hamming"),
             col("rk")))
       }.localCheckpoint(true))
+  }
 
   /** AUDIT-DRIVEN QUANTIZER SELECTION — the serving policy: compare
     * the two quantizers' recall audits against the shared brute truth
@@ -1468,10 +1469,11 @@ object Multimodal {
     * reads the one-row table and touches neither quantizer's
     * artifacts (Artifacts.cached is re-entrant by design; the old
     * hoisting convention predated that guarantee). */
-  private def phashIvfPolicyQuery(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"phash-ivf-policy:$dir")(
+  private def phashIvfPolicyQuery(s: SparkSession, dir: String): DataFrame = {
+    val fp = docsFp(s, dir)
+    Artifacts.cached(s, s"phash-ivf-policy:$dir", fp)(
       graft.sources.Warehouse.servedFrame(
-        s, "phash_policy", dir, docsFp(s, dir)) {
+        s, "phash_policy", dir, fp) {
         val truth = phashBruteTruth(s, dir)
         val (cents, assigned) = phashIvfArtifacts(s, dir)
         val (tc, ta) = phashIvfTrainedArtifacts(s, dir)
@@ -1479,6 +1481,7 @@ object Multimodal {
         val trained = phashIvfServe(ta, tc, PhashProbeCount, PhashTopK)
         phashIvfPolicy(truth, firstK, trained)
       }.localCheckpoint(true))
+  }
 
   /** The policy's selection, as the serving switch reads it. */
   def phashIvfSelectedQuantizer(s: SparkSession, dir: String): String =
@@ -1498,8 +1501,9 @@ object Multimodal {
   /** ONE image-CC labeling per (session, dir), like the text family's
     * ngram labels — connectedComponents materializes internally, so
     * the cached frame is already checkpointed. */
-  private def phashClusterLabels(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"phash-cc-labels:$dir") {
+  private def phashClusterLabels(s: SparkSession, dir: String): DataFrame = {
+    val fp = docsFp(s, dir)
+    Artifacts.cached(s, s"phash-cc-labels:$dir", fp) {
       // Warehouse lifecycle (the ngramClusterLabels rule): a hit skips
       // the corpus decode AND the CC fixed point; deterministic builds
       // make reuse == rebuild.
@@ -1510,12 +1514,11 @@ object Multimodal {
       // width-dependent, so settled pairs are growth-invariant only
       // while the derived width holds (the sketch-twin convention).
       graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_cc", dir, "documents", docsFp(s, dir))(
+        s, "phash_cc", dir, "documents", fp)(
         Dedup.connectedComponents(
           phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")))
       ) { (old, delta) =>
-        val n = graft.sources.Warehouse.countMax(
-          s, s"docs:$dir", Tables.documents(s, dir), "doc_id")._1
+        val n = graft.sources.Warehouse.docsStats(s, dir)._1
         val deltaIds = delta.select(col("doc_id"))
         if (phashWidthCrossed(n, deltaIds.count())) None
         else Some(Dedup.ccLabelsMerged(old,
@@ -1523,6 +1526,7 @@ object Multimodal {
           deltaIds))
       }
     }
+  }
 
   /** Build the shared image-CC labeling NOW (Bench's explicit
     * artifact-build pass — same accounting rule as the text family's

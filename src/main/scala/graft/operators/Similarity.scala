@@ -217,11 +217,11 @@ object Similarity {
     * corpus-size-derived, so a growth step that crosses a
     * [[derivePlanes]] block boundary DECLINES and rebuilds cold (the
     * emb_pairs convention — old rows hash under the wrong planes). */
-  def lshBucketStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"lshb:$dir")(
+  def lshBucketStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"lshb:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "lsh_buckets", dir, "embeddings",
-        graft.sources.Warehouse.embFp(s, dir)) {
+        s, "lsh_buckets", dir, "embeddings", fp) {
         val n = embCount(s, dir)
         bucketed(Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v")), derivePlanes(n))
@@ -232,6 +232,7 @@ object Similarity {
           batch.select(col("vec_id"), expr(quant).as("v")),
           derivePlanes(n))))
       })
+  }
 
   /** Build the LSH bucket index NOW — Bench's explicit artifact-build
     * row (the warmClusterLabels accounting rule). */
@@ -472,16 +473,15 @@ object Similarity {
     cents
   }
 
-  /** The embeddings row count through the session-cached stats pass
-    * (round-22, guide §1.2 serving overhead): ~15 registered keys each
-    * paid their own count() job for the same knob derivation — the
-    * fingerprint machinery already memoizes (count, max) under this
-    * exact token, so every key now shares ONE stats job per session.
+  /** The embeddings row count through the snapshot-memoized stats
+    * pass (round-22, guide §1.2 serving overhead): ~15 registered keys
+    * each paid their own count() job for the same knob derivation —
+    * the fingerprint machinery already memoizes (count, max) per corpus
+    * snapshot, so every key now shares ONE stats job per corpus state.
     * Same number by construction (a projection does not change the
     * row count). */
   private[operators] def embCount(s: SparkSession, dir: String): Long =
-    graft.sources.Warehouse.countMax(
-      s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+    graft.sources.Warehouse.embStats(s, dir)._1
 
   /** Nearest-centroid cell assignment as a partial-aggregating max_by:
     * the broadcast join emits all K candidate rows for a vector inside
@@ -813,21 +813,19 @@ object Similarity {
     * step DECLINES and re-encodes cold (old codes index the wrong
     * codebook — the lsh_buckets convention, predicate
     * [[pqCodesBlockCrossed]]). */
-  def pqCodeStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"pqcodes:$dir")(
+  def pqCodeStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"pqcodes:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "pq_codes", dir, "embeddings",
-        graft.sources.Warehouse.embFp(s, dir)) {
+        s, "pq_codes", dir, "embeddings", fp) {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = embCount(s, dir)
         pqEncodeWith(e, pqCodebook(e, derivePqCodes(n)))
       } { (old, batch) =>
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = embCount(s, dir)
         // First-K append-invariance needs the batch to sit entirely
         // PAST the codebook prefix: an appended file carrying a
         // vec_id < K changes the codebook while the K step check
@@ -839,6 +837,7 @@ object Similarity {
           batch.select(col("vec_id"), expr(quant).as("v")),
           pqCodebook(e, derivePqCodes(n)))))
       })
+  }
 
   /** Build the PQ code store NOW — Bench's explicit artifact-build row
     * (the warmLshBuckets accounting rule). */
@@ -891,15 +890,14 @@ object Similarity {
     * so every stored code indexes a stale table (the pq_codes
     * convention, predicate [[resCodesBlockCrossed]] plus the min
     * vec_id prefix guard). */
-  def resCodeStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"rescodes:$dir")(
+  def resCodeStore(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"rescodes:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "res_codes", dir, "embeddings",
-        graft.sources.Warehouse.embFp(s, dir)) {
+        s, "res_codes", dir, "embeddings", fp) {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = embCount(s, dir)
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val centroids = e.filter(col("vec_id") < kk)
           .select(col("vec_id").as("cid"), col("v").as("c"))
@@ -908,8 +906,7 @@ object Similarity {
       } { (old, batch) =>
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", e, "vec_id")._1
+        val n = embCount(s, dir)
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val kc = derivePqCodes(n)
         if (resCodesBlockCrossed(n, batch.count()) ||
@@ -923,6 +920,7 @@ object Similarity {
             centroids, residualCodebook(e, centroids, kc))))
         }
       })
+  }
 
   /** Build the residual-code store NOW — Bench's explicit
     * artifact-build row (the warmPqCodes accounting rule). The
@@ -942,11 +940,12 @@ object Similarity {
     * kk-row prefix scan per resolution. Materialized once (a kk-row
     * frame), forced in [[warmResCodes]]'s timed row. Same rows by
     * construction — the memo only moves the derivation, never the
-    * arithmetic. Memo key is (session, dir), the pqCodeStore
-    * convention; the frames re-derive per session, so a corpus mutated
-    * between sessions can never serve stale centroids. */
-  private def resCentroidsArtifact(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"res-cents:$dir") {
+    * arithmetic. The memo carries the embeddings fingerprint (the
+    * pqCodeStore convention), so a mutated corpus can never serve
+    * stale centroids. */
+  private def resCentroidsArtifact(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"res-cents:$dir", fp) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
       val kk = math.ceil(math.sqrt(embCount(s, dir).toDouble)).toInt
@@ -954,6 +953,7 @@ object Similarity {
         .select(col("vec_id").as("cid"), col("v").as("c"))
         .localCheckpoint(true)
     }
+  }
 
   /** Session-memoized residual PQ codebook at the derived code count —
     * the kCodes-row twin of [[resCentroidsArtifact]] (VERDICT item 6:
@@ -961,13 +961,15 @@ object Similarity {
     * session memo rather than a parquet table, because the frame is
     * ≤256 rows and a table read would cost more than the derivation —
     * the consolidation win is not re-planning it per key). */
-  private def resCodebookArtifact(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"res-codebook:$dir") {
+  private def resCodebookArtifact(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"res-codebook:$dir", fp) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
       residualCodebook(e, resCentroidsArtifact(s, dir),
         derivePqCodes(embCount(s, dir))).localCheckpoint(true)
     }
+  }
 
   /** Store-fed residual IVF-PQ chain at the corpus's derived
     * parameters — the shared form of the registered keys, the tier
@@ -976,7 +978,7 @@ object Similarity {
     * frames off the session memos (round-22), so a resolution pays the
     * probe side only. Same arithmetic, same hashes. */
   private def ivfPqResTopKServed(s: SparkSession, dir: String, e: DataFrame,
-                                 n: Long, nProbes: Int, k: Int): DataFrame =
+                                 nProbes: Int, k: Int): DataFrame =
     searchIvfPqResidualIndex(resCodeStore(s, dir), e,
       resCentroidsArtifact(s, dir), resCodebookArtifact(s, dir), nProbes, k)
 
@@ -986,12 +988,14 @@ object Similarity {
   /** Session-memoized flat-PQ codebook at the derived code count — the
     * [[resCodebookArtifact]] twin for the flat tier; forced in
     * [[warmPqCodes]]'s timed row. */
-  private def pqCodebookArtifact(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"pq-codebook:$dir") {
+  private def pqCodebookArtifact(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    Artifacts.cached(s, s"pq-codebook:$dir", fp) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
       pqCodebook(e, derivePqCodes(embCount(s, dir))).localCheckpoint(true)
     }
+  }
 
   /** Store-fed flat-PQ chain at the corpus's derived code count — the
     * shared form of every policy-audit and routed-serving site
@@ -1001,7 +1005,7 @@ object Similarity {
     * build row — the chain's dominant term at ×10). Same arithmetic,
     * same hashes. */
   private def pqTopKServed(s: SparkSession, dir: String, e: DataFrame,
-                           n: Long, nProbes: Int, k: Int): DataFrame =
+                           nProbes: Int, k: Int): DataFrame =
     pqTopKFromCodes(pqCodeStore(s, dir), e,
       pqCodebookArtifact(s, dir), nProbes, k)
 
@@ -1275,8 +1279,7 @@ object Similarity {
     // GC of stale variants, and the reuse-vs-rebuild decision all live
     // in [[graft.sources.Warehouse]]. count is also Lloyd's K input,
     // so the stats pass is paid once for both purposes.
-    val (n, _) = graft.sources.Warehouse.countMax(
-      s, s"emb:$dir", e, "vec_id")
+    val (n, _) = graft.sources.Warehouse.embStats(s, dir)
     val fp = graft.sources.Warehouse.embFp(s, dir)
     val kk = math.ceil(math.sqrt(n.toDouble)).toInt
     // Lloyd training is the expensive half of the build: persist the
@@ -1305,7 +1308,8 @@ object Similarity {
     // engages only on append-grown directory corpora (its recall drift
     // is what the recall-audit keys measure, by design).
     val centsTable = graft.sources.Warehouse.tableName("ivf_cents", dir, fp)
-    val cents = graft.operators.Artifacts.cached(s, s"ivf-trained-cents:$dir") {
+    val cents = graft.operators.Artifacts.cached(
+      s, s"ivf-trained-cents:$dir", fp) {
       val priorCents: Option[DataFrame] =
         if (graft.sources.Warehouse.variantComplete(s, centsTable)) None
         else graft.sources.Warehouse
@@ -1351,7 +1355,7 @@ object Similarity {
     // before the index published) and must never be merge-grown.
     val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
     val table = graft.sources.Warehouse.tableName("ivf_trained", dir, fp)
-    graft.operators.Artifacts.cached(s, s"ivf-trained-idx:$dir") {
+    graft.operators.Artifacts.cached(s, s"ivf-trained-idx:$dir", fp) {
       graft.sources.Warehouse.servedFrameMerged(
         s, "ivf_trained", dir, "embeddings", fp,
         bucket = Some(("cell", TrainedIdxBuckets))) {
@@ -1702,15 +1706,13 @@ object Similarity {
     // Deterministic quantizers ⟹ store ≡ inline ⟹ hashes unchanged.
     "q_knn_ivfpq_res" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-      val n = graft.sources.Warehouse.countMax(s, s"emb:$dir", e, "vec_id")._1
-      ivfPqResTopKServed(s, dir, e, n, 8, 5)
+      ivfPqResTopKServed(s, dir, e, 8, 5)
     }),
 
     "q_knn_ivfpq_res_recall" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-      val n = graft.sources.Warehouse.countMax(s, s"emb:$dir", e, "vec_id")._1
       val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-      recallVs(truth, ivfPqResTopKServed(s, dir, e, n, 64, 5))
+      recallVs(truth, ivfPqResTopKServed(s, dir, e, 64, 5))
     }),
 
     // PQ-compressed ANN + its recall audit: deterministic codebooks, so
@@ -1907,11 +1909,11 @@ object Similarity {
     * generation and ships to every evaluation job (the round-16
     * verdict's top ask). Deterministic (quantized dots, fixed tie
     * rule) ⟹ reuse == rebuild bit for bit. */
-  private def knnBruteTruth(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.cached(s, s"knn-brute-truth:$dir")(
+  private def knnBruteTruth(s: SparkSession, dir: String): DataFrame = {
+    val fp = graft.sources.Warehouse.embFp(s, dir)
+    graft.operators.Artifacts.cached(s, s"knn-brute-truth:$dir", fp)(
       graft.sources.Warehouse.servedFrameMerged(
-        s, "knn_truth", dir, "embeddings",
-        graft.sources.Warehouse.embFp(s, dir))(
+        s, "knn_truth", dir, "embeddings", fp)(
         brute(s, dir, 64, 5)) { (old, deltaRaw) =>
         // APPEND-MERGE (round-19): top-k under the TOTAL (dot DESC,
         // cand ASC) tie rule is re-rankable — top5(full) ≡
@@ -1932,6 +1934,7 @@ object Similarity {
           old.select("probe_id", "cand_id", "dot").unionByName(deltaScored),
           "probe_id", "dot", "cand_id", 5).orderBy("probe_id", "rk"))
       }.localCheckpoint(true))
+  }
 
   /** ONE policy decision per CORPUS STATE for the EMBEDDING IVF
     * family — the audit convention's 64 probes, k = 5: brute truth vs
@@ -1944,10 +1947,9 @@ object Similarity {
     * on a hit). */
   private def knnIvfPolicyQuery(s: SparkSession, dir: String): DataFrame = {
     val fp = graft.sources.Warehouse.embFp(s, dir)
-    graft.operators.Artifacts.cached(s, s"knn-ivf-policy:$dir")(
+    graft.operators.Artifacts.cached(s, s"knn-ivf-policy:$dir", fp)(
       graft.sources.Warehouse.servedFrame(s, "knn_policy", dir, fp) {
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+        val n = embCount(s, dir)
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
         val firstK = ivfTopK(s, dir, kk, 64, 5).select("probe_id", "cand_id")
@@ -2024,10 +2026,9 @@ object Similarity {
     * decision re-derives from them per call (cheap). */
   private def knnTierRows(s: SparkSession, dir: String): DataFrame = {
     val fp = graft.sources.Warehouse.embFp(s, dir)
-    graft.operators.Artifacts.cached(s, s"knn-tier-policy:$dir")(
+    graft.operators.Artifacts.cached(s, s"knn-tier-policy:$dir", fp)(
       graft.sources.Warehouse.servedFrame(s, "knn_tier_rows", dir, fp) {
-        val n = graft.sources.Warehouse.countMax(
-          s, s"emb:$dir", Tables.embeddings(s, dir), "vec_id")._1
+        val n = embCount(s, dir)
         val kk = math.ceil(math.sqrt(n.toDouble)).toInt
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(quant).as("v"))
@@ -2035,9 +2036,9 @@ object Similarity {
         Seq(
           ("ivf_flat", 512L, ivfTopK(s, dir, kk, 64, 5)
             .select("probe_id", "cand_id")),
-          ("pq", 8L, pqTopKServed(s, dir, e, n, 64, 5)
+          ("pq", 8L, pqTopKServed(s, dir, e, 64, 5)
             .select("probe_id", "cand_id")),
-          ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, n, 64, 5)
+          ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, 64, 5)
             .select("probe_id", "cand_id")))
           .map { case (name, bytes, apx) =>
             truth.join(broadcast(apx.select(col("probe_id"), col("cand_id"),
@@ -2075,10 +2076,10 @@ object Similarity {
     val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
     val served = knnSelectedTier(s, dir) match {
       case "pq" =>
-        pqTopKServed(s, dir, e, n, nProbes, k)
+        pqTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case "ivfpq_res" =>
-        ivfPqResTopKServed(s, dir, e, n, nProbes, k)
+        ivfPqResTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case _ =>
         ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")
@@ -2125,7 +2126,7 @@ object Similarity {
     val base = knnTierRows(s, dir)
     val fp = graft.sources.Warehouse.embFp(s, dir)
     val trainedRow = graft.operators.Artifacts.cached(
-      s, s"knn-quant-trained-row:$dir")(
+      s, s"knn-quant-trained-row:$dir", fp)(
       graft.sources.Warehouse.servedFrame(s, "knn_quant_row", dir, fp) {
         val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
         val trained = ivfTrainedServe(s, dir, 64, 5)
@@ -2162,17 +2163,16 @@ object Similarity {
     // already paid — no fresh count() job on the routed serve (the
     // trained arm needs neither n nor e at all).
     val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-    lazy val n = graft.sources.Warehouse.countMax(
-      s, s"emb:$dir", e, "vec_id")._1
+    lazy val n = embCount(s, dir)
     lazy val kk = math.ceil(math.sqrt(n.toDouble)).toInt
     val served = knnSelectedQuant(s, dir) match {
       case "ivf_trained" =>
         ivfTrainedServe(s, dir, nProbes, k).withColumnRenamed("dot", "score")
       case "pq" =>
-        pqTopKServed(s, dir, e, n, nProbes, k)
+        pqTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case "ivfpq_res" =>
-        ivfPqResTopKServed(s, dir, e, n, nProbes, k)
+        ivfPqResTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
       case _ =>
         ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")

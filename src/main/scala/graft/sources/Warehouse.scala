@@ -58,17 +58,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A final directory therefore either does not exist or is complete —
   * readers never observe a torn write.
   *
+  * CORPUS SNAPSHOT. One snapshot per (dir, table): a digest of the
+  * [[corpusFiles]] listing (name, length, mtime), the witness the merge
+  * lane already trusts. Corpus stats ([[countMax]]) memoize per
+  * snapshot for the whole process, and operators.Artifacts memoizes
+  * per (session, name, fingerprint) — the token the table name
+  * carries. A corpus that grows or is rewritten under a live session
+  * therefore moves both memos with it: fingerprint and data-derived
+  * knob always come from the same listing, in any session.
+  *
   * CONTRACTS AND SCOPE (round-16 review):
   *
-  *  - WITHIN-SESSION corpus immutability. Mutation detection is a
-  *    CROSS-PROCESS property: the session memoizes its corpus stats
-  *    ([[countMax]]) and artifact frames (operators.Artifacts,
-  *    funnelCache) on first touch, so a corpus regenerated UNDER a
-  *    live session keeps serving the first-seen state — the
-  *    engine-wide assumption every session cache has always made. A
-  *    pipeline that regenerates a corpus starts a new process (or at
-  *    minimum a new SparkSession) over it; the fingerprint then
-  *    refuses every stale table.
   *  - The corrupt-directory guard covers RESOLUTION-time failures
   *    (unreadable footers, schema/DDL errors → rebuild). Data-page
   *    corruption that passes footer reads surfaces at query time, as
@@ -116,54 +116,87 @@ object Warehouse {
     java.security.MessageDigest.getInstance("MD5")
       .digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** (count, max id) of a corpus frame, memoized per (session, token)
-    * so the several artifacts of one family pay the stats pass once. */
-  private val countMaxCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long)]()
+  /** The session warehouse root and its filesystem. */
+  private def root(s: SparkSession)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
+    val whRoot = new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir"))
+    (whRoot, whRoot.getFileSystem(s.sparkContext.hadoopConfiguration))
+  }
 
-  def countMax(s: SparkSession, token: String, df: => DataFrame,
-               idCol: String): (Long, Long) = {
-    countMaxCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    var v = countMaxCache.get((s, token))
-    if (v == null) {
+  /** The UTF-8 text of a small metadata file. */
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+                       p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** Snapshot digest of `$dir/$table.parquet`: the canonical dir, the
+    * table and its [[corpusFiles]] listing — filesystem metadata only,
+    * no data scan. Two listings that differ in any file's name, length
+    * or mtime are two snapshots. */
+  private def snapshot(s: SparkSession, dir: String, table: String): String =
+    md5Hex((Seq(dirDigest(dir), table) ++
+      corpusFiles(s, dir, table).toSeq.sorted.map { case (n, (l, m)) =>
+        s"$n\t$l\t$m" }).mkString("\n"))
+
+  /** (token, snapshot) → (count, max id), process-wide. */
+  private val stats =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+
+  /** (count, max id) of `df`, a frame over `$dir/$table.parquet`,
+    * memoized on (stat token, [[snapshot]]) for the whole process, so
+    * the several artifacts of one corpus state pay the stats pass once
+    * and a grown corpus is recounted in any session. If the listing
+    * moves while the count runs, the result is returned but not
+    * memoized (the [[servedFrameMerged]] re-verify rule). */
+  def countMax(s: SparkSession, token: String, dir: String, table: String,
+               df: => DataFrame, idCol: String): (Long, Long) = {
+    val snap = snapshot(s, dir, table)
+    val hit = stats.get(s"$token@$snap")
+    if (hit != null) hit
+    else {
       val r = df.agg(
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("n"),
         org.apache.spark.sql.functions.max(
           org.apache.spark.sql.functions.col(idCol)).as("mx")).head()
-      v = (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-      countMaxCache.putIfAbsent((s, token), v)
+      val v = (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+      if (snapshot(s, dir, table) == snap) stats.putIfAbsent(s"$token@$snap", v)
+      v
     }
-    v
   }
 
-  /** Fingerprint token of one of a dir's tables — count + max id
-    * (memoized per session via [[countMax]], token keyed on the table)
-    * + the on-disk byte size: the corpus-state stamp every persisted
-    * artifact keys on. [[docsFp]]/[[embFp]]/[[eventsFp]] are the
-    * per-table spellings. */
-  def tableFp(s: SparkSession, dir: String, table: String, token: String,
-              df: => DataFrame, idCol: String): String = {
-    val (n, mx) = countMax(s, s"$token:$dir", df, idCol)
-    fpToken(n, mx, corpusBytes(s, dir, table))
-  }
+  /** (count, max doc_id) of a dir's documents table. */
+  def docsStats(s: SparkSession, dir: String): (Long, Long) =
+    countMax(s, "docs", dir, "documents", graft.Tables.documents(s, dir),
+      "doc_id")
 
-  /** Fingerprint token of a dir's DOCUMENTS table. The `docs:` stats
-    * token is shared with every other documents countMax caller — one
-    * stats pass per session, whoever asks first. */
-  def docsFp(s: SparkSession, dir: String): String =
-    tableFp(s, dir, "documents", "docs",
-      graft.Tables.documents(s, dir), "doc_id")
+  /** (count, max vec_id) of a dir's embeddings table. */
+  def embStats(s: SparkSession, dir: String): (Long, Long) =
+    countMax(s, "emb", dir, "embeddings", graft.Tables.embeddings(s, dir),
+      "vec_id")
+
+  /** Fingerprint token of a dir's DOCUMENTS table — count + max id
+    * ([[docsStats]]) + the on-disk byte size: the corpus-state stamp
+    * every persisted artifact keys on. */
+  def docsFp(s: SparkSession, dir: String): String = {
+    val (n, mx) = docsStats(s, dir)
+    fpToken(n, mx, corpusBytes(s, dir, "documents"))
+  }
 
   /** The embeddings-table twin of [[docsFp]]. */
-  def embFp(s: SparkSession, dir: String): String =
-    tableFp(s, dir, "embeddings", "emb",
-      graft.Tables.embeddings(s, dir), "vec_id")
+  def embFp(s: SparkSession, dir: String): String = {
+    val (n, mx) = embStats(s, dir)
+    fpToken(n, mx, corpusBytes(s, dir, "embeddings"))
+  }
 
   /** The events-table twin of [[docsFp]]. */
-  def eventsFp(s: SparkSession, dir: String): String =
-    tableFp(s, dir, "events", "events",
+  def eventsFp(s: SparkSession, dir: String): String = {
+    val (n, mx) = countMax(s, "events", dir, "events",
       graft.Tables.events(s, dir), "event_id")
+    fpToken(n, mx, corpusBytes(s, dir, "events"))
+  }
 
   /** Fold two fingerprint tokens into one — for artifacts derived
     * from MORE THAN ONE input table (the funnel's semantic stage
@@ -187,48 +220,56 @@ object Warehouse {
     else if (hits.values.exists(identity)) "partial"
     else "miss"
 
-  /** Hit/miss log per (session, family) since the last drain — the
-    * Bench self-labeling feed. */
+  /** Record `v` for (family, corpus) in a per-session log ([[hitLog]],
+    * [[laneLog]]). */
+  private def record[V](log: java.util.concurrent.ConcurrentHashMap[
+                          SparkSession,
+                          java.util.concurrent.ConcurrentHashMap[String, V]],
+                        s: SparkSession, family: String, dir: String,
+                        v: V): Unit = {
+    // Stopped-session eviction: a long-lived JVM cycling sessions that
+    // resolve tables without ever draining (any non-Bench caller) must
+    // not leak one map per dead session.
+    log.keySet.removeIf(_.sparkContext.isStopped)
+    log.computeIfAbsent(s,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, V]())
+      // Keyed (family, corpus digest): a window resolving one family
+      // for TWO corpora must not overwrite the first label (the
+      // whLabel the ledger adjudication reads would misreport).
+      .put(s"$family@${dirDigest(dir)}", v)
+    ()
+  }
+
+  /** The entries recorded for `s` since the last drain; clears the log,
+    * so consecutive drains attribute resolutions to the build window
+    * they happened in. */
+  private def drain[V](log: java.util.concurrent.ConcurrentHashMap[
+                         SparkSession,
+                         java.util.concurrent.ConcurrentHashMap[String, V]],
+                       s: SparkSession): Map[String, V] = {
+    val m = log.remove(s)
+    if (m == null) Map.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      m.asScala.toMap
+    }
+  }
+
+  /** Hit/miss log — the Bench self-labeling feed. */
   private val hitLog = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, java.util.concurrent.ConcurrentHashMap[String, Boolean]]()
 
   private def logHit(s: SparkSession, family: String, dir: String,
-                     hit: Boolean): Unit = {
-    // Stopped-session eviction (the countMaxCache discipline): a
-    // long-lived JVM cycling sessions that resolve tables without ever
-    // draining (any non-Bench caller) must not leak one map per dead
-    // session.
-    hitLog.keySet.removeIf(_.sparkContext.isStopped)
-    hitLog.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, Boolean]())
-      // Keyed (family, corpus digest): a window resolving one family
-      // for TWO corpora must not overwrite the first label (the
-      // whLabel the ledger adjudication reads would misreport).
-      .put(s"$family@${dirDigest(dir)}", hit)
-    ()
-  }
+                     hit: Boolean): Unit = record(hitLog, s, family, dir, hit)
 
   /** (family@corpus-digest) → hit entries recorded for `s` since the
-    * last call; clears
-    * the log, so consecutive drains attribute resolutions to the build
-    * window they happened in. */
-  def drainHits(s: SparkSession): Map[String, Boolean] = {
-    val m = hitLog.remove(s)
-    if (m == null) Map.empty
-    else {
-      val it = m.entrySet().iterator()
-      val b = Map.newBuilder[String, Boolean]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.result()
-    }
-  }
+    * last call ([[drain]]). */
+  def drainHits(s: SparkSession): Map[String, Boolean] = drain(hitLog, s)
 
   /** TRUE iff the named variant is already complete on disk (a
     * `_SUCCESS`-marked directory under the session warehouse). */
   def variantComplete(s: SparkSession, name: String): Boolean = {
-    val whRoot = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (whRoot, fs) = root(s)
     fs.exists(new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(whRoot, name), "_SUCCESS"))
   }
@@ -243,19 +284,27 @@ object Warehouse {
     * keeps — localCheckpoint — because resolution GCs the files). */
   def newestVariant(s: SparkSession, family: String, dir: String,
                     excluding: String): Option[(String, String)] = {
-    val whRoot = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (whRoot, fs) = root(s)
+    completeVariants(fs, whRoot, family, dir, excluding).headOption
+      .map(st => (st.getPath.getName, st.getPath.toString))
+  }
+
+  /** Complete (`_SUCCESS`-marked, non-staging) variants of (family,
+    * dir) other than `excluding`, newest first. */
+  private def completeVariants(fs: org.apache.hadoop.fs.FileSystem,
+                               whRoot: org.apache.hadoop.fs.Path,
+                               family: String, dir: String,
+                               excluding: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val prefix = s"graft_${family}_${dirDigest(dir)}_"
-    if (!fs.exists(whRoot)) None
+    if (!fs.exists(whRoot)) Seq.empty
     else fs.listStatus(whRoot).toSeq
       .filter { st =>
         val n = st.getPath.getName
         n.startsWith(prefix) && n != excluding && !n.contains("_tmp_") &&
           fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
       }
-      .sortBy(-_.getModificationTime).headOption
-      .map(st => (st.getPath.getName, st.getPath.toString))
+      .sortBy(-_.getModificationTime)
   }
 
   /** (session, family@digest) → which [[servedFrameMerged]] lane the
@@ -270,26 +319,11 @@ object Warehouse {
     SparkSession, java.util.concurrent.ConcurrentHashMap[String, String]]()
 
   private def logLane(s: SparkSession, family: String, dir: String,
-                      lane: String): Unit = {
-    laneLog.keySet.removeIf(_.sparkContext.isStopped)
-    laneLog.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .put(s"$family@${dirDigest(dir)}", lane)
-    ()
-  }
+                      lane: String): Unit = record(laneLog, s, family, dir, lane)
 
   /** (family@corpus-digest) → lane entries recorded for `s` since the
-    * last call; clears the log (the [[drainHits]] discipline). */
-  def drainLanes(s: SparkSession): Map[String, String] = {
-    val m = laneLog.remove(s)
-    if (m == null) Map.empty
-    else {
-      val it = m.entrySet().iterator()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.result()
-    }
-  }
+    * last call ([[drain]]). */
+  def drainLanes(s: SparkSession): Map[String, String] = drain(laneLog, s)
 
   /** Builder ALGORITHM version per family — bump an entry when that
     * family's deterministic builder changes algorithm (Lloyd rounds,
@@ -396,13 +430,7 @@ object Warehouse {
     val p = new org.apache.hadoop.fs.Path(tableLoc, ManifestFile)
     if (!fs.exists(p)) None
     else try {
-      val in = fs.open(p)
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      in.close()
-      Some(new String(bytes.toByteArray, "UTF-8").split("\n")
+      Some(readText(fs, p).split("\n")
         .iterator.filter(_.nonEmpty).map { line =>
           val t = line.split("\t")
           t(0) -> (t(1).toLong, if (t.length > 2) t(2).toLong else -1L)
@@ -421,9 +449,7 @@ object Warehouse {
   def writeStoreManifest(s: SparkSession, dir: String, srcTable: String,
                          storeName: String,
                          listed: Map[String, (Long, Long)]): Unit = {
-    val whRoot = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (whRoot, fs) = root(s)
     val loc = new org.apache.hadoop.fs.Path(whRoot, storeName)
     if (fs.exists(loc) && corpusFiles(s, dir, srcTable) == listed)
       writeManifest(fs, loc, listed)
@@ -439,9 +465,7 @@ object Warehouse {
     * manifest (pre-round-21 tables) answer false — the safe lane. */
   def appendOnlyFrom(s: SparkSession, dir: String, srcTable: String,
                      storeName: String): Boolean = {
-    val whRoot = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (whRoot, fs) = root(s)
     readManifest(fs, new org.apache.hadoop.fs.Path(whRoot, storeName))
       .exists { m =>
         val files = m - ManifestVersionKey
@@ -520,13 +544,7 @@ object Warehouse {
     val p = new org.apache.hadoop.fs.Path(whRoot, DirRegistryFile)
     if (!fs.exists(p)) Map.empty
     else try {
-      val in = fs.open(p)
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      in.close()
-      new String(bytes.toByteArray, "UTF-8").split("\n").iterator
+      readText(fs, p).split("\n").iterator
         .filter(_.contains("\t")).map { line =>
           val t = line.split("\t"); t(0) -> t(1)
         }.toMap
@@ -560,9 +578,7 @@ object Warehouse {
                                   (build: String => Unit)
       : (String, Boolean) = {
     val name = tableNameAt(family, dir, fp, ver)
-    val whRoot = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (whRoot, fs) = root(s)
     recordDir(s, fs, whRoot, dir)
     // GC every other fingerprint variant of this (family, corpus):
     // those are indexes of corpus states that no longer exist — BUT
@@ -576,42 +592,8 @@ object Warehouse {
     val loc = new org.apache.hadoop.fs.Path(whRoot, name)
     val complete =
       fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))
-    // Register EXTERNAL at the final location with the writer's bucket
-    // spec, so plan-time bucket pruning works exactly as on the writing
-    // JVM (AnnIndexSpec pins SelectedBucketsCount through this path).
-    // IF NOT EXISTS: under a same-session writer race both finishers
-    // register; the second is a no-op, not a failure.
-    def register(): Unit = {
-      val schemaDdl = s.read.parquet(loc.toString).schema.toDDL
-      val bucketDdl = bucket.map { case (c, n) =>
-        s" CLUSTERED BY ($c) SORTED BY ($c) INTO $n BUCKETS" }.getOrElse("")
-      s.sql(s"CREATE TABLE IF NOT EXISTS $name ($schemaDdl)" +
-        s" USING PARQUET$bucketDdl LOCATION '${loc.toString}'")
-      ()
-    }
     def rebuild(): (String, Boolean) = {
-      // Miss: clear a registered-but-incomplete entry and any orphaned
-      // or corrupt directory, then build to a session-unique staging
-      // table and PUBLISH by atomic rename (header: MULTI-WRITER
-      // COMMIT). The final name never holds a torn write.
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
-      val tmpName = name + "_tmp_" +
-        java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      build(tmpName)
-      val tmpLoc = new org.apache.hadoop.fs.Path(whRoot, tmpName)
-      val won =
-        try fs.rename(tmpLoc, loc)
-        catch { case _: java.io.IOException => false }
-      // The staging CATALOG entry is transient either way. DROP of the
-      // managed tmp table also deletes its directory — exactly the
-      // loser's cleanup (the winner's directory already moved, so its
-      // drop touches only the catalog).
-      s.sql(s"DROP TABLE IF EXISTS $tmpName")
-      if (fs.exists(tmpLoc)) { fs.delete(tmpLoc, true); () }
-      // Rename loser: a concurrent writer published the same
-      // deterministic table first — serve theirs (reuse == rebuild).
-      register()
+      publish(s, fs, whRoot, name, bucket)(build)
       logHit(s, family, dir, hit = false); (name, false)
     }
     if (complete && s.catalog.tableExists(name)) {
@@ -626,10 +608,58 @@ object Warehouse {
       // can always re-produce the bytes (WarehouseSpec pins the
       // corrupt-directory case).
       try {
-        register()
+        register(s, name, loc, bucket)
         logHit(s, family, dir, hit = true); (name, true)
       } catch { case _: Exception => rebuild() }
     } else rebuild()
+  }
+
+  /** Register `name` EXTERNAL at its final location with the writer's
+    * bucket spec, so plan-time bucket pruning works exactly as on the
+    * writing JVM (AnnIndexSpec pins SelectedBucketsCount through this
+    * path). IF NOT EXISTS: under a same-session writer race both
+    * finishers register; the second is a no-op, not a failure. */
+  private def register(s: SparkSession, name: String,
+                       loc: org.apache.hadoop.fs.Path,
+                       bucket: Option[(String, Int)]): Unit = {
+    val schemaDdl = s.read.parquet(loc.toString).schema.toDDL
+    val bucketDdl = bucket.map { case (c, n) =>
+      s" CLUSTERED BY ($c) SORTED BY ($c) INTO $n BUCKETS" }.getOrElse("")
+    s.sql(s"CREATE TABLE IF NOT EXISTS $name ($schemaDdl)" +
+      s" USING PARQUET$bucketDdl LOCATION '${loc.toString}'")
+    ()
+  }
+
+  /** The ONE publish step of every lane (header: MULTI-WRITER COMMIT):
+    * clear a registered-but-incomplete entry and any orphaned or
+    * corrupt directory at `name`, run `build` into a session-unique
+    * `_tmp_` staging table, rename it onto the final name, drop the
+    * staging entry and bytes (the rename loser's cleanup — and a
+    * failed build's), then register the final table. A rename loser
+    * serves the concurrent winner's deterministic table (reuse ==
+    * rebuild). */
+  private def publish(s: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                      whRoot: org.apache.hadoop.fs.Path, name: String,
+                      bucket: Option[(String, Int)])
+                     (build: String => Unit): Unit = {
+    val loc = new org.apache.hadoop.fs.Path(whRoot, name)
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    if (fs.exists(loc)) { fs.delete(loc, true); () }
+    val tmpName = name + "_tmp_" +
+      java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val tmpLoc = new org.apache.hadoop.fs.Path(whRoot, tmpName)
+    try {
+      build(tmpName)
+      try { fs.rename(tmpLoc, loc); () }
+      catch { case _: java.io.IOException => () }
+    } finally {
+      // DROP of the managed tmp table also deletes its directory (the
+      // winner's directory already moved, so its drop touches only the
+      // catalog).
+      s.sql(s"DROP TABLE IF EXISTS $tmpName")
+      if (fs.exists(tmpLoc)) { fs.delete(tmpLoc, true); () }
+    }
+    register(s, name, loc, bucket)
   }
 
   /** Resolve-or-build an UNBUCKETED warehouse frame — [[servedTable]]
@@ -696,9 +726,7 @@ object Warehouse {
                        (merge: (DataFrame, DataFrame) => Option[DataFrame])
       : DataFrame = {
     val name = tableName(family, dir, fp)
-    val whRoot = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val (whRoot, fs) = root(s)
     val loc = new org.apache.hadoop.fs.Path(whRoot, name)
     val ver = BuilderVersion(family)
     val curFiles = corpusFiles(s, dir, srcTable)
@@ -742,16 +770,8 @@ object Warehouse {
     // candidate. A version-bumped process must not merge against a
     // pre-bump store (old-algorithm rows unioned under the bumped
     // name would be exactly the stale artifact the bump prevents).
-    val prefix = s"graft_${family}_${dirDigest(dir)}_"
     val prior: Option[(String, Map[String, (Long, Long)])] =
-      (if (fs.exists(whRoot)) fs.listStatus(whRoot).toSeq else Seq.empty)
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith(prefix) && n != name && !n.contains("_tmp_") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-        }
-        .sortBy(-_.getModificationTime)
-        .iterator
+      completeVariants(fs, whRoot, family, dir, excluding = name).iterator
         .flatMap(st => readManifest(fs, st.getPath)
           .map(m => st.getPath.getName -> m))
         .filter(_._2.get(ManifestVersionKey).map(_._1).contains(ver.toLong))
@@ -789,25 +809,8 @@ object Warehouse {
         // builder re-produces the same bytes; correctness never
         // depends on the merge surviving).
         recordDir(s, fs, whRoot, dir)
-        val tmpName = name + "_tmp_" +
-          java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-        val tmpLoc = new org.apache.hadoop.fs.Path(whRoot, tmpName)
         try {
-          s.sql(s"DROP TABLE IF EXISTS $name")
-          if (fs.exists(loc)) { fs.delete(loc, true); () }
-          buildWithManifest(frame)(tmpName)
-          try { fs.rename(tmpLoc, loc); () }
-          catch { case _: java.io.IOException => () }
-          s.sql(s"DROP TABLE IF EXISTS $tmpName")
-          if (fs.exists(tmpLoc)) { fs.delete(tmpLoc, true); () }
-          val schemaDdl = s.read.parquet(loc.toString).schema.toDDL
-          // Bucketed stores re-register with the writer's CLUSTERED BY
-          // spec (the servedTable register-back rule), so plan-time
-          // bucket pruning survives the merge lane too.
-          val bucketDdl = bucket.map { case (c, b) =>
-            s" CLUSTERED BY ($c) SORTED BY ($c) INTO $b BUCKETS" }.getOrElse("")
-          s.sql(s"CREATE TABLE IF NOT EXISTS $name ($schemaDdl)" +
-            s" USING PARQUET$bucketDdl LOCATION '${loc.toString}'")
+          publish(s, fs, whRoot, name, bucket)(buildWithManifest(frame))
           logHit(s, family, dir, hit = false)
           logLane(s, family, dir, "merge")
           gcStaleVariants(s, fs, whRoot, family, dir, keep = name)
@@ -816,11 +819,8 @@ object Warehouse {
           s.table(name)
         } catch {
           case e: Exception =>
-            // Clean this merge's own staging leftovers, then rebuild
-            // cold (or serve the racing winner's table — servedTable
-            // hits it if the race published under our name).
-            s.sql(s"DROP TABLE IF EXISTS $tmpName")
-            if (fs.exists(tmpLoc)) { fs.delete(tmpLoc, true); () }
+            // Rebuild cold (or serve the racing winner's table —
+            // servedTable hits it if the race published under our name).
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"merge lane for $name failed (${e.getMessage}); rebuilding cold")
             logLane(s, family, dir, "cold")

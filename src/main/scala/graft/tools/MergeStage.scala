@@ -4,31 +4,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch-corpus staging for merge-lane measurement — ONE definition
-  * shared by Bench's `merge_builds` rows and ProfMerge, so the
-  * per-round taxonomy signal and the SCALE.md economics table can
-  * never measure different growth shapes. The sf corpora ship as
-  * single parquet FILES (nothing can append to one — growth there is
-  * always a full-overwrite miss), so merge economics run on a scratch
-  * DIRECTORY copy grown by a ~5% batch landing as ONE appended part
-  * file: the production ingest shape `Warehouse.servedFrameMerged`
-  * exists for. */
+  * shared by Bench's `merge_builds` rows and MergeOracleStage, so the
+  * per-round taxonomy signal, the SCALE.md economics table and the
+  * oracle referee pass can never measure different growth shapes. The
+  * sf corpora ship as single parquet FILES (nothing can append to one —
+  * growth there is always a full-overwrite miss), so merge economics
+  * run on a scratch DIRECTORY copy grown by a small batch landing as
+  * ONE appended part file per table: the production ingest shape
+  * `Warehouse.servedFrameMerged` exists for. */
 object MergeStage {
 
   /** Copy `$src/$table.parquet` into `$dir` as a multi-part directory. */
   def stage(s: SparkSession, src: String, dir: String, table: String): Unit =
     s.read.parquet(s"$src/$table.parquet").coalesce(4)
       .write.mode("overwrite").parquet(s"$dir/$table.parquet")
-
-  /** Fingerprint of the scratch table's CURRENT state, computed fresh —
-    * `Warehouse.docsFp`/`eventsFp` memoize corpus stats per session and
-    * would serve the pre-append numbers after the append. */
-  def fpOf(s: SparkSession, dir: String, table: String, idCol: String)
-      : String = {
-    val r = s.read.parquet(s"$dir/$table.parquet")
-      .agg(count(lit(1)), max(col(idCol))).head()
-    graft.sources.Warehouse.fpToken(r.getLong(0), r.getLong(1),
-      graft.sources.Warehouse.corpusBytes(s, dir, table))
-  }
 
   /** Append a ~(100/stride)% batch as one new part file: id-shifted
     * copies of every stride-th row (default 20 → ~5%). Events rows also
@@ -72,6 +61,34 @@ object MergeStage {
       .foreach(f => java.nio.file.Files.move(f.toPath,
         java.nio.file.Paths.get(s"$dir/$table.parquet/${f.getName}")))
     n
+  }
+
+  /** Stage `src`'s documents/events/embeddings into `dir`, resolve
+    * every row at the base state, append one part file per table (~5%
+    * documents and events, ~2% embeddings — stride 50 keeps sf0.1's
+    * 2000 vectors inside their derivePlanes block, so the plane-knob
+    * lanes merge instead of declining), then resolve every row again.
+    * `window` wraps each resolution (the caller's meter). Returns, per
+    * row, the base window, the grown window and the lanes
+    * (family → hit/merge/cold) the grown resolution took. One session
+    * throughout: the corpus snapshot keys every memo, so the grown
+    * state is recounted without a fresh session. */
+  def acrossAppend[W](s: SparkSession, src: String, dir: String,
+                      rows: Seq[(String, (SparkSession, String) => Unit)])
+                     (window: (() => Unit) => W)
+      : Seq[(String, W, W, Map[String, String])] = {
+    Seq("documents", "events", "embeddings").foreach(stage(s, src, dir, _))
+    val base = rows.map { case (_, build) => window(() => build(s, dir)) }
+    append(s, dir, "documents", "doc_id")
+    append(s, dir, "events", "event_id")
+    append(s, dir, "embeddings", "vec_id", stride = 50)
+    graft.sources.Warehouse.drainLanes(s)
+    rows.zip(base).map { case ((name, build), w0) =>
+      val w1 = window(() => build(s, dir))
+      val lanes = graft.sources.Warehouse.drainLanes(s)
+        .map { case (k, v) => k.takeWhile(_ != '@') -> v }
+      (name, w0, w1, lanes)
+    }
   }
 
   /** Delete every warehouse table/variant keyed to the scratch dir's

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared harness for the dev profilers (ProfDedup, ProfCuration):
+/** Shared harness for the dev profilers and staging tools:
   * ONE session config and ONE timing helper, so profile numbers from
   * different families are always taken under identical settings. */
 object Prof {

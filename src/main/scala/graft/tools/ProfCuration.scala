@@ -1,7 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.functions._
 import graft.tools.Prof.time
-/** Scratch profiler for the curation family (dev utility, like ProfDedup). */
+/** Scratch profiler for the curation family (dev utility). */
 object ProfCuration {
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.1"

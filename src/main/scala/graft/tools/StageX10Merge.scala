@@ -69,28 +69,26 @@ object StageX10Merge {
       .foreach(f => java.nio.file.Files.move(f.toPath,
         java.nio.file.Paths.get(s"$out/events.parquet/${f.getName}")))
     println(s"[x10merge] appended same-user continuation slice")
-    // Fresh session: the corpus-stats memo is per session, so the new
-    // fingerprint is computed fresh — exactly a new ingest process.
-    val s2 = spark.newSession()
+    // Same session: the corpus snapshot keys the stats memo, so the
+    // grown state's fingerprint is computed fresh.
     window("events stores MERGE (+copy)")(
-      graft.operators.Events.warmEventsStores(s2, out))
+      graft.operators.Events.warmEventsStores(spark, out))
     // merged ≡ cold at ×10, engine-side: symmetric EXCEPT must be empty.
-    val s3 = spark.newSession()
     def diffCount(a: org.apache.spark.sql.DataFrame,
                   b: org.apache.spark.sql.DataFrame): Long =
       a.exceptAll(b).count() + b.exceptAll(a).count()
-    val events = graft.Tables.events(s3, out)
+    val events = graft.Tables.events(spark, out)
     val trName = graft.sources.Warehouse.tableName("ev_trans", out,
-      graft.sources.Warehouse.eventsFp(s3, out))
+      graft.sources.Warehouse.eventsFp(spark, out))
     val udName = graft.sources.Warehouse.tableName("ev_user_days", out,
-      graft.sources.Warehouse.eventsFp(s3, out))
+      graft.sources.Warehouse.eventsFp(spark, out))
     window("merged==cold ev_trans (x10)") {
-      val d = diffCount(s3.table(trName),
+      val d = diffCount(spark.table(trName),
         graft.operators.Events.transStore(events))
       require(d == 0, s"ev_trans merged != cold at x10: $d diff rows")
     }
     window("merged==cold ev_user_days (x10)") {
-      val d = diffCount(s3.table(udName),
+      val d = diffCount(spark.table(udName),
         graft.operators.Events.userDays(events))
       require(d == 0, s"ev_user_days merged != cold at x10: $d diff rows")
     }

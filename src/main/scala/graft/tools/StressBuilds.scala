@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * builder runs. A scale-sound build grows ≈ linearly in bytes and
   * ≤ ~N× in cpu; superlinear rows get adjudicated in SCALE.md.
   *
-  * The builders memoize per (session, dir) (`Artifacts.cached` /
-  * per-family caches), so within this one session the src and replica
+  * The builders memoize per (session, dir, corpus fingerprint)
+  * (`Artifacts.cached`), so within this one session the src and replica
   * builds are independent cold builds by construction — and a second
   * call would measure the warm cache, which is why each dir is built
   * exactly once.

@@ -2985,8 +2985,8 @@ class PipelineSpec extends SparkSpec {
     assert(out.count() > 0)
     // And the raw nesting itself stays legal (get-then-putIfAbsent):
     import spark.implicits._
-    val nested = Artifacts.cached(spark, "spec-reentrant-outer") {
-      val dep = Artifacts.cached(spark, "spec-reentrant-dep") {
+    val nested = Artifacts.cached(spark, "spec-reentrant-outer", "") {
+      val dep = Artifacts.cached(spark, "spec-reentrant-dep", "") {
         Seq(1, 2, 3).toDF("v").localCheckpoint(true)
       }
       dep.agg(org.apache.spark.sql.functions.sum("v").as("s"))
@@ -3004,7 +3004,7 @@ class PipelineSpec extends SparkSpec {
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val gate = new java.util.concurrent.CountDownLatch(1)
     def request(): org.apache.spark.sql.DataFrame =
-      Artifacts.cached(spark, "spec-concurrent-once") {
+      Artifacts.cached(spark, "spec-concurrent-once", "") {
         builds.incrementAndGet()
         Thread.sleep(200) // hold the build open so the race is real
         Seq(7, 35).toDF("v").localCheckpoint(true)

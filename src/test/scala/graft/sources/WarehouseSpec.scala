@@ -1133,8 +1133,8 @@ class WarehouseSpec extends SparkSpec {
         .foreach(f => java.nio.file.Files.move(f.toPath,
           java.nio.file.Paths.get(s"$dir/embeddings.parquet/${f.getName}")))
     }
-    // Resolve via the PRODUCTION lifecycle in a fresh session (fresh
-    // corpus stats = the new-ingest-process shape); return the lane
+    // Resolve via the PRODUCTION lifecycle in a fresh session (the
+    // new-ingest-process shape); return the lane
     // the index took plus the published table names.
     def resolve(): (Map[String, String], String, String) = {
       val s2 = spark.newSession()
@@ -1453,8 +1453,8 @@ class WarehouseSpec extends SparkSpec {
     }
     // Drive the PRODUCTION store resolutions (warmEmbPairs resolves
     // emb_pairs + emb_cc; warmPhashClusterLabels resolves phash_sketch
-    // + phash_cc) in a FRESH session per corpus state — corpus stats
-    // memoize per session, exactly the new-ingest-process shape — and
+    // + phash_cc) in a FRESH session per corpus state — the
+    // new-ingest-process shape — and
     // read which servedFrameMerged lane each family took.
     def lanesAfter(): Map[String, String] = {
       val s2 = spark.newSession()
@@ -1500,5 +1500,73 @@ class WarehouseSpec extends SparkSpec {
       df.collect().map(_.toSeq).sortBy(_.toString()).toSeq
     assert(rws(served) == rws(coldCc),
       "declined rebuild must equal the cold CC over the grown corpus")
+  }
+
+  test("one session across an append: fingerprint and data-derived knob move together, the store merges, and equals a from-scratch build") {
+    import graft.operators.Curation
+    // No fresh session anywhere: the corpus snapshot (the file listing)
+    // keys both the stats memo and the artifact memo, so the SAME
+    // session must see the grown corpus on its next resolution.
+    val dir = java.nio.file.Files.createTempDirectory("whsnap").toString
+    val dsrc = graft.Tables.documents(spark, "/root/testdata/sf0.01")
+      .orderBy(col("doc_id")).limit(95).localCheckpoint(true)
+    def place(df: org.apache.spark.sql.DataFrame, into: String): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("whsnapb").toString
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+        .foreach(f => java.nio.file.Files.move(f.toPath,
+          java.nio.file.Paths.get(s"$into/${f.getName}")))
+    }
+    new java.io.File(s"$dir/documents.parquet").mkdirs()
+    place(dsrc.filter(col("doc_id") < 80), s"$dir/documents.parquet")
+    // Fingerprint as a process that never saw this corpus computes it.
+    def freshFp(d: String): String = {
+      val r = spark.read.parquet(s"$d/documents.parquet")
+        .agg(count(lit(1)), max(col("doc_id"))).head()
+      Warehouse.fpToken(r.getLong(0), r.getLong(1),
+        Warehouse.corpusBytes(spark, d, "documents"))
+    }
+    // The vb_index store records its width knob in column `w`.
+    def resolve(d: String): (Map[String, String], String,
+                             org.apache.spark.sql.DataFrame) = {
+      Warehouse.drainLanes(spark)
+      Curation.warmVerbatimArtifacts(spark, d)
+      val lanes = Warehouse.drainLanes(spark)
+        .map { case (k, v) => k.takeWhile(_ != '@') -> v }
+      val fp = Warehouse.docsFp(spark, d)
+      (lanes, fp, spark.table(Warehouse.tableName("vb_index", d, fp)))
+    }
+    def widthOf(store: org.apache.spark.sql.DataFrame): Int =
+      store.select("w").distinct().collect().map(_.getInt(0)).toSeq match {
+        case Seq(w) => w
+        case ws => fail(s"store mixes widths: $ws")
+      }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.toString()).toSeq
+    val (l1, fp1, s1) = resolve(dir)
+    assert(l1.get("vb_index").contains("cold"), s"first resolve is cold: $l1")
+    assert(fp1 == freshFp(dir))
+    assert(widthOf(s1) == Curation.deriveShingleWidth(80L))
+    place(dsrc.filter(col("doc_id") >= 80), s"$dir/documents.parquet")
+    val (l2, fp2, s2) = resolve(dir)
+    // Fingerprint (count, max id, bytes) and width knob are read from
+    // the same stats memo: both must be the grown corpus's.
+    assert(fp2 != fp1 && fp2 == freshFp(dir),
+      "the live session's fingerprint must be the grown corpus's")
+    assert(widthOf(s2) == Curation.deriveShingleWidth(95L))
+    for (fam <- Seq("vb_index", "vb_inc_idx"))
+      assert(l2.get(fam).contains("merge"),
+        s"an in-width append must take $fam's merge lane: $l2")
+    // From scratch: a copy of the grown corpus keys a fresh table
+    // family (new dir digest), so it builds cold with nothing to merge.
+    val twin = java.nio.file.Files.createTempDirectory("whsnapt").toString
+    new java.io.File(s"$twin/documents.parquet").mkdirs()
+    place(spark.read.parquet(s"$dir/documents.parquet"),
+      s"$twin/documents.parquet")
+    val (lt, _, st) = resolve(twin)
+    assert(lt.get("vb_index").contains("cold"), s"twin builds cold: $lt")
+    assert(rows(s2) == rows(st),
+      "merged store after a same-session append != from-scratch build")
   }
 }
