@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped cache of MATERIALIZED shared artifacts — the
   * in-session stand-in for the artifact table a production pipeline
@@ -18,6 +18,15 @@ import org.apache.spark.sql.SparkSession
   * N views — without changing any key's output (the artifact is
   * byte-identical to what each key derived on its own, so every oracle
   * hash is unchanged).
+  *
+  * STORES: every single-table warehouse store resolves through ONE
+  * accessor, [[store]] — fingerprint of its source table, memo under
+  * `family@dir`, and `Warehouse.servedFrameMerged`'s hit / merge /
+  * cold lanes — so every store writes a source manifest and records
+  * the lane it took. [[cached]] stays for what is not a single store:
+  * derived views of a store (a localCheckpoint of a small table),
+  * session frames such as codebooks and centroids, and the funnel's
+  * multi-table stage set.
   *
   * Contract: `build` must return a value that is already MATERIALIZED
   * (localCheckpoint, a warehouse table, or equivalent) — the cache
@@ -64,5 +73,26 @@ object Artifacts {
     cache.compute((s, key), (_, cur) =>
       if (cur != null && cur.fp == fp) cur else new Holder(fp, () => build))
       .value.asInstanceOf[T]
+  }
+
+  /** Resolve the warehouse store `family` of `dir` (header: STORES).
+    * `src` names the corpus table the store is built from — documents,
+    * embeddings or events — whose fingerprint keys both the memo and
+    * the table name. `merge` returns None to decline to the cold lane;
+    * a store with no merge lane passes `(_, _) => None`. Returns the
+    * served table. */
+  private[graft] def store(s: SparkSession, family: String, dir: String,
+                           src: String,
+                           bucket: Option[(String, Int)] = None)
+                          (cold: => DataFrame)
+                          (merge: (DataFrame, DataFrame) => Option[DataFrame])
+      : DataFrame = {
+    val fp = src match {
+      case "documents" => graft.sources.Warehouse.docsFp(s, dir)
+      case "embeddings" => graft.sources.Warehouse.embFp(s, dir)
+      case "events" => graft.sources.Warehouse.eventsFp(s, dir)
+    }
+    cached(s, s"$family@$dir", fp)(graft.sources.Warehouse.servedFrameMerged(
+      s, family, dir, src, fp, bucket)(cold)(merge))
   }
 }

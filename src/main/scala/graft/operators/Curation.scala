@@ -231,28 +231,16 @@ object Curation {
     * width holds; a [[deriveShingleWidth]] step DECLINES to cold
     * (every stored key hashes width-token windows — the lsh_buckets
     * convention, predicate [[shingleWidthCrossed]]). */
-  def docShingleStore(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"doc-shingles:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "doc_shingles", dir, "documents", fp) {
-        val docs = Tables.documents(s, dir)
-        val n = graft.sources.Warehouse.docsStats(s, dir)._1
-        shingles(docs, deriveShingleWidth(n))
-      } { (old, batch) =>
-        val n = graft.sources.Warehouse.docsStats(s, dir)._1
-        if (shingleWidthCrossed(n, batch.count())) None
-        else Some(old.unionByName(shingles(batch, deriveShingleWidth(n))))
-      })
-  }
-
-  /** Build the doc-shingle store NOW — Bench's explicit artifact-build
-    * row (the warmMinhashBands accounting rule: the build is its own
-    * timed row, never hidden inside a serving key). */
-  def warmDocShingles(s: SparkSession, dir: String): Unit = {
-    docShingleStore(s, dir)
-    ()
-  }
+  def docShingleStore(s: SparkSession, dir: String): DataFrame =
+    Artifacts.store(s, "doc_shingles", dir, "documents") {
+      val docs = Tables.documents(s, dir)
+      val n = graft.sources.Warehouse.docsStats(s, dir)._1
+      shingles(docs, deriveShingleWidth(n))
+    } { (old, batch) =>
+      val n = graft.sources.Warehouse.docsStats(s, dir)._1
+      if (shingleWidthCrossed(n, batch.count())) None
+      else Some(old.unionByName(shingles(batch, deriveShingleWidth(n))))
+    }
 
   /** The persisted eval-shingle INDEX: the distinct rolled shingle keys
     * of the eval slice, built ONCE at `width`. A production pipeline
@@ -542,7 +530,7 @@ object Curation {
     * stage subtracted — one computation feeding both the count view
     * ([[corpusFunnel]]) and the per-doc verdict view
     * ([[corpusFunnelReasons]]). */
-  private final case class FunnelFrames(
+  private[graft] final case class FunnelFrames(
       nInput: Long, s1: DataFrame, s2: DataFrame, flagged: DataFrame,
       s3: DataFrame, fuzzyFlagged: DataFrame, s4: DataFrame,
       emptied: DataFrame, s5: DataFrame,
@@ -557,7 +545,8 @@ object Curation {
     * "read the table you already wrote" half of that story). The
     * [[Artifacts]] entry carries the combined documents + embeddings
     * fingerprint, the two tables the funnel reads. */
-  private def funnelFramesArtifact(s: SparkSession, dir: String): FunnelFrames = {
+  private[graft] def funnelFramesArtifact(s: SparkSession,
+                                          dir: String): FunnelFrames = {
     val docsFp = graft.sources.Warehouse.docsFp(s, dir)
     val semFp = graft.sources.Warehouse.combineFp(
       docsFp, graft.sources.Warehouse.embFp(s, dir))
@@ -615,22 +604,6 @@ object Curation {
         bandIndex = Some(() => Dedup.minhashBandStore(s, dir)),
         docShingles = Some(() => docShingleStore(s, dir)))
     }
-  }
-
-  /** Build the shared span-family artifacts now (index → matches →
-    * offsets, plus the incremental key's settled-slice index) —
-    * Bench's explicit artifact-build pass. */
-  def warmVerbatimArtifacts(s: SparkSession, dir: String): Unit = {
-    verbatimOffsetsArtifact(s, dir)
-    vbIncIndexArtifact(s, dir)
-    ()
-  }
-
-  /** Build (and checkpoint) the shared funnel stage frames now —
-    * Bench's explicit artifact-build pass. */
-  def warmFunnelFrames(s: SparkSession, dir: String): Unit = {
-    funnelFramesArtifact(s, dir)
-    ()
   }
 
   /** Default materializer for [[funnelFrames]]'s stage frames — the
@@ -1319,15 +1292,10 @@ object Curation {
     * re-shingle the corpus; only the index's own cold build (first
     * contact or a declined merge) pays the shingle pass. */
   private def verbatimIndexArtifact(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"verbatim-index:$dir", fp) {
-      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
-      val width = deriveShingleWidth(nDocs)
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_index", dir, "documents", fp)(
-        verbatimIndexStore(Tables.documents(s, dir), width))(
-        verbatimIndexMerged(width))
-    }
+    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
+    Artifacts.store(s, "vb_index", dir, "documents")(
+      verbatimIndexStore(Tables.documents(s, dir), width))(
+      verbatimIndexMerged(width))
   }
 
   /** The persisted corpus-side index of the INCREMENTAL verbatim key —
@@ -1345,17 +1313,12 @@ object Curation {
     * split); a width step declines inside the shared callback. */
   private[graft] def vbIncIndexArtifact(s: SparkSession,
                                         dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"vb-inc-index:$dir", fp) {
-      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
-      val width = deriveShingleWidth(nDocs)
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_inc_idx", dir, "documents", fp)(
-        verbatimIndexStore(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0), width))(
-        (old, delta) => verbatimIndexMerged(width)(
-          old, delta.filter(col("doc_id") % 5 =!= 0)))
-    }
+    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
+    Artifacts.store(s, "vb_inc_idx", dir, "documents")(
+      verbatimIndexStore(
+        Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0), width))(
+      (old, delta) => verbatimIndexMerged(width)(
+        old, delta.filter(col("doc_id") % 5 =!= 0)))
   }
 
   /** Crossed-THIS-STEP keys, recomputable without the superseded index
@@ -1409,16 +1372,11 @@ object Curation {
     * accessor drops it, so every consumer sees the round-9 schema. */
   private def verbatimMatchesArtifact(s: SparkSession, dir: String): DataFrame = {
     val index = verbatimIndexArtifact(s, dir)
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"verbatim-matches:$dir", fp) {
-      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
-      val width = deriveShingleWidth(nDocs)
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_matches", dir, "documents", fp)(
-        verbatimMatchesFrom(index.filter(col("doc_id").isNotNull)
-          .select("sh_key", "doc_id", "pos")).withColumn("w", lit(width)))(
-        verbatimMatchesMerged(width, index))
-    }.drop("w")
+    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
+    Artifacts.store(s, "vb_matches", dir, "documents")(
+      verbatimMatchesFrom(index.filter(col("doc_id").isNotNull)
+        .select("sh_key", "doc_id", "pos")).withColumn("w", lit(width)))(
+      verbatimMatchesMerged(width, index)).drop("w")
   }
 
   /** vb_offsets APPEND-MERGE: pairs partition (settled×settled pairs'
@@ -1459,21 +1417,17 @@ object Curation {
 
   /** The persisted run offsets, BUILT FROM the matches table with the
     * append-merge wired; `w` is store-internal, dropped here. */
-  private def verbatimOffsetsArtifact(s: SparkSession, dir: String): DataFrame = {
-    // Dependency artifacts resolved BEFORE the cached block (the
+  private[graft] def verbatimOffsetsArtifact(s: SparkSession,
+                                             dir: String): DataFrame = {
+    // Dependency artifacts resolved BEFORE the store (the
     // Similarity/Multimodal convention — keeps build units small and
     // the nested-computeIfAbsent crash class structurally impossible).
     val index = verbatimIndexArtifact(s, dir)
     val matches = verbatimMatchesArtifact(s, dir)
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"verbatim-offsets:$dir", fp) {
-      val nDocs = graft.sources.Warehouse.docsStats(s, dir)._1
-      val width = deriveShingleWidth(nDocs)
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "vb_offsets", dir, "documents", fp)(
-        verbatimOffsetsFrom(matches, width).withColumn("w", lit(width)))(
-        verbatimOffsetsMerged(width, index, matches))
-    }.drop("w")
+    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
+    Artifacts.store(s, "vb_offsets", dir, "documents")(
+      verbatimOffsetsFrom(matches, width).withColumn("w", lit(width)))(
+      verbatimOffsetsMerged(width, index, matches)).drop("w")
   }
 
   /** Longest shared verbatim token run per doc pair — see the

@@ -1321,20 +1321,16 @@ object Dedup {
     * `q_dedup_ngram` keeps the inline derivation — it IS the audit
     * whose plan is the reference. Deterministic (prefix rule + exact
     * Jaccard + rounded emission) ⟹ reuse == rebuild. */
-  private def ngramPairStore(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"ngram-pairs:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "ngram_pairs", dir, "documents", fp)(
-        ngramPairs(Tables.documents(s, dir)))(
-        // Append-merge lane (round-18): old-state pairs ∪ the
-        // batch-touching slice — see [[ngramPairsTouching]] for why
-        // the union is exactly the cold rebuild (WarehouseSpec pins
-        // the hash equality).
-        (old, batch) => Some(old.unionByName(
-          ngramPairsTouching(Tables.documents(s, dir),
-            batch.select(col("doc_id")))))))
-  }
+  private def ngramPairStore(s: SparkSession, dir: String): DataFrame =
+    Artifacts.store(s, "ngram_pairs", dir, "documents")(
+      ngramPairs(Tables.documents(s, dir)))(
+      // Append-merge lane (round-18): old-state pairs ∪ the
+      // batch-touching slice — see [[ngramPairsTouching]] for why
+      // the union is exactly the cold rebuild (WarehouseSpec pins
+      // the hash equality).
+      (old, batch) => Some(old.unionByName(
+        ngramPairsTouching(Tables.documents(s, dir),
+          batch.select(col("doc_id"))))))
 
   /** The EMBEDDING near-dup pair store — the `ngram_pairs` convention
     * on the semantic side (round-17): the LSH-bucketed cosine pair
@@ -1344,39 +1340,25 @@ object Dedup {
     * The capped serving twin reads it; `q_dedup_embedding` keeps the
     * inline derivation as the pair-machinery reference (the
     * q_dedup_ngram split). */
-  private def embPairStore(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.embFp(s, dir)
-    Artifacts.cached(s, s"emb-pairs:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "emb_pairs", dir, "embeddings", fp) {
-        val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-        val n = Similarity.embCount(s, dir)
-        embeddingPairs(vectors, 0.35, Similarity.derivePlanes(n))
-      } { (old, batch) =>
-        // Append-merge lane (round-18): valid ONLY while the
-        // corpus-size-derived plane count holds across the growth step
-        // — signatures are per-vector at fixed planes, so old×old
-        // collisions are growth-invariant; a plane-block boundary
-        // crossing DECLINES (cold rebuild), per the
-        // [[embeddingPairsTouching]] contract.
-        val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-        val n = Similarity.embCount(s, dir)
-        if (Similarity.planeBlockCrossed(n, batch.count())) None
-        else Some(old.unionByName(embeddingPairsTouching(
-          vectors, batch.select(col("vec_id")), 0.35,
-          Similarity.derivePlanes(n))))
-      })
-  }
-
-  /** Build the embedding pair store AND its CC labels NOW — Bench's
-    * explicit artifact-build row for the semantic near-dup family
-    * (the warmClusterLabels accounting rule: builds bill to their own
-    * timed row, never inside a serving key). */
-  def warmEmbPairs(s: SparkSession, dir: String): Unit = {
-    embPairStore(s, dir)
-    embClusterLabels(s, dir)
-    ()
-  }
+  private[graft] def embPairStore(s: SparkSession, dir: String): DataFrame =
+    Artifacts.store(s, "emb_pairs", dir, "embeddings") {
+      val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
+      val n = Similarity.embCount(s, dir)
+      embeddingPairs(vectors, 0.35, Similarity.derivePlanes(n))
+    } { (old, batch) =>
+      // Append-merge lane (round-18): valid ONLY while the
+      // corpus-size-derived plane count holds across the growth step
+      // — signatures are per-vector at fixed planes, so old×old
+      // collisions are growth-invariant; a plane-block boundary
+      // crossing DECLINES (cold rebuild), per the
+      // [[embeddingPairsTouching]] contract.
+      val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
+      val n = Similarity.embCount(s, dir)
+      if (Similarity.planeBlockCrossed(n, batch.count())) None
+      else Some(old.unionByName(embeddingPairsTouching(
+        vectors, batch.select(col("vec_id")), 0.35,
+        Similarity.derivePlanes(n))))
+    }
 
   /** The PERSISTED MinHash BAND INDEX — the artifact
     * [[minhashBandIndex]]'s doc has always named ("what a production
@@ -1388,25 +1370,15 @@ object Dedup {
     * corpus side — so serving never re-shingles or re-hashes the
     * settled corpus. Deterministic (md5-fold base hash + xxhash64
     * band fold) ⟹ reuse == rebuild. */
-  private[operators] def minhashBandStore(s: SparkSession,
-                                          dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"minhash-bands:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "minhash_bands", dir, "documents", fp)(
-        minhashBandIndex(Tables.documents(s, dir)))(
-        // Append-merge lane (round-18): bands are a PER-DOC function
-        // (shingle→md5-fold→min — no corpus-global input), so the
-        // merged index is the cold rebuild exactly; per-append cost is
-        // batch-linear (WarehouseSpec pins the hash equality).
-        (old, batch) => Some(old.unionByName(minhashBandIndex(batch)))))
-  }
-
-  /** Build the band index NOW — Bench's explicit artifact-build row. */
-  def warmMinhashBands(s: SparkSession, dir: String): Unit = {
-    minhashBandStore(s, dir)
-    ()
-  }
+  private[graft] def minhashBandStore(s: SparkSession,
+                                      dir: String): DataFrame =
+    Artifacts.store(s, "minhash_bands", dir, "documents")(
+      minhashBandIndex(Tables.documents(s, dir)))(
+      // Append-merge lane (round-18): bands are a PER-DOC function
+      // (shingle→md5-fold→min — no corpus-global input), so the
+      // merged index is the cold rebuild exactly; per-append cost is
+      // batch-linear (WarehouseSpec pins the hash equality).
+      (old, batch) => Some(old.unionByName(minhashBandIndex(batch))))
 
   /** The PERSISTED SimHash SKETCH STORE — (doc_id, sh) over the
     * simhash key's corpus slice (lang = 'fr'), keyed on the documents
@@ -1415,24 +1387,14 @@ object Dedup {
     * runs once per corpus state at ingest; serving pays banding + the
     * hamming verify only. Deterministic (md5-fold token hash, sign
     * votes) ⟹ reuse == rebuild. */
-  private def simhashSketchStore(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"simhash-sketches:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "simhash_sk", dir, "documents", fp)(
-        simhashed(Tables.documents(s, dir).filter(col("lang") === "fr")))(
-        // Append-merge lane: sketches are per-doc (token votes), so
-        // old ∪ sketch(batch slice) == the cold rebuild exactly.
-        (old, batch) => Some(old.unionByName(
-          simhashed(batch.filter(col("lang") === "fr"))))))
-  }
-
-  /** Build the sketch store NOW — Bench's explicit artifact-build
-    * row. */
-  def warmSimhashSketches(s: SparkSession, dir: String): Unit = {
-    simhashSketchStore(s, dir)
-    ()
-  }
+  private[graft] def simhashSketchStore(s: SparkSession,
+                                        dir: String): DataFrame =
+    Artifacts.store(s, "simhash_sk", dir, "documents")(
+      simhashed(Tables.documents(s, dir).filter(col("lang") === "fr")))(
+      // Append-merge lane: sketches are per-doc (token votes), so
+      // old ∪ sketch(batch slice) == the cold rebuild exactly.
+      (old, batch) => Some(old.unionByName(
+        simhashed(batch.filter(col("lang") === "fr")))))
 
   /** The PERSISTED CDC CHUNK LEDGER — the (doc_id, source, chunk_idx,
     * len, chunk_key) instance table [[cdcChunks]] derives, keyed on
@@ -1441,23 +1403,12 @@ object Dedup {
     * chunk profile, size histogram) and the incremental gate's index
     * side read it back — content is never re-chunked. Deterministic
     * (stateless Rabin cuts + md5-fold keys) ⟹ reuse == rebuild. */
-  private def cdcChunkStore(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"cdc-chunks:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "cdc_chunks", dir, "documents", fp)(
-        cdcChunks(Tables.documents(s, dir)))(
-        // Append-merge lane: CDC cuts are stateless per-doc (content-
-        // defined), so old ledger ∪ chunks(batch) == the cold rebuild.
-        (old, batch) => Some(old.unionByName(cdcChunks(batch)))))
-  }
-
-  /** Build the chunk ledger NOW — Bench's explicit artifact-build
-    * row. */
-  def warmCdcChunks(s: SparkSession, dir: String): Unit = {
-    cdcChunkStore(s, dir)
-    ()
-  }
+  private[graft] def cdcChunkStore(s: SparkSession, dir: String): DataFrame =
+    Artifacts.store(s, "cdc_chunks", dir, "documents")(
+      cdcChunks(Tables.documents(s, dir)))(
+      // Append-merge lane: CDC cuts are stateless per-doc (content-
+      // defined), so old ledger ∪ chunks(batch) == the cold rebuild.
+      (old, batch) => Some(old.unionByName(cdcChunks(batch))))
 
   /** SEMANTIC near-dup clusters — CC labels over the embedding pair
     * graph, completing the cluster-family symmetry (ngram `q_dedup_
@@ -1466,34 +1417,29 @@ object Dedup {
     * representative. Same lifecycle as the text labels: built off the
     * persisted pair STORE, persisted as the `emb_cc` warehouse family
     * (min-label CC is deterministic ⟹ reuse == rebuild). */
-  private def embClusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.embFp(s, dir)
-    Artifacts.cached(s, s"emb-cc-labels:$dir", fp) {
-      // APPEND-MERGE (round-19): [[ccLabelsMerged]] over the persisted
-      // pair store. DECLINES across a derivePlanes block boundary —
-      // the emb pair SET is candidate-generation-dependent (LSH
-      // buckets at the derived plane count), so settled pairs are
-      // growth-invariant only while the plane count holds: the exact
-      // condition the pair store's own merge declines on.
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "emb_cc", dir, "embeddings", fp)(
-        connectedComponents(
-          embPairStore(s, dir)
-            .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-          .select(col("doc_id").as("vec_id"), col("cluster_rep"))
-      ) { (old, delta) =>
-        val n = Similarity.embCount(s, dir)
-        val deltaIds = delta.select(col("vec_id"))
-        if (Similarity.planeBlockCrossed(n, deltaIds.count())) None
-        else Some(ccLabelsMerged(
-          old.select(col("vec_id"), col("cluster_rep")),
-          embPairStore(s, dir)
-            .select(col("id_a").as("a"), col("id_b").as("b")),
-          deltaIds)
-          .select(col("doc_id").as("vec_id"), col("cluster_rep")))
-      }
+  private[graft] def embClusterLabels(s: SparkSession, dir: String): DataFrame =
+    // APPEND-MERGE (round-19): [[ccLabelsMerged]] over the persisted
+    // pair store. DECLINES across a derivePlanes block boundary —
+    // the emb pair SET is candidate-generation-dependent (LSH
+    // buckets at the derived plane count), so settled pairs are
+    // growth-invariant only while the plane count holds: the exact
+    // condition the pair store's own merge declines on.
+    Artifacts.store(s, "emb_cc", dir, "embeddings")(
+      connectedComponents(
+        embPairStore(s, dir)
+          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
+        .select(col("doc_id").as("vec_id"), col("cluster_rep"))
+    ) { (old, delta) =>
+      val n = Similarity.embCount(s, dir)
+      val deltaIds = delta.select(col("vec_id"))
+      if (Similarity.planeBlockCrossed(n, deltaIds.count())) None
+      else Some(ccLabelsMerged(
+        old.select(col("vec_id"), col("cluster_rep")),
+        embPairStore(s, dir)
+          .select(col("id_a").as("a"), col("id_b").as("b")),
+        deltaIds)
+        .select(col("doc_id").as("vec_id"), col("cluster_rep")))
     }
-  }
 
   /** The SHARED near-dup labeling artifact: ngram pair graph → CC
     * labels, built ONCE per (session, corpus state) and served to every
@@ -1505,41 +1451,28 @@ object Dedup {
     * write. Output is byte-identical to each key deriving its own
     * labels (same pair graph, same fixed point), so every oracle hash
     * is unchanged — only the redundant recomputation is gone. */
-  private def ngramClusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"ngram-cc-labels:$dir", fp) {
-      // The labels PERSIST through the warehouse lifecycle (round 16):
-      // the clustering job writes once, every later process — not just
-      // every later key in one session — reads the table back; a
-      // mutated corpus misses by fingerprint and rebuilds. The CC
-      // fixed point is deterministic (min-label propagation), so
-      // reuse == rebuild and every oracle hash is state-independent.
-      // The pair graph comes from the persisted store (round-17).
-      // APPEND-MERGE (round-19): star-contraction over the old labels
-      // + the merged pair store's delta-touching slice — see
-      // [[ccLabelsMerged]]. No decline knob: the ngram pair set is
-      // verified-exact under a content-only threshold (the prefix
-      // filter is a complete candidate rule at any global token
-      // order), so settled pairs are growth-invariant unconditionally.
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "ngram_cc", dir, "documents", fp)(
-        connectedComponents(
-          ngramPairStore(s, dir).select(col("doc_a"), col("doc_b")))
-      ) { (old, delta) =>
-        Some(ccLabelsMerged(old,
-          ngramPairStore(s, dir).select(col("doc_a"), col("doc_b")),
-          delta.select(col("doc_id"))))
-      }
+  private[graft] def ngramClusterLabels(s: SparkSession, dir: String): DataFrame =
+    // The labels PERSIST through the warehouse lifecycle (round 16):
+    // the clustering job writes once, every later process — not just
+    // every later key in one session — reads the table back; a
+    // mutated corpus misses by fingerprint and rebuilds. The CC
+    // fixed point is deterministic (min-label propagation), so
+    // reuse == rebuild and every oracle hash is state-independent.
+    // The pair graph comes from the persisted store (round-17).
+    // APPEND-MERGE (round-19): star-contraction over the old labels
+    // + the merged pair store's delta-touching slice — see
+    // [[ccLabelsMerged]]. No decline knob: the ngram pair set is
+    // verified-exact under a content-only threshold (the prefix
+    // filter is a complete candidate rule at any global token
+    // order), so settled pairs are growth-invariant unconditionally.
+    Artifacts.store(s, "ngram_cc", dir, "documents")(
+      connectedComponents(
+        ngramPairStore(s, dir).select(col("doc_a"), col("doc_b")))
+    ) { (old, delta) =>
+      Some(ccLabelsMerged(old,
+        ngramPairStore(s, dir).select(col("doc_a"), col("doc_b")),
+        delta.select(col("doc_id"))))
     }
-  }
-
-  /** Build the shared labeling artifact NOW (Bench's explicit
-    * artifact-build pass — the build is timed there as its own row so
-    * it can never hide inside, or be retried out of, a family key). */
-  def warmClusterLabels(s: SparkSession, dir: String): Unit = {
-    ngramClusterLabels(s, dir)
-    ()
-  }
 
   /** False-positive rate for the ingest Bloom prefilter — 1% keeps the
     * exact-verify side at ~1% of a dup-free batch while the filter

@@ -785,12 +785,6 @@ object Events {
     r.select(col("event_type"), col("r").as("rank")).orderBy("event_type")
   }
 
-  /** Fingerprint of a dir's EVENTS table — the corpus-state stamp the
-    * persisted event stores key on ([[graft.sources.Warehouse.eventsFp]],
-    * the docsFp/embFp convention). */
-  private def eventsFp(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.eventsFp(s, dir)
-
   /** The NULL-INCLUSIVE TRANSITION DISTRIBUTION — (prev2, prev_type,
     * event_type, gap_ms, c): the sufficient statistic of the whole
     * path-analysis family in ONE frame. Every event appears once as
@@ -982,13 +976,9 @@ object Events {
     * distribution view every key reads. Deterministic (integer day/gap
     * math over a total order) ⟹ reuse == rebuild; WarehouseSpec pins
     * merged ≡ cold bit for bit and the late-delta decline. */
-  private def transStoreFull(s: SparkSession, dir: String): DataFrame = {
-    val fp = eventsFp(s, dir)
-    Artifacts.cached(s, s"ev-trans:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "ev_trans", dir, "events", fp)(
-        transStore(Tables.events(s, dir)))(transStoreMerged))
-  }
+  private def transStoreFull(s: SparkSession, dir: String): DataFrame =
+    Artifacts.store(s, "ev_trans", dir, "events")(
+      transStore(Tables.events(s, dir)))(transStoreMerged)
 
   /** The transition-DISTRIBUTION view of [[transStoreFull]] (round-18
     * shape, unchanged for consumers): the six transition/markov/dwell/
@@ -997,7 +987,7 @@ object Events {
     * store pays it ONCE per corpus state at ingest — and, since
     * round-19, per corpus APPEND only a delta-sized lag — and every
     * key reads the bounded distribution frame back. */
-  private def transDistStore(s: SparkSession, dir: String): DataFrame =
+  private[graft] def transDistStore(s: SparkSession, dir: String): DataFrame =
     transStoreFull(s, dir).filter(col("user_id").isNull)
       .select("prev2", "prev_type", "event_type", "gap_ms", "c")
 
@@ -1031,21 +1021,9 @@ object Events {
     * all re-derived it per key; the store pays the distinct once per
     * corpus state, and per corpus APPEND only the [[userDaysMerged]]
     * delta distinct (round-19). */
-  private def userDayStore(s: SparkSession, dir: String): DataFrame = {
-    val fp = eventsFp(s, dir)
-    Artifacts.cached(s, s"ev-ud:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "ev_user_days", dir, "events", fp)(
-        userDays(Tables.events(s, dir)))(userDaysMerged))
-  }
-
-  /** Build both event stores NOW — Bench's explicit artifact-build
-    * row (the warmClusterLabels accounting rule). */
-  def warmEventsStores(s: SparkSession, dir: String): Unit = {
-    transDistStore(s, dir)
-    userDayStore(s, dir)
-    ()
-  }
+  private[graft] def userDayStore(s: SparkSession, dir: String): DataFrame =
+    Artifacts.store(s, "ev_user_days", dir, "events")(
+      userDays(Tables.events(s, dir)))(userDaysMerged)
 
   /** Order-1 pair counts off the transition store (null-prev rows —
     * each user's first event — excluded, as the batch lag filter). */

@@ -882,12 +882,9 @@ object Multimodal {
         .select((col("doc_id") + PhashPlantBase).as("doc_id"),
           col("phash")))
     }
-    val fp = docsFp(s, dir)
-    val sk = Artifacts.cached(s, s"phash-sketch:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_sketch", dir, "documents", fp)(
-        sketchOf(docs))(
-        (old, batch) => Some(old.unionByName(sketchOf(batch)))))
+    val sk = Artifacts.store(s, "phash_sketch", dir, "documents")(
+      sketchOf(docs))(
+      (old, batch) => Some(old.unionByName(sketchOf(batch))))
     (sk, phashChunkWidth(n + PhashPlantCount))
   }
 
@@ -1002,7 +999,7 @@ object Multimodal {
   /** BUILD step: argmin cell assignment over the broadcast centroid
     * join — the index a production pipeline writes once (cell-bucketed,
     * the writeIvfPqIndex shape) and every query serves from. Billed as
-    * its own Bench artifact row via [[warmPhashIvfIndex]]: assignment
+    * its own Bench artifact row (`phash_ivf_index`): assignment
     * is N×K bit_counts, the one linear-in-corpus pass of the family. */
   def phashIvfAssign(sk: DataFrame, cents: DataFrame): DataFrame =
     sk.join(broadcast(cents))
@@ -1075,30 +1072,22 @@ object Multimodal {
     * in-memory artifact; every consumer (in-memory serve, persisted
     * pruned serve, trained build's round 0) reads the same bytes.
     * Cell count K = ⌈√N⌉ (the Similarity rule). */
-  private def phashIvfArtifacts(
+  private[graft] def phashIvfArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val fp = docsFp(s, dir)
-    val cents = Artifacts.cached(s, s"phash-ivf-cents:$dir", fp) {
-      graft.sources.Warehouse.servedFrame(s, "phash_cents", dir, fp) {
+    val cents = Artifacts.cached(s, s"phash-ivf-cents:$dir", docsFp(s, dir))(
+      Artifacts.store(s, "phash_cents", dir, "documents") {
         val (sk, _) = phashSketchWithTwins(s, dir)
         val n = graft.sources.Warehouse.docsStats(s, dir)._1 +
           PhashPlantCount
         phashIvfCells(sk, math.ceil(math.sqrt(n.toDouble)).toInt)
-      }.localCheckpoint(true)
-    }
-    val table = graft.sources.Warehouse.tableName("phash_ivf", dir, fp)
-    val assigned = Artifacts.cached(s, s"phash-ivf-index:$dir", fp) {
-      graft.sources.Warehouse.servedTable(
-        s, "phash_ivf", dir, fp,
-        bucket = Some(("cell", PhashIdxBuckets))) { name =>
-        val (sk, _) = phashSketchWithTwins(s, dir)
-        graft.sources.Sinks.writeBucketed(
-          phashIvfAssign(sk, cents)
-            .select(col("doc_id"), col("phash"), col("cell")),
-          name, "cell", PhashIdxBuckets)
-      }
-      s.table(table) // the persisted table IS the materialized artifact
-    }
+      }((_, _) => None).localCheckpoint(true))
+    // The persisted bucketed table IS the materialized artifact.
+    val assigned = Artifacts.store(s, "phash_ivf", dir, "documents",
+      bucket = Some(("cell", PhashIdxBuckets))) {
+      val (sk, _) = phashSketchWithTwins(s, dir)
+      phashIvfAssign(sk, cents)
+        .select(col("doc_id"), col("phash"), col("cell"))
+    }((_, _) => None)
     (cents, assigned)
   }
 
@@ -1245,14 +1234,6 @@ object Multimodal {
     phashIvfSearchFrom(probes, index, cents, k, nprobe)
   }
 
-  /** Build the shared hamming-IVF index (in-memory assignment AND the
-    * persisted bucketed table) NOW — Bench's explicit artifact-build
-    * row (the warmTrainedIndex accounting rule). */
-  def warmPhashIvfIndex(s: SparkSession, dir: String): Unit = {
-    phashIvfTableArtifacts(s, dir)
-    ()
-  }
-
   /** ONE (trained centroids, trained assignment) resolution per
     * (session, dir), warehouse-backed like the untrained pair
     * (round-17): the trained centroids persist as `phash_tr_cents` and
@@ -1266,100 +1247,60 @@ object Multimodal {
     * assignment is round 0's (identical centroids ⟹ identical argmin),
     * so training touches neither `documents` nor the sketch pipeline
     * again. */
-  private def phashIvfTrainedArtifacts(
+  private[graft] def phashIvfTrainedArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val fp = docsFp(s, dir)
     val n = graft.sources.Warehouse.docsStats(s, dir)._1
     // RETRAIN CYCLE (round-20): the Similarity.trainedIndexArtifacts
     // convention mirrored into hamming space — the trained centroid
-    // table records its trained-at count; a below-ratio growth step
-    // REUSES the quantizer (majority-vote training skipped) and the
-    // assignment index append-MERGES (delta sketches assigned at the
-    // fixed centroids — the sketch store's merge lane already decoded
-    // only the new part files); a past-ratio step retrains from the
-    // current untrained chain and declines the merge (cold reassign).
-    val centsTable = graft.sources.Warehouse.tableName(
-      "phash_tr_cents", dir, fp)
-    val cents = Artifacts.cached(s, s"phash-ivf-trained-cents:$dir", fp) {
-      val prior: Option[DataFrame] =
-        if (graft.sources.Warehouse.variantComplete(s, centsTable)) None
-        else graft.sources.Warehouse
-          .newestVariant(s, "phash_tr_cents", dir, excluding = centsTable)
-          .flatMap { case (pname, path) =>
-            val t = s.read.parquet(path)
-            if (!t.columns.contains("trained_n")) None // pre-cycle table
-            // Reuse requires the append-only witness too (round-21,
-            // ADVICE — the Similarity.trainedIndexArtifacts rule): a
-            // non-append rewrite within the count ratio must retrain.
-            else if (!graft.sources.Warehouse.appendOnlyFrom(
-              s, dir, "documents", pname)) None
-            else {
-              val eager = t.localCheckpoint(true) // GC deletes the files
-              val tn = eager.agg(max(col("trained_n"))).head().getLong(0)
-              if (n < Similarity.RetrainGrowthRatio * tn &&
-                  tn < Similarity.RetrainGrowthRatio * n) Some(eager)
-              else None
-            }
-          }
-      val listed = graft.sources.Warehouse.corpusFiles(s, dir, "documents")
-      val (cname, _) = graft.sources.Warehouse.servedTable(
-        s, "phash_tr_cents", dir, fp, bucket = None) { name =>
-        prior.getOrElse {
-          val (cents0, assigned0) = phashIvfArtifacts(s, dir)
-          phashMajorityCentroidsFrom(assigned0, cents0)
-            .withColumn("trained_n", lit(n))
-        }.write.mode("overwrite").format("parquet").saveAsTable(name)
-        graft.sources.Warehouse.writeStoreManifest(
-          s, dir, "documents", name, listed)
-      }
-      s.table(cname).localCheckpoint(true)
-    }
+    // store's merge lane is [[Similarity.reusedQuantizer]]: a
+    // below-ratio append REUSES the quantizer (majority-vote training
+    // skipped) and the assignment index append-MERGES (delta sketches
+    // assigned at the fixed centroids — the sketch store's merge lane
+    // already decoded only the new part files); a past-ratio step
+    // declines to the cold lane, which retrains from the current
+    // untrained chain and declines the index merge (cold reassign).
+    val cents = Artifacts.cached(s, s"phash-ivf-trained-cents:$dir", fp)(
+      Artifacts.store(s, "phash_tr_cents", dir, "documents") {
+        val (cents0, assigned0) = phashIvfArtifacts(s, dir)
+        phashMajorityCentroidsFrom(assigned0, cents0)
+          .withColumn("trained_n", lit(n))
+      }((old, _) => Similarity.reusedQuantizer(old, n)).localCheckpoint(true))
     val centsServe = cents.drop("trained_n")
     // Centroid-identity stamp (round-21, ADVICE medium) — the
     // Similarity.trainedIndexArtifacts rule in hamming space: index
     // rows record which training event assigned them; the merge lane
     // requires the recorded stamp to name the served cents.
     val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
-    val assigned = Artifacts.cached(s, s"phash-ivf-trained-idx:$dir", fp) {
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_ivf_tr", dir, "documents", fp,
-        bucket = Some(("cell", PhashIdxBuckets))) {
-        val (sk, _) = phashSketchWithTwins(s, dir)
-        phashIvfAssign(sk, centsServe)
-          .select(col("doc_id"), col("phash"), col("cell"))
-          .withColumn("cents_tn", lit(centsTn))
-      } { (old, delta) =>
-        // Merge only at FIXED centroids (reused quantizer). The delta's
-        // sketches come off the merged sketch store — no re-decode of
-        // settled payloads; delta docs have no planted twins (plants
-        // re-key doc_id < PhashPlantCount, settled by construction).
-        // The old index's stamp must name the served cents' training
-        // event (min AND max, one RLE-column pass) — decline otherwise.
-        val ct = s.table(centsTable)
-        if (!ct.columns.contains("trained_n")) None
-        else if (ct.agg(max(col("trained_n"))).head().getLong(0) == n) None
-        else if (!old.columns.contains("cents_tn")) None
+    val assigned = Artifacts.store(s, "phash_ivf_tr", dir, "documents",
+      bucket = Some(("cell", PhashIdxBuckets))) {
+      val (sk, _) = phashSketchWithTwins(s, dir)
+      phashIvfAssign(sk, centsServe)
+        .select(col("doc_id"), col("phash"), col("cell"))
+        .withColumn("cents_tn", lit(centsTn))
+    } { (old, delta) =>
+      // Merge only at FIXED centroids (reused quantizer). The delta's
+      // sketches come off the merged sketch store — no re-decode of
+      // settled payloads; delta docs have no planted twins (plants
+      // re-key doc_id < PhashPlantCount, settled by construction).
+      // The old index's stamp must name the served cents' training
+      // event (min AND max, one RLE-column pass) — decline otherwise.
+      if (centsTn == n) None
+      else if (!old.columns.contains("cents_tn")) None
+      else {
+        val w = old.agg(min(col("cents_tn")), max(col("cents_tn"))).head()
+        if (w.isNullAt(0) || w.getLong(0) != centsTn ||
+            w.getLong(1) != centsTn) None
         else {
-          val w = old.agg(min(col("cents_tn")), max(col("cents_tn"))).head()
-          if (w.isNullAt(0) || w.getLong(0) != centsTn ||
-              w.getLong(1) != centsTn) None
-          else {
-            val (sk, _) = phashSketchWithTwins(s, dir)
-            Some(old.unionByName(phashIvfAssign(
-              sk.join(delta.select(col("doc_id")), Seq("doc_id")), centsServe)
-              .select(col("doc_id"), col("phash"), col("cell"))
-              .withColumn("cents_tn", lit(centsTn))))
-          }
+          val (sk, _) = phashSketchWithTwins(s, dir)
+          Some(old.unionByName(phashIvfAssign(
+            sk.join(delta.select(col("doc_id")), Seq("doc_id")), centsServe)
+            .select(col("doc_id"), col("phash"), col("cell"))
+            .withColumn("cents_tn", lit(centsTn))))
         }
       }
     }
     (centsServe, assigned)
-  }
-
-  /** Train + assign now — Bench's explicit artifact-build row. */
-  def warmPhashIvfTrained(s: SparkSession, dir: String): Unit = {
-    phashIvfTrainedArtifacts(s, dir)
-    ()
   }
 
   /** The (trained centroid frame, trained index TABLE NAME) view of
@@ -1390,10 +1331,8 @@ object Multimodal {
     // round-17 — the knnBruteTruth twin): the exact pass is the
     // expensive audit input at lake scale; a warm process reads
     // probes×k rows.
-    val fp = docsFp(s, dir)
-    Artifacts.cached(s, s"phash-brute-truth:$dir", fp)(
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_truth", dir, "documents", fp) {
+    Artifacts.cached(s, s"phash-brute-truth:$dir", docsFp(s, dir))(
+      Artifacts.store(s, "phash_truth", dir, "documents") {
         val (sk, _) = phashSketchWithTwins(s, dir)
         val probes = sk.filter(col("doc_id") < PhashProbeCount)
           .select(col("doc_id").as("probe_id"),
@@ -1464,78 +1403,51 @@ object Multimodal {
   }
 
   /** ONE policy decision per CORPUS STATE (warehouse family
-    * `phash_policy`, round-17): dependencies resolve INSIDE the miss
-    * callback — servedFrame's by-name contract — so a warm process
+    * `phash_policy`, round-17): dependencies resolve INSIDE the cold
+    * lane — the store accessor's by-name contract — so a warm process
     * reads the one-row table and touches neither quantizer's
     * artifacts (Artifacts.cached is re-entrant by design; the old
     * hoisting convention predated that guarantee). */
-  private def phashIvfPolicyQuery(s: SparkSession, dir: String): DataFrame = {
-    val fp = docsFp(s, dir)
-    Artifacts.cached(s, s"phash-ivf-policy:$dir", fp)(
-      graft.sources.Warehouse.servedFrame(
-        s, "phash_policy", dir, fp) {
+  private def phashIvfPolicyQuery(s: SparkSession, dir: String): DataFrame =
+    Artifacts.cached(s, s"phash-ivf-policy:$dir", docsFp(s, dir))(
+      Artifacts.store(s, "phash_policy", dir, "documents") {
         val truth = phashBruteTruth(s, dir)
         val (cents, assigned) = phashIvfArtifacts(s, dir)
         val (tc, ta) = phashIvfTrainedArtifacts(s, dir)
         val firstK = phashIvfServe(assigned, cents, PhashProbeCount, PhashTopK)
         val trained = phashIvfServe(ta, tc, PhashProbeCount, PhashTopK)
         phashIvfPolicy(truth, firstK, trained)
-      }.localCheckpoint(true))
-  }
+      }((_, _) => None).localCheckpoint(true))
 
   /** The policy's selection, as the serving switch reads it. */
   def phashIvfSelectedQuantizer(s: SparkSession, dir: String): String =
     phashIvfPolicyQuery(s, dir).collect().head.getString(0)
 
-  /** Build the policy NOW (brute truth + decision + the WINNER's
-    * persisted table) — Bench's explicit artifact-build row, so
-    * policy-routed serving never pays a build inside the timed key. */
-  def warmPhashIvfPolicy(s: SparkSession, dir: String): Unit = {
-    phashIvfSelectedQuantizer(s, dir) match {
-      case "trained" => phashIvfTrainedTableArtifacts(s, dir)
-      case _ => phashIvfTableArtifacts(s, dir)
-    }
-    ()
-  }
-
   /** ONE image-CC labeling per (session, dir), like the text family's
     * ngram labels — connectedComponents materializes internally, so
     * the cached frame is already checkpointed. */
-  private def phashClusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val fp = docsFp(s, dir)
-    Artifacts.cached(s, s"phash-cc-labels:$dir", fp) {
-      // Warehouse lifecycle (the ngramClusterLabels rule): a hit skips
-      // the corpus decode AND the CC fixed point; deterministic builds
-      // make reuse == rebuild.
-      // APPEND-MERGE (round-19): [[Dedup.ccLabelsMerged]] star
-      // contraction; the pair frame re-derives from the MERGED sketch
-      // store (no decode either lane). DECLINES across a
-      // [[phashChunkWidth]] step — the candidate chunk-bucket rule is
-      // width-dependent, so settled pairs are growth-invariant only
-      // while the derived width holds (the sketch-twin convention).
-      graft.sources.Warehouse.servedFrameMerged(
-        s, "phash_cc", dir, "documents", fp)(
-        Dedup.connectedComponents(
-          phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")))
-      ) { (old, delta) =>
-        val n = graft.sources.Warehouse.docsStats(s, dir)._1
-        val deltaIds = delta.select(col("doc_id"))
-        if (phashWidthCrossed(n, deltaIds.count())) None
-        else Some(Dedup.ccLabelsMerged(old,
-          phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")),
-          deltaIds))
-      }
+  private[graft] def phashClusterLabels(s: SparkSession,
+                                        dir: String): DataFrame =
+    // Warehouse lifecycle (the ngramClusterLabels rule): a hit skips
+    // the corpus decode AND the CC fixed point; deterministic builds
+    // make reuse == rebuild.
+    // APPEND-MERGE (round-19): [[Dedup.ccLabelsMerged]] star
+    // contraction; the pair frame re-derives from the MERGED sketch
+    // store (no decode either lane). DECLINES across a
+    // [[phashChunkWidth]] step — the candidate chunk-bucket rule is
+    // width-dependent, so settled pairs are growth-invariant only
+    // while the derived width holds (the sketch-twin convention).
+    Artifacts.store(s, "phash_cc", dir, "documents")(
+      Dedup.connectedComponents(
+        phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")))
+    ) { (old, delta) =>
+      val n = graft.sources.Warehouse.docsStats(s, dir)._1
+      val deltaIds = delta.select(col("doc_id"))
+      if (phashWidthCrossed(n, deltaIds.count())) None
+      else Some(Dedup.ccLabelsMerged(old,
+        phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")),
+        deltaIds))
     }
-  }
-
-  /** Build the shared image-CC labeling NOW (Bench's explicit
-    * artifact-build pass — same accounting rule as the text family's
-    * warmClusterLabels: the build is its own timed row, so it can
-    * neither hide inside nor be retried out of the serving key). */
-  def warmPhashClusterLabels(s: SparkSession, dir: String): Unit = {
-    phashClusterLabels(s, dir)
-    ()
-  }
 
   val queries: Map[String, Q] = Map(
     // Metadata extraction by REAL header parsing over the staged binary

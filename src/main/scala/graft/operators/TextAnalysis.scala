@@ -1012,19 +1012,13 @@ object TextAnalysis {
     * (round-17), so a warm process registers + reads [[BpeMerges]]
     * rows where a cold one pays the sequential training rounds.
     * Deterministic training (spec-pinned) ⟹ reuse == rebuild. */
-  private def bpeMergesArtifact(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def bpeMergesArtifact(s: SparkSession,
+                                       dir: String): DataFrame = {
     val fp = graft.sources.Warehouse.docsFp(s, dir)
     Artifacts.cached(s, s"bpe-merges:$dir", fp)(
-      graft.sources.Warehouse.servedFrame(s, "bpe_merges", dir, fp)(
-        bpeTrain(Tables.documents(s, dir))).localCheckpoint(true))
-  }
-
-  /** Train the merge table NOW — Bench's explicit artifact-build row
-    * (~5.8 s at sf0.1: ten sequential vocab-sized rounds; a tokenizer
-    * trains once and every consumer serves the cached table). */
-  def warmBpeMerges(s: SparkSession, dir: String): Unit = {
-    bpeMergesArtifact(s, dir)
-    ()
+      Artifacts.store(s, "bpe_merges", dir, "documents")(
+        bpeTrain(Tables.documents(s, dir)))((_, _) => None)
+        .localCheckpoint(true))
   }
 
   /** APPLY the trained merges: per doc, symbolize every word and run

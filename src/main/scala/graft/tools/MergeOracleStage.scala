@@ -50,7 +50,7 @@ object MergeOracleStage {
     }
     val rows = graft.Bench.artifactBuilders :+ (("knn_truth",
       (s: org.apache.spark.sql.SparkSession, d: String) =>
-        graft.operators.Similarity.warmKnnTruth(s, d)))
+        { graft.operators.Similarity.knnBruteTruth(s, d); () }))
     for ((name, cold, grown, lanes) <-
            MergeStage.acrossAppend(spark, src, out, rows)(window)) {
       println(f"[mergeoracle] $name%-20s cold  $cold")

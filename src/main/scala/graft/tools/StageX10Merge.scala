@@ -25,6 +25,10 @@ object StageX10Merge {
     val out = args.lift(1).getOrElse("/tmp/sfx10r19")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = Prof.session()
+    def eventsStores(): Unit = {
+      graft.operators.Events.transDistStore(spark, out)
+      graft.operators.Events.userDayStore(spark, out)
+    }
     val clock = graft.Metrics.installTaskClock(spark.sparkContext)
     def window[T](name: String)(f: => T): T = {
       val (_, c0) = clock.snapshot(spark.sparkContext)
@@ -44,8 +48,7 @@ object StageX10Merge {
         .withColumn("user_id", col("user_id") + lit(c * Stress10.IdOff))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
-    window("events stores COLD (base)")(
-      graft.operators.Events.warmEventsStores(spark, out))
+    window("events stores COLD (base)")(eventsStores())
     // APPEND: the final copy re-keyed to copy-0 USER ids with ts
     // shifted past the corpus max — every base user's chain continues
     // across the store seam.
@@ -71,8 +74,7 @@ object StageX10Merge {
     println(s"[x10merge] appended same-user continuation slice")
     // Same session: the corpus snapshot keys the stats memo, so the
     // grown state's fingerprint is computed fresh.
-    window("events stores MERGE (+copy)")(
-      graft.operators.Events.warmEventsStores(spark, out))
+    window("events stores MERGE (+copy)")(eventsStores())
     // merged ≡ cold at ×10, engine-side: symmetric EXCEPT must be empty.
     def diffCount(a: org.apache.spark.sql.DataFrame,
                   b: org.apache.spark.sql.DataFrame): Long =

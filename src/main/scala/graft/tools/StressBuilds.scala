@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** ×N scale stress for the ARTIFACT BUILDERS (dev utility, SCALE.md
   * §x10-builds) — the [[Stress10]] companion the round-14 verdict
   * asked for: the builds are the dominant Bench cost, yet none of
@@ -22,10 +20,6 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.StressBuilds [srcDir] [outDir] [copies] [mode]
   */
 object StressBuilds {
-
-  /** The exact Bench `artifact_builds` list — one shared definition. */
-  def builders: Seq[(String, (SparkSession, String) => Unit)] =
-    graft.Bench.artifactBuilders
 
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -55,7 +49,7 @@ object StressBuilds {
     }
     println(f"[stress] ${"build"}%-22s ${"cpu"}%7s ${"xcpu"}%7s ${"cpuR"}%5s ${"run"}%7s ${"xrun"}%7s ${"shufMB"}%8s ${"xshufMB"}%8s ${"bR"}%5s ${"wall"}%6s ${"xwall"}%6s")
     var t1 = 0.0; var tN = 0.0
-    for ((name, build) <- builders
+    for ((name, build) <- graft.Bench.artifactBuilders
          if only.forall(_.contains(name))) {
       val (w1, r1, c1, b1) = window(build(spark, src))
       val (wN, rN, cN, bN) = window(build(spark, out))

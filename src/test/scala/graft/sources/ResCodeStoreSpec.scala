@@ -107,7 +107,7 @@ class ResCodeStoreSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     def resolveCents(): DataFrame = {
       val s2 = spark.newSession()
-      Similarity.warmTrainedIndex(s2, dir)
+      Similarity.trainedIndexArtifacts(s2, dir)
       spark.table(Warehouse.tableName(
         "ivf_cents", dir, Warehouse.embFp(s2, dir)))
     }
@@ -145,7 +145,7 @@ class ResCodeStoreSpec extends SparkSpec {
     def resolve(): (Map[String, String], DataFrame) = {
       val s2 = spark.newSession()
       Warehouse.drainLanes(s2)
-      graft.operators.Similarity.warmTrainedIndex(s2, dir)
+      graft.operators.Similarity.trainedIndexArtifacts(s2, dir)
       (Warehouse.drainLanes(s2), spark.table(Warehouse.tableName(
         "ivf_trained", dir, Warehouse.embFp(s2, dir))))
     }

@@ -1134,12 +1134,12 @@ class WarehouseSpec extends SparkSpec {
           java.nio.file.Paths.get(s"$dir/embeddings.parquet/${f.getName}")))
     }
     // Resolve via the PRODUCTION lifecycle in a fresh session (the
-    // new-ingest-process shape); return the lane
-    // the index took plus the published table names.
+    // new-ingest-process shape); return the lanes the centroid
+    // store and the index took plus the published table names.
     def resolve(): (Map[String, String], String, String) = {
       val s2 = spark.newSession()
       Warehouse.drainLanes(s2)
-      Similarity.warmTrainedIndex(s2, dir)
+      Similarity.trainedIndexArtifacts(s2, dir)
       val lanes = Warehouse.drainLanes(s2)
       (lanes, Warehouse.tableName("ivf_cents", dir, Warehouse.embFp(s2, dir)),
         Warehouse.tableName("ivf_trained", dir, Warehouse.embFp(s2, dir)))
@@ -1153,6 +1153,8 @@ class WarehouseSpec extends SparkSpec {
 
     val (l1, c1, i1) = resolve()
     assert(laneOf(l1, "ivf_trained").contains("cold"), s"first build: $l1")
+    assert(laneOf(l1, "ivf_cents").contains("cold"),
+      s"first build must train the quantizer on the cold lane: $l1")
     assert(trainedN(c1) == 100L && spark.table(c1).count() == 10L,
       "fresh train at n=100 must record trained_n=100 with K=10 centroids")
     // Below-ratio append: quantizer REUSED, index merged, full coverage.
@@ -1160,6 +1162,8 @@ class WarehouseSpec extends SparkSpec {
     val (l2, c2, i2) = resolve()
     assert(laneOf(l2, "ivf_trained").contains("merge"),
       s"below-ratio growth must take the index merge lane: $l2")
+    assert(laneOf(l2, "ivf_cents").contains("merge"),
+      s"below-ratio growth must carry the quantizer forward on the merge lane: $l2")
     assert(trainedN(c2) == 100L && spark.table(c2).count() == 10L,
       "reused quantizer must carry trained_n=100 forward (Lloyd skipped)")
     assert(spark.table(i2).count() == 110L,
@@ -1196,6 +1200,8 @@ class WarehouseSpec extends SparkSpec {
     val (l3, c3, i3) = resolve()
     assert(laneOf(l3, "ivf_trained").contains("cold"),
       s"past-ratio growth must decline the merge and reassign cold: $l3")
+    assert(laneOf(l3, "ivf_cents").contains("cold"),
+      s"past-ratio growth must decline the quantizer carry-forward: $l3")
     assert(trainedN(c3) == 140L && spark.table(c3).count() == 12L,
       "stale quantizer must retrain at n=140 with K=12")
     assert(spark.table(i3).count() == 140L)
@@ -1227,7 +1233,7 @@ class WarehouseSpec extends SparkSpec {
     def resolve(): (Map[String, String], String, String) = {
       val s2 = spark.newSession()
       Warehouse.drainLanes(s2)
-      Multimodal.warmPhashIvfTrained(s2, dir)
+      Multimodal.phashIvfTrainedArtifacts(s2, dir)
       val lanes = Warehouse.drainLanes(s2)
       (lanes, Warehouse.tableName("phash_tr_cents", dir, Warehouse.docsFp(s2, dir)),
         Warehouse.tableName("phash_ivf_tr", dir, Warehouse.docsFp(s2, dir)))
@@ -1238,12 +1244,15 @@ class WarehouseSpec extends SparkSpec {
       spark.table(c).agg(max(col("trained_n"))).head().getLong(0)
     val (l1, c1, i1) = resolve()
     assert(laneOf(l1, "phash_ivf_tr").contains("cold"), s"$l1")
+    assert(laneOf(l1, "phash_tr_cents").contains("cold"), s"$l1")
     assert(trainedN(c1) == 24L && spark.table(c1).count() == 6L)
     assert(spark.table(i1).count() == 27L, "24 docs + 3 planted twins")
     appendD(24L, 28L)
     val (l2, c2, i2) = resolve()
     assert(laneOf(l2, "phash_ivf_tr").contains("merge"),
       s"below-ratio growth must merge the trained phash index: $l2")
+    assert(laneOf(l2, "phash_tr_cents").contains("merge"),
+      s"below-ratio growth must carry the hamming quantizer forward: $l2")
     assert(trainedN(c2) == 24L && spark.table(c2).count() == 6L,
       "reused hamming quantizer must carry trained_n forward")
     assert(spark.table(i2).count() == 31L, "28 docs + 3 twins")
@@ -1251,6 +1260,8 @@ class WarehouseSpec extends SparkSpec {
     val (l3, c3, i3) = resolve()
     assert(laneOf(l3, "phash_ivf_tr").contains("cold"),
       s"past-ratio growth must retrain + reassign cold: $l3")
+    assert(laneOf(l3, "phash_tr_cents").contains("cold"),
+      s"past-ratio growth must retrain the hamming quantizer cold: $l3")
     assert(trainedN(c3) == 60L && spark.table(c3).count() == 8L,
       "stale hamming quantizer must retrain at n=60 with K=8")
     assert(spark.table(i3).count() == 63L)
@@ -1451,16 +1462,17 @@ class WarehouseSpec extends SparkSpec {
         .foreach(f => java.nio.file.Files.move(f.toPath,
           java.nio.file.Paths.get(s"$dir/$table.parquet/${f.getName}")))
     }
-    // Drive the PRODUCTION store resolutions (warmEmbPairs resolves
-    // emb_pairs + emb_cc; warmPhashClusterLabels resolves phash_sketch
-    // + phash_cc) in a FRESH session per corpus state — the
+    // Drive the PRODUCTION store resolutions (the `emb_pairs` build row
+    // resolves emb_pairs + emb_cc; the `phash_cc_labels` row resolves
+    // phash_sketch + phash_cc) in a FRESH session per corpus state — the
     // new-ingest-process shape — and
     // read which servedFrameMerged lane each family took.
     def lanesAfter(): Map[String, String] = {
       val s2 = spark.newSession()
       Warehouse.drainLanes(s2)
-      Dedup.warmEmbPairs(s2, dir)
-      Multimodal.warmPhashClusterLabels(s2, dir)
+      val rows = graft.Bench.artifactBuilders.toMap
+      rows("emb_pairs")(s2, dir)
+      rows("phash_cc_labels")(s2, dir)
       Warehouse.drainLanes(s2)
     }
     def laneOf(m: Map[String, String], fam: String): Option[String] =
@@ -1531,7 +1543,7 @@ class WarehouseSpec extends SparkSpec {
     def resolve(d: String): (Map[String, String], String,
                              org.apache.spark.sql.DataFrame) = {
       Warehouse.drainLanes(spark)
-      Curation.warmVerbatimArtifacts(spark, d)
+      graft.Bench.artifactBuilders.toMap.apply("verbatim_span_index")(spark, d)
       val lanes = Warehouse.drainLanes(spark)
         .map { case (k, v) => k.takeWhile(_ != '@') -> v }
       val fp = Warehouse.docsFp(spark, d)
