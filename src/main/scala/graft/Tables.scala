@@ -12,10 +12,17 @@ import org.apache.spark.sql.functions._
   * Scale note: at 100 TB these would be partitioned/bucketed external
   * tables; `spark.read.parquet(dir)` on a directory of files behaves
   * identically, so nothing here assumes a single file.
+  *
+  * Schema rule: a table's corpus snapshot (its file listing) memoizes
+  * its stats and its schema for the whole process
+  * (`sources.Warehouse.readParquet`). A read with a known snapshot
+  * runs no schema-inference job; only a table's first read in a
+  * process, or its first read after files were added or rewritten,
+  * infers. Every read is still a fresh relation.
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    sources.Warehouse.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

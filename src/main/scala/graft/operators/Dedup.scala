@@ -685,7 +685,9 @@ object Dedup {
       case Some(d) =>
         val path = s"$d/step-$step"; step += 1
         df.write.mode("overwrite").parquet(path)
-        (df.sparkSession.read.parquet(path), Some(path))
+        // Read back with the schema just written (all long columns):
+        // no footer-inference job per step.
+        (df.sparkSession.read.schema(df.schema).parquet(path), Some(path))
       case None => (df.localCheckpoint(true), None)
     }
     def release(df: DataFrame, path: Option[String]): Unit =

@@ -809,11 +809,11 @@ object Events {
   }
 
   /** The four event columns off a RAW parquet read of events part
-    * files — the merge lanes receive the delta as `spark.read.parquet`
-    * over the new files only, so they must apply [[Tables.events]]'s
-    * ts normalization themselves (TIMESTAMP(NANOS) reads as a long
-    * named `ts` under the nanosAsLong conf; TIMESTAMP(MICROS) converts
-    * exactly). */
+    * files — the merge lanes receive the delta as a parquet read of the
+    * new files only (with the corpus table's schema), so they must
+    * apply [[Tables.events]]'s ts normalization themselves
+    * (TIMESTAMP(NANOS) reads as a long named `ts` under the nanosAsLong
+    * conf; TIMESTAMP(MICROS) converts exactly). */
   private[graft] def rawEventCols(raw: DataFrame): DataFrame = {
     val tsNs = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => col("ts")

@@ -66,14 +66,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A final directory therefore either does not exist or is complete —
   * readers never observe a torn write.
   *
-  * CORPUS SNAPSHOT. One snapshot per (dir, table): a digest of the
-  * [[corpusFiles]] listing (name, length, mtime), the witness the merge
-  * lane already trusts. Corpus stats ([[countMax]]) memoize per
-  * snapshot for the whole process, and operators.Artifacts memoizes
-  * per (session, name, fingerprint) — the token the table name
-  * carries. A corpus that grows or is rewritten under a live session
-  * therefore moves both memos with it: fingerprint and data-derived
-  * knob always come from the same listing, in any session.
+  * CORPUS SNAPSHOT. One snapshot per parquet path: a digest of its
+  * canonical path and its file listing (name, length, mtime of the
+  * data files — the [[corpusFiles]] witness the merge lane already
+  * trusts — plus any `_metadata`/`_common_metadata` summary). A
+  * snapshot memoizes two things for the whole process: corpus stats
+  * ([[countMax]]) and the inferred schema ([[readParquet]], keyed also
+  * on the session's schema-conversion confs). A read with a known
+  * snapshot therefore runs no schema-inference job: only a path's
+  * first read in a process, or its first read after the listing
+  * moved, infers. operators.Artifacts memoizes per (session, name,
+  * fingerprint) — the token the table name carries. A corpus that
+  * grows or is rewritten under a live session therefore moves every
+  * memo with it: fingerprint, data-derived knob and schema always come
+  * from the same listing, in any session.
   *
   * CONTRACTS AND SCOPE (round-16 review):
   *
@@ -93,12 +99,13 @@ object Warehouse {
 
   /** 12-hex md5 of the CANONICAL real path — symlinks, `.`/`..`, and
     * trailing-slash spellings of one directory key identically. */
-  def dirDigest(dir: String): String = {
-    val canon =
-      try new java.io.File(dir).getCanonicalPath
-      catch { case _: java.io.IOException => dir }
-    md5Hex(canon).take(12)
-  }
+  def dirDigest(dir: String): String = md5Hex(canonical(dir)).take(12)
+
+  /** The canonical real path of `path`, or `path` itself when it
+    * cannot be resolved. */
+  private def canonical(path: String): String =
+    try new java.io.File(path).getCanonicalPath
+    catch { case _: java.io.IOException => path }
 
   /** 12-hex fingerprint token over (row count, max id[, on-disk
     * bytes]) — the cheap corpus-state stamp that keys a served index
@@ -139,18 +146,60 @@ object Warehouse {
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  /** Snapshot digest of `$dir/$table.parquet`: the canonical dir, the
-    * table and its [[corpusFiles]] listing — filesystem metadata only,
+  /** The parquet summary files schema inference reads before any data
+    * file. */
+  private val SummaryFiles = Set("_metadata", "_common_metadata")
+
+  /** Snapshot digest of the parquet `path`: its canonical path and its
+    * [[listing]] of data and summary files — filesystem metadata only,
     * no data scan. Two listings that differ in any file's name, length
     * or mtime are two snapshots. */
-  private def snapshot(s: SparkSession, dir: String, table: String): String =
-    md5Hex((Seq(dirDigest(dir), table) ++
-      corpusFiles(s, dir, table).toSeq.sorted.map { case (n, (l, m)) =>
-        s"$n\t$l\t$m" }).mkString("\n"))
+  private def snapshot(s: SparkSession, path: String): String =
+    md5Hex((canonical(path) +:
+      listing(s, path, n => isData(n) || SummaryFiles(n)).toSeq.sorted
+        .map { case (n, (l, m)) => s"$n\t$l\t$m" }).mkString("\n"))
 
   /** (token, snapshot) → (count, max id), process-wide. */
   private val stats =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+
+  /** The session parquet confs that change how a footer converts to a
+    * Spark schema, or which footers inference reads. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  /** (schema confs, snapshot) → inferred schema, process-wide. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.types.StructType]()
+
+  private def schemaKey(s: SparkSession, snap: String): String =
+    (SchemaConfs.map(c => s.conf.getOption(c).getOrElse("")) :+ snap)
+      .mkString("\u0001")
+
+  /** `spark.read.parquet(path)` with the schema inferred once per
+    * [[snapshot]] and session schema confs, for the whole process: a
+    * known snapshot reads with `spark.read.schema(memo)`, which runs no
+    * inference job. A miss infers exactly as a plain read does; if the
+    * listing moves while it infers, the schema is returned but not
+    * memoized (the [[countMax]] rule). Only the schema is memoized —
+    * every call returns a fresh relation with fresh expression ids, so
+    * two reads of one table self-join unambiguously. */
+  def readParquet(s: SparkSession, path: String): DataFrame = {
+    val snap = snapshot(s, path)
+    val key = schemaKey(s, snap)
+    val known = schemas.get(key)
+    if (known != null) s.read.schema(known).parquet(path)
+    else {
+      val df = s.read.parquet(path)
+      if (snapshot(s, path) == snap) schemas.putIfAbsent(key, df.schema)
+      df
+    }
+  }
 
   /** (count, max id) of `df`, a frame over `$dir/$table.parquet`,
     * memoized on (stat token, [[snapshot]]) for the whole process, so
@@ -160,7 +209,8 @@ object Warehouse {
     * memoized (the [[servedFrameMerged]] re-verify rule). */
   def countMax(s: SparkSession, token: String, dir: String, table: String,
                df: => DataFrame, idCol: String): (Long, Long) = {
-    val snap = snapshot(s, dir, table)
+    val path = s"$dir/$table.parquet"
+    val snap = snapshot(s, path)
     val hit = stats.get(s"$token@$snap")
     if (hit != null) hit
     else {
@@ -170,7 +220,7 @@ object Warehouse {
         org.apache.spark.sql.functions.max(
           org.apache.spark.sql.functions.col(idCol)).as("mx")).head()
       val v = (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-      if (snapshot(s, dir, table) == snap) stats.putIfAbsent(s"$token@$snap", v)
+      if (snapshot(s, path) == snap) stats.putIfAbsent(s"$token@$snap", v)
       v
     }
   }
@@ -385,14 +435,24 @@ object Warehouse {
     * never merge a store built from its stale bytes. */
   private[sources] def corpusFiles(s: SparkSession, dir: String,
                                    table: String)
+      : Map[String, (Long, Long)] =
+    listing(s, s"$dir/$table.parquet", isData)
+
+  /** A parquet scan reads every file not hidden by a `_`/`.` prefix. */
+  private def isData(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** (file name → (byte length, modification time)) of the files at
+    * `path` whose names pass `keep` — the file itself when `path` is a
+    * file, none when it does not exist. */
+  private def listing(s: SparkSession, path: String, keep: String => Boolean)
       : Map[String, (Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).iterator.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => st.getPath.getName -> (st.getLen, st.getModificationTime))
+    else fs.listStatus(p).iterator
+      .filter(st => st.isFile && keep(st.getPath.getName))
+      .map(st => st.getPath.getName -> (st.getLen, st.getModificationTime))
       .toMap
   }
 
@@ -469,9 +529,7 @@ object Warehouse {
                         fs: org.apache.hadoop.fs.FileSystem,
                         whRoot: org.apache.hadoop.fs.Path,
                         dir: String): Unit = synchronized {
-    val canon =
-      try new java.io.File(dir).getCanonicalPath
-      catch { case _: java.io.IOException => dir }
+    val canon = canonical(dir)
     val dig = dirDigest(dir)
     try {
       val cur = readDirRegistry(fs, whRoot)
@@ -557,21 +615,24 @@ object Warehouse {
       // can always re-produce the bytes (WarehouseSpec pins the
       // corrupt-directory case).
       try {
-        register(s, name, loc, bucket)
+        register(s, name, loc, bucket,
+          s.read.parquet(loc.toString).schema)
         logHit(s, family, dir, hit = true); (name, true)
       } catch { case _: Exception => rebuild() }
     } else rebuild()
   }
 
-  /** Register `name` EXTERNAL at its final location with the writer's
-    * bucket spec, so plan-time bucket pruning works exactly as on the
-    * writing JVM (AnnIndexSpec pins SelectedBucketsCount through this
-    * path). IF NOT EXISTS: under a same-session writer race both
-    * finishers register; the second is a no-op, not a failure. */
+  /** Register `name` EXTERNAL at its final location with `schema` and
+    * the writer's bucket spec, so plan-time bucket pruning works exactly
+    * as on the writing JVM (AnnIndexSpec pins SelectedBucketsCount
+    * through this path). IF NOT EXISTS: under a same-session writer
+    * race both finishers register; the second is a no-op, not a
+    * failure. */
   private def register(s: SparkSession, name: String,
                        loc: org.apache.hadoop.fs.Path,
-                       bucket: Option[(String, Int)]): Unit = {
-    val schemaDdl = s.read.parquet(loc.toString).schema.toDDL
+                       bucket: Option[(String, Int)],
+                       schema: org.apache.spark.sql.types.StructType): Unit = {
+    val schemaDdl = schema.toDDL
     val bucketDdl = bucket.map { case (c, n) =>
       s" CLUSTERED BY ($c) SORTED BY ($c) INTO $n BUCKETS" }.getOrElse("")
     s.sql(s"CREATE TABLE IF NOT EXISTS $name ($schemaDdl)" +
@@ -586,7 +647,15 @@ object Warehouse {
     * staging entry and bytes (the rename loser's cleanup — and a
     * failed build's), then register the final table. A rename loser
     * serves the concurrent winner's deterministic table (reuse ==
-    * rebuild). */
+    * rebuild).
+    *
+    * The rename winner registers with the staging table's catalog
+    * schema and seeds the [[readParquet]] memo with it, so neither the
+    * registration nor a later by-path read of the store (the merge
+    * lane's prior store) re-reads the footers it just wrote. Only a
+    * schema that footer inference would return verbatim qualifies
+    * ([[asInferred]]); anything else, and a rename loser, reads the
+    * footer. */
   private def publish(s: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                       whRoot: org.apache.hadoop.fs.Path, name: String,
                       bucket: Option[(String, Int)])
@@ -597,10 +666,15 @@ object Warehouse {
     val tmpName = name + "_tmp_" +
       java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val tmpLoc = new org.apache.hadoop.fs.Path(whRoot, tmpName)
-    try {
+    val staged = try {
       build(tmpName)
-      try { fs.rename(tmpLoc, loc); () }
-      catch { case _: java.io.IOException => () }
+      val schema =
+        if (s.catalog.tableExists(tmpName)) asInferred(s.table(tmpName).schema)
+        else None
+      val won =
+        try fs.rename(tmpLoc, loc)
+        catch { case _: java.io.IOException => false }
+      schema.filter(_ => won)
     } finally {
       // DROP of the managed tmp table also deletes its directory (the
       // winner's directory already moved, so its drop touches only the
@@ -608,7 +682,27 @@ object Warehouse {
       s.sql(s"DROP TABLE IF EXISTS $tmpName")
       if (fs.exists(tmpLoc)) { fs.delete(tmpLoc, true); () }
     }
-    register(s, name, loc, bucket)
+    register(s, name, loc, bucket,
+      staged.getOrElse(s.read.parquet(loc.toString).schema))
+    staged.foreach(schemas.putIfAbsent(
+      schemaKey(s, snapshot(s, loc.toString)), _))
+  }
+
+  /** `schema` if footer inference over files written with it returns it
+    * verbatim: a parquet relation's schema is nullable at every level,
+    * and registration's DDL keeps no field metadata. */
+  private def asInferred(schema: org.apache.spark.sql.types.StructType)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types._
+    def nullable(t: DataType): Boolean = t match {
+      case st: StructType => st.fields.forall(f => f.nullable && nullable(f.dataType))
+      case ArrayType(e, containsNull) => containsNull && nullable(e)
+      case MapType(k, v, valueContainsNull) =>
+        valueContainsNull && nullable(k) && nullable(v)
+      case _ => true
+    }
+    Some(schema).filter(st =>
+      nullable(st) && StructType.fromDDL(st.toDDL) == st)
   }
 
   /** Resolve-or-MERGE-or-build a warehouse frame — the ONE store
@@ -723,10 +817,13 @@ object Warehouse {
       val newFiles = (curFiles.keySet -- oldFiles.keySet).toSeq.sorted
       if (!appendOnly || newFiles.isEmpty) None
       else {
-        val oldStore = s.read.parquet(
+        // Both reads take a known schema: the prior store's from its
+        // snapshot memo (seeded by its publish), the delta's from the
+        // corpus table's — the schema the cold lane reads it with.
+        val oldStore = readParquet(s,
           new org.apache.hadoop.fs.Path(whRoot, oldName).toString)
-        val delta = s.read.parquet(
-          newFiles.map(f => s"$dir/$srcTable.parquet/$f"): _*)
+        val delta = s.read.schema(graft.Tables.t(s, dir, srcTable).schema)
+          .parquet(newFiles.map(f => s"$dir/$srcTable.parquet/$f"): _*)
         merge(oldStore, delta)
       }
     }

@@ -31,7 +31,7 @@ object MergeStage {
     * Returns the batch row count. */
   def append(s: SparkSession, dir: String, table: String, idCol: String,
              stride: Int = 20): Long = {
-    val cur = s.read.parquet(s"$dir/$table.parquet")
+    val cur = graft.Tables.t(s, dir, table)
     val mx = cur.agg(max(col(idCol))).head().getLong(0)
     var batch = cur.filter(col(idCol) % stride === 0)
       .withColumn(idCol, col(idCol) + mx + 1L)

@@ -24,7 +24,7 @@ object ProfBuilds {
     // Same untimed warmup as Bench: footer/codegen caches must not land
     // on the first build row.
     for (t <- Seq("documents", "embeddings", "events"))
-      spark.read.parquet(s"$dir/$t.parquet").count()
+      graft.Tables.t(spark, dir, t).count()
     spark.range(1000).selectExpr("id % 7 AS k", "id")
       .groupBy("k").count().count()
     val clock = graft.Metrics.installTaskClock(spark.sparkContext)

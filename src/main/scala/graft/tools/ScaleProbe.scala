@@ -47,7 +47,7 @@ object ScaleProbe {
       println(f"[probe] generated x10 spread replica in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     for (t <- Seq("events", "documents", "embeddings"))
-      spark.read.parquet(s"$out/$t.parquet").count()
+      graft.Tables.t(spark, out, t).count()
     val clock = graft.Metrics.installTaskClock(spark.sparkContext)
     val tw0 = System.nanoTime()
     for ((name, build) <- graft.Bench.artifactBuilders

@@ -42,7 +42,7 @@ object StageX10Merge {
     // stores have the merge lanes under test).
     Stress10.gen(spark, src, out, copies, "neardup")
     // Events BASE: copies 0..n-2, the standard id/user shift.
-    val srcEv = spark.read.parquet(s"$src/events.parquet")
+    val srcEv = graft.Tables.t(spark, src, "events")
     (0 until copies - 1).map { c =>
       srcEv.withColumn("event_id", col("event_id") + lit(c * Stress10.IdOff))
         .withColumn("user_id", col("user_id") + lit(c * Stress10.IdOff))

@@ -62,7 +62,7 @@ object Stress10 {
     def rep(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until n).map(c => shift(df, c)).reduce(_ unionByName _)
 
-    val ev = spark.read.parquet(s"$src/events.parquet")
+    val ev = Tables.t(spark, src, "events")
     rep(ev) { (df, c) =>
       df.withColumn("event_id", col("event_id") + lit(c * IdOff))
         .withColumn("user_id", col("user_id") + lit(c * IdOff))
@@ -109,7 +109,7 @@ object Stress10 {
     }
     // Footer/listing warm on both dirs so first-touch isn't billed.
     for (d <- Seq(src, out); t <- Seq("events", "documents", "embeddings"))
-      spark.read.parquet(s"$d/$t.parquet").count()
+      Tables.t(spark, d, t).count()
 
     def runKey(k: String, dir: String): (Double, Long, Long) = {
       val t0 = System.nanoTime()

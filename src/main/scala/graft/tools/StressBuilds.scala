@@ -37,7 +37,7 @@ object StressBuilds {
       println(f"[stress] generated x$copies $mode replica in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     for (d <- Seq(src, out); t <- Seq("events", "documents", "embeddings"))
-      spark.read.parquet(s"$d/$t.parquet").count()
+      graft.Tables.t(spark, d, t).count()
     val clock = graft.Metrics.installTaskClock(spark.sparkContext)
     def window(f: => Unit): (Double, Double, Double, Long) = {
       val (r0, c0, b0) = clock.snapshotFull(spark.sparkContext)

@@ -9,6 +9,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The ten tables of a fixture dir. */
+  val sfTables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** A private copy of [[sfDir]]'s tables in a fresh temp dir: paths
+    * and a dir digest no other suite has read or built. */
+  def sfCopy(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    for (t <- sfTables)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+        d.resolve(s"$t.parquet"))
+    d.toString
+  }
+
   /** Run `f` with the RocksDB state store provider set (required by
     * every transformWithState path), restoring the prior provider
     * after — the shared scaffold of all v2 streaming scenarios
@@ -22,6 +36,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+
+  /** The number of Spark jobs `f` starts on this thread, counted by a
+    * listener on a job group of its own (suites running beside it do
+    * not count). */
+  def jobsRun(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "jobs-" + java.util.UUID.randomUUID
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          n.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try f
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
   }
 }
 

@@ -139,6 +139,29 @@ class WarehouseSpec extends SparkSpec {
     assert(spark.table(name).count() == 2)
   }
 
+  test("publish registers every artifactBuilders store with its footer schema, and a by-path read of it runs no inference job") {
+    // A fresh digest: every row publishes cold.
+    val dir = sfCopy("whschema")
+    graft.Bench.artifactBuilders.foreach { case (_, build) => build(spark, dir) }
+    val whRoot = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val dig = Warehouse.dirDigest(dir)
+    val stores = spark.catalog.listTables().collect().map(_.name).toSeq
+      .filter(_.contains(s"_${dig}_")).sorted
+    assert(stores.size >= graft.Bench.artifactBuilders.size, stores)
+    def loc(n: String) = new org.apache.hadoop.fs.Path(whRoot, n).toString
+    var seeded = Map.empty[String, org.apache.spark.sql.types.StructType]
+    assert(jobsRun {
+      seeded = stores.map(n => n -> Warehouse.readParquet(spark, loc(n)).schema)
+        .toMap
+    } == 0, "a published store's by-path read must take the seeded schema")
+    for (n <- stores) {
+      val footer = spark.read.parquet(loc(n)).schema
+      assert(spark.table(n).schema == footer, s"$n: catalog != footer")
+      assert(seeded(n) == footer, s"$n: seeded schema != footer")
+    }
+  }
+
   test("servedTable: a mutated corpus (new fingerprint) rebuilds and GCs the stale variant") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("whmut").toString
