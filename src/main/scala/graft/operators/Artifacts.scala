@@ -19,14 +19,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * byte-identical to what each key derived on its own, so every oracle
   * hash is unchanged).
   *
-  * STORES: every single-table warehouse store resolves through ONE
-  * accessor, [[store]] — fingerprint of its source table, memo under
+  * STORES: every warehouse store resolves through ONE accessor,
+  * [[store]] — fingerprint of its source tables, memo under
   * `family@dir`, and `Warehouse.servedFrameMerged`'s hit / merge /
-  * cold lanes — so every store writes a source manifest and records
-  * the lane it took. [[cached]] stays for what is not a single store:
-  * derived views of a store (a localCheckpoint of a small table),
-  * session frames such as codebooks and centroids, and the funnel's
-  * multi-table stage set.
+  * cold lanes — so every store writes a source manifest with its
+  * data-derived knob and records the lane it took. [[cached]] stays
+  * for what is not a single store: derived views of a store (a
+  * localCheckpoint of a small table), session frames such as codebooks
+  * and centroids, and the funnel's stage set.
   *
   * Contract: `build` must return a value that is already MATERIALIZED
   * (localCheckpoint, a warehouse table, or equivalent) — the cache
@@ -78,21 +78,27 @@ object Artifacts {
   /** Resolve the warehouse store `family` of `dir` (header: STORES).
     * `src` names the corpus table the store is built from — documents,
     * embeddings or events — whose fingerprint keys both the memo and
-    * the table name. `merge` returns None to decline to the cold lane;
-    * a store with no merge lane passes `(_, _) => None`. Returns the
-    * served table. */
+    * the table name. A store read from several tables names them
+    * joined by `+` and keys on their combined fingerprint; no single
+    * table's append is its delta, and its manifest lists no file (no
+    * `documents+embeddings.parquet` exists), so it never merges.
+    * `knob` is the store's data-derived build parameter (0 when it has
+    * none): the lane merges only a prior store built at the same knob.
+    * `merge` returns None to decline to the cold lane; a store with no
+    * merge lane passes `(_, _) => None`. Returns the served table. */
   private[graft] def store(s: SparkSession, family: String, dir: String,
                            src: String,
-                           bucket: Option[(String, Int)] = None)
+                           bucket: Option[(String, Int)] = None,
+                           knob: => Long = 0L)
                           (cold: => DataFrame)
                           (merge: (DataFrame, DataFrame) => Option[DataFrame])
       : DataFrame = {
-    val fp = src match {
+    val fp = src.split('+').map {
       case "documents" => graft.sources.Warehouse.docsFp(s, dir)
       case "embeddings" => graft.sources.Warehouse.embFp(s, dir)
       case "events" => graft.sources.Warehouse.eventsFp(s, dir)
-    }
+    }.reduce(graft.sources.Warehouse.combineFp)
     cached(s, s"$family@$dir", fp)(graft.sources.Warehouse.servedFrameMerged(
-      s, family, dir, src, fp, bucket)(cold)(merge))
+      s, family, dir, src, fp, bucket, knob)(cold)(merge))
   }
 }

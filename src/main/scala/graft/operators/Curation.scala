@@ -202,15 +202,6 @@ object Curation {
       .filter(col("n_hit") > 0)
   }
 
-  /** TRUE ⟺ appending `batch` docs onto a corpus now counting `n`
-    * stepped the derived shingle width — THE decline predicate of the
-    * doc_shingles append-merge lane (the pqCodesBlockCrossed
-    * convention: ONE definition shared by the lane and its spec).
-    * Shingle keys are per-doc functions OF THE WIDTH; a width step
-    * makes every stored key stale ⟹ cold rebuild. */
-  def shingleWidthCrossed(n: Long, batch: Long): Boolean =
-    deriveShingleWidth(n - batch) != deriveShingleWidth(n)
-
   /** The PERSISTED DOC-SHINGLE STORE — the distinct (doc_id, sh_key)
     * frame of the WHOLE corpus at the derived width, keyed on the
     * documents fingerprint (round-22, the verdict's "shared shingle
@@ -228,19 +219,19 @@ object Curation {
     *
     * APPEND-MERGE: shingles are per-doc at fixed width, so the grown
     * store is old ∪ shingles(batch) — batch-linear — while the derived
-    * width holds; a [[deriveShingleWidth]] step DECLINES to cold
-    * (every stored key hashes width-token windows — the lsh_buckets
-    * convention, predicate [[shingleWidthCrossed]]). */
-  def docShingleStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.store(s, "doc_shingles", dir, "documents") {
-      val docs = Tables.documents(s, dir)
-      val n = graft.sources.Warehouse.docsStats(s, dir)._1
-      shingles(docs, deriveShingleWidth(n))
-    } { (old, batch) =>
-      val n = graft.sources.Warehouse.docsStats(s, dir)._1
-      if (shingleWidthCrossed(n, batch.count())) None
-      else Some(old.unionByName(shingles(batch, deriveShingleWidth(n))))
-    }
+    * width holds. The width is the store's knob: a [[deriveShingleWidth]]
+    * step rebuilds cold (every stored key hashes width-token windows —
+    * the lsh_buckets convention). */
+  def docShingleStore(s: SparkSession, dir: String): DataFrame = {
+    lazy val width = corpusShingleWidth(s, dir)
+    Artifacts.store(s, "doc_shingles", dir, "documents", knob = width)(
+      shingles(Tables.documents(s, dir), width))(
+      (old, batch) => Some(old.unionByName(shingles(batch, width))))
+  }
+
+  /** [[deriveShingleWidth]] at the documents count of `dir`. */
+  private def corpusShingleWidth(s: SparkSession, dir: String): Int =
+    deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
 
   /** The persisted eval-shingle INDEX: the distinct rolled shingle keys
     * of the eval slice, built ONCE at `width`. A production pipeline
@@ -571,33 +562,26 @@ object Curation {
       // rebuild the whole text pipeline when only the embeddings
       // moved. WarehouseSpec pins both sides: an embeddings-only
       // mutation misses fn_semdrops and hits fn_s1.
-      val mat: (String, () => DataFrame) => DataFrame = (family, build) => {
-        if (family == "fn_s1")
-          // The ONE merge-lane funnel stage (round-19): qualityGate is
-          // a per-row filter, so s1(old ∪ delta) ≡ s1(old) ∪ s1(delta)
-          // — an append pays a delta-sized regex pass instead of
-          // re-screening the corpus (and s1 is the funnel's only
-          // TEXT-carrying materialization, its costliest write). Every
-          // LATER stage declines by design: their drop sets carry
-          // corpus-global cross terms — the eval shingle index, the
-          // verbatim df cap, and the semantic cell count all re-derive
-          // from the FULL corpus, so a delta can re-flag SETTLED
-          // survivors — and computing those terms needs the settled
-          // corpus's shingles, which no stage table stores (SCALE.md
-          // §store-merge adjudications).
-          graft.sources.Warehouse.servedFrameMerged(
-            s, family, dir, "documents", docsFp)(build()) { (old, delta) =>
-            Some(old.unionByName(qualityGate(delta)))
-          }
-        else {
-          val fp = if (family == "fn_semdrops") semFp else docsFp
-          val (name, _) = graft.sources.Warehouse.servedTable(
-            s, family, dir, fp, bucket = None) { n =>
-            build().write.mode("overwrite").format("parquet").saveAsTable(n)
-          }
-          s.table(name)
+      //
+      // fn_s1 is the ONE merge-lane funnel stage (round-19):
+      // qualityGate is a per-row filter, so s1(old ∪ delta) ≡
+      // s1(old) ∪ s1(delta) — an append pays a delta-sized regex pass
+      // instead of re-screening the corpus (and s1 is the funnel's only
+      // TEXT-carrying materialization, its costliest write). Every
+      // LATER stage declines by design: their drop sets carry
+      // corpus-global cross terms — the eval shingle index, the
+      // verbatim df cap, and the semantic cell count all re-derive from
+      // the FULL corpus, so a delta can re-flag SETTLED survivors — and
+      // computing those terms needs the settled corpus's shingles,
+      // which no stage table stores (SCALE.md §store-merge
+      // adjudications).
+      val mat: (String, () => DataFrame) => DataFrame = (family, build) =>
+        Artifacts.store(s, family, dir,
+          if (family == "fn_semdrops") "documents+embeddings"
+          else "documents")(build()) { (old, delta) =>
+          if (family == "fn_s1") Some(old.unionByName(qualityGate(delta)))
+          else None
         }
-      }
       val (nDocs, _) = graft.sources.Warehouse.docsStats(s, dir)
       funnelFrames(Tables.documents(s, dir), Tables.embeddings(s, dir),
         mat, nInputHint = nDocs,
@@ -1245,13 +1229,11 @@ object Curation {
     *     (monotone: df only grows under append, so capped-out keys
     *     never return);
     *   - a capped-out marker just bumps its df.
-    * DECLINES across a [[deriveShingleWidth]] step (the key space
-    * itself changes — old rows are not the restriction of the new
-    * build; the derivePlanes convention). */
+    * Valid only at the width the old index was built at — the store's
+    * knob, so a [[deriveShingleWidth]] step never reaches here (the
+    * key space itself changes; the derivePlanes convention). */
   private[graft] def verbatimIndexMerged(width: Int)(
       old: DataFrame, deltaRaw: DataFrame): Option[DataFrame] = {
-    val wOld = old.select("w").limit(1).collect().headOption.map(_.getInt(0))
-    if (!wOld.contains(width)) return None
     val dsh = shinglesWithPos(
       deltaRaw.select(col("doc_id"), col("text")), width)
     val deltaDf = dsh.groupBy("sh_key")
@@ -1274,7 +1256,7 @@ object Curation {
     val keptTouched = old.filter(col("doc_id").isNotNull)
       .join(broadcast(underCap), Seq("sh_key"))
       .select(col("sh_key"), col("doc_id"), col("pos"),
-        col("dfn").as("df"), col("w"))
+        col("dfn").as("df"), lit(width).as("w"))
     val deltaPos = dsh.join(broadcast(underCap), Seq("sh_key"))
       .select(col("sh_key"), col("doc_id"), col("pos"),
         col("dfn").as("df"), lit(width).as("w"))
@@ -1292,8 +1274,8 @@ object Curation {
     * re-shingle the corpus; only the index's own cold build (first
     * contact or a declined merge) pays the shingle pass. */
   private def verbatimIndexArtifact(s: SparkSession, dir: String): DataFrame = {
-    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
-    Artifacts.store(s, "vb_index", dir, "documents")(
+    val width = corpusShingleWidth(s, dir)
+    Artifacts.store(s, "vb_index", dir, "documents", knob = width)(
       verbatimIndexStore(Tables.documents(s, dir), width))(
       verbatimIndexMerged(width))
   }
@@ -1310,21 +1292,22 @@ object Curation {
     * — so store-fed ≡ inline and the oracle's from-scratch replay is
     * unchanged. Append-merge: [[verbatimIndexMerged]] over the delta's
     * settled-slice rows (df additivity holds on any disjoint doc
-    * split); a width step declines inside the shared callback. */
+    * split); the width is the knob, as for vb_index. */
   private[graft] def vbIncIndexArtifact(s: SparkSession,
                                         dir: String): DataFrame = {
-    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
-    Artifacts.store(s, "vb_inc_idx", dir, "documents")(
+    lazy val width = corpusShingleWidth(s, dir)
+    Artifacts.store(s, "vb_inc_idx", dir, "documents", knob = width)(
       verbatimIndexStore(
         Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0), width))(
       (old, delta) => verbatimIndexMerged(width)(
         old, delta.filter(col("doc_id") % 5 =!= 0)))
   }
 
-  /** Crossed-THIS-STEP keys, recomputable without the superseded index
-    * variant: a marker in the NEW index whose pre-delta df
-    * (df − delta df) was at or under the cap must have crossed on this
-    * append. Small by construction (⊆ the delta's key set). */
+  /** Keys that crossed the cap THIS STEP, recomputable without the
+    * superseded index variant: a marker in the NEW index whose
+    * pre-delta df (df − delta df) was at or under the cap must have
+    * crossed on this append. Small by construction (⊆ the delta's key
+    * set). */
   private def crossedKeys(index: DataFrame, deltaDf: DataFrame): DataFrame =
     index.filter(col("doc_id").isNull)
       .join(broadcast(deltaDf), Seq("sh_key"))
@@ -1341,8 +1324,6 @@ object Curation {
   private[graft] def verbatimMatchesMerged(
       width: Int, index: DataFrame)(
       old: DataFrame, deltaRaw: DataFrame): Option[DataFrame] = {
-    val wOld = old.select("w").limit(1).collect().headOption.map(_.getInt(0))
-    if (!wOld.contains(width)) return None
     val dsh = shinglesWithPos(
       deltaRaw.select(col("doc_id"), col("text")), width)
     val deltaDf = dsh.groupBy("sh_key")
@@ -1367,13 +1348,13 @@ object Curation {
   }
 
   /** The persisted match frame, now BUILT FROM the index store (no
-    * re-shingle on any lane) with the append-merge wired. The `w`
-    * column is store-internal (the merge's width-step witness) — the
+    * re-shingle on any lane) with the append-merge wired; the width is
+    * the knob. The `w` column is store-internal (the build width) — the
     * accessor drops it, so every consumer sees the round-9 schema. */
   private def verbatimMatchesArtifact(s: SparkSession, dir: String): DataFrame = {
     val index = verbatimIndexArtifact(s, dir)
-    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
-    Artifacts.store(s, "vb_matches", dir, "documents")(
+    val width = corpusShingleWidth(s, dir)
+    Artifacts.store(s, "vb_matches", dir, "documents", knob = width)(
       verbatimMatchesFrom(index.filter(col("doc_id").isNotNull)
         .select("sh_key", "doc_id", "pos")).withColumn("w", lit(width)))(
       verbatimMatchesMerged(width, index)).drop("w")
@@ -1391,8 +1372,6 @@ object Curation {
   private[graft] def verbatimOffsetsMerged(
       width: Int, index: DataFrame, matches: DataFrame)(
       old: DataFrame, deltaRaw: DataFrame): Option[DataFrame] = {
-    val wOld = old.select("w").limit(1).collect().headOption.map(_.getInt(0))
-    if (!wOld.contains(width)) return None
     val dsh = shinglesWithPos(
       deltaRaw.select(col("doc_id"), col("text")), width)
     val deltaDf = dsh.groupBy("sh_key")
@@ -1416,7 +1395,8 @@ object Curation {
   }
 
   /** The persisted run offsets, BUILT FROM the matches table with the
-    * append-merge wired; `w` is store-internal, dropped here. */
+    * append-merge wired; the width is the knob, and `w` is
+    * store-internal, dropped here. */
   private[graft] def verbatimOffsetsArtifact(s: SparkSession,
                                              dir: String): DataFrame = {
     // Dependency artifacts resolved BEFORE the store (the
@@ -1424,8 +1404,8 @@ object Curation {
     // the nested-computeIfAbsent crash class structurally impossible).
     val index = verbatimIndexArtifact(s, dir)
     val matches = verbatimMatchesArtifact(s, dir)
-    val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
-    Artifacts.store(s, "vb_offsets", dir, "documents")(
+    val width = corpusShingleWidth(s, dir)
+    Artifacts.store(s, "vb_offsets", dir, "documents", knob = width)(
       verbatimOffsetsFrom(matches, width).withColumn("w", lit(width)))(
       verbatimOffsetsMerged(width, index, matches)).drop("w")
   }
@@ -2275,7 +2255,7 @@ object Curation {
       val docs = Tables.documents(s, dir)
       verbatimRemoveFrom(docs.select(col("doc_id"), col("text")),
         verbatimOffsetsArtifact(s, dir),
-        deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1))
+        corpusShingleWidth(s, dir))
         .orderBy("doc_id")
     }),
 
@@ -2292,7 +2272,7 @@ object Curation {
     // text) proves incremental == from-scratch.
     "q_verbatim_removal_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val width = deriveShingleWidth(graft.sources.Warehouse.docsStats(s, dir)._1)
+      val width = corpusShingleWidth(s, dir)
       val batch = docs.filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text"))
       // Store-fed (round-22): the settled slice's persisted index

@@ -1342,25 +1342,23 @@ object Dedup {
     * The capped serving twin reads it; `q_dedup_embedding` keeps the
     * inline derivation as the pair-machinery reference (the
     * q_dedup_ngram split). */
-  private[graft] def embPairStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.store(s, "emb_pairs", dir, "embeddings") {
+  private[graft] def embPairStore(s: SparkSession, dir: String): DataFrame = {
+    lazy val planes = Similarity.derivePlanes(Similarity.embCount(s, dir))
+    Artifacts.store(s, "emb_pairs", dir, "embeddings", knob = planes) {
       val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-      val n = Similarity.embCount(s, dir)
-      embeddingPairs(vectors, 0.35, Similarity.derivePlanes(n))
+      embeddingPairs(vectors, 0.35, planes)
     } { (old, batch) =>
       // Append-merge lane (round-18): valid ONLY while the
       // corpus-size-derived plane count holds across the growth step
       // — signatures are per-vector at fixed planes, so old×old
-      // collisions are growth-invariant; a plane-block boundary
-      // crossing DECLINES (cold rebuild), per the
-      // [[embeddingPairsTouching]] contract.
+      // collisions are growth-invariant; the plane count is the
+      // store's knob, so a plane-block boundary crossing rebuilds
+      // cold, per the [[embeddingPairsTouching]] contract.
       val vectors = Similarity.quantizedVectors(Tables.embeddings(s, dir))
-      val n = Similarity.embCount(s, dir)
-      if (Similarity.planeBlockCrossed(n, batch.count())) None
-      else Some(old.unionByName(embeddingPairsTouching(
-        vectors, batch.select(col("vec_id")), 0.35,
-        Similarity.derivePlanes(n))))
+      Some(old.unionByName(embeddingPairsTouching(
+        vectors, batch.select(col("vec_id")), 0.35, planes)))
     }
+  }
 
   /** The PERSISTED MinHash BAND INDEX — the artifact
     * [[minhashBandIndex]]'s doc has always named ("what a production
@@ -1421,25 +1419,22 @@ object Dedup {
     * (min-label CC is deterministic ⟹ reuse == rebuild). */
   private[graft] def embClusterLabels(s: SparkSession, dir: String): DataFrame =
     // APPEND-MERGE (round-19): [[ccLabelsMerged]] over the persisted
-    // pair store. DECLINES across a derivePlanes block boundary —
-    // the emb pair SET is candidate-generation-dependent (LSH
-    // buckets at the derived plane count), so settled pairs are
-    // growth-invariant only while the plane count holds: the exact
-    // condition the pair store's own merge declines on.
-    Artifacts.store(s, "emb_cc", dir, "embeddings")(
+    // pair store. The plane count is the knob — the emb pair SET is
+    // candidate-generation-dependent (LSH buckets at the derived plane
+    // count), so settled pairs are growth-invariant only while the
+    // plane count holds: the pair store's own knob.
+    Artifacts.store(s, "emb_cc", dir, "embeddings",
+      knob = Similarity.derivePlanes(Similarity.embCount(s, dir)))(
       connectedComponents(
         embPairStore(s, dir)
           .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
         .select(col("doc_id").as("vec_id"), col("cluster_rep"))
     ) { (old, delta) =>
-      val n = Similarity.embCount(s, dir)
-      val deltaIds = delta.select(col("vec_id"))
-      if (Similarity.planeBlockCrossed(n, deltaIds.count())) None
-      else Some(ccLabelsMerged(
+      Some(ccLabelsMerged(
         old.select(col("vec_id"), col("cluster_rep")),
         embPairStore(s, dir)
           .select(col("id_a").as("a"), col("id_b").as("b")),
-        deltaIds)
+        delta.select(col("vec_id")))
         .select(col("doc_id").as("vec_id"), col("cluster_rep")))
     }
 

@@ -484,15 +484,6 @@ object Multimodal {
   def phashChunkWidth(n: Long): Int =
     math.min(Dedup.deriveSimhashWidth(n), 15)
 
-  /** TRUE ⟺ appending `batch` docs onto a corpus now counting `n`
-    * stepped [[phashChunkWidth]] (both sides include the planted-twin
-    * rows the sketch table carries) — THE decline predicate of the
-    * phash_cc merge lane; ONE definition shared with the WarehouseSpec
-    * decline pin (round-20, ADVICE; the planeBlockCrossed twin). */
-  def phashWidthCrossed(n: Long, batch: Long): Boolean =
-    phashChunkWidth(n - batch + PhashPlantCount) !=
-      phashChunkWidth(n + PhashPlantCount)
-
   /** IMAGE near-dup via PERCEPTUAL HASH — the multimodal member of the
     * dedup family (training pipelines run exactly this over image
     * corpora: pHash/aHash sketch per image, hamming near-pairs merge).
@@ -1268,37 +1259,26 @@ object Multimodal {
       }((old, _) => Similarity.reusedQuantizer(old, n)).localCheckpoint(true))
     val centsServe = cents.drop("trained_n")
     // Centroid-identity stamp (round-21, ADVICE medium) — the
-    // Similarity.trainedIndexArtifacts rule in hamming space: index
-    // rows record which training event assigned them; the merge lane
-    // requires the recorded stamp to name the served cents.
-    val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
+    // Similarity.trainedIndexArtifacts rule in hamming space: the
+    // training event the index rows are assigned under is the index
+    // store's knob (and its `cents_tn` column).
+    lazy val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
     val assigned = Artifacts.store(s, "phash_ivf_tr", dir, "documents",
-      bucket = Some(("cell", PhashIdxBuckets))) {
+      bucket = Some(("cell", PhashIdxBuckets)), knob = centsTn) {
       val (sk, _) = phashSketchWithTwins(s, dir)
       phashIvfAssign(sk, centsServe)
         .select(col("doc_id"), col("phash"), col("cell"))
         .withColumn("cents_tn", lit(centsTn))
     } { (old, delta) =>
-      // Merge only at FIXED centroids (reused quantizer). The delta's
-      // sketches come off the merged sketch store — no re-decode of
-      // settled payloads; delta docs have no planted twins (plants
-      // re-key doc_id < PhashPlantCount, settled by construction).
-      // The old index's stamp must name the served cents' training
-      // event (min AND max, one RLE-column pass) — decline otherwise.
-      if (centsTn == n) None
-      else if (!old.columns.contains("cents_tn")) None
-      else {
-        val w = old.agg(min(col("cents_tn")), max(col("cents_tn"))).head()
-        if (w.isNullAt(0) || w.getLong(0) != centsTn ||
-            w.getLong(1) != centsTn) None
-        else {
-          val (sk, _) = phashSketchWithTwins(s, dir)
-          Some(old.unionByName(phashIvfAssign(
-            sk.join(delta.select(col("doc_id")), Seq("doc_id")), centsServe)
-            .select(col("doc_id"), col("phash"), col("cell"))
-            .withColumn("cents_tn", lit(centsTn))))
-        }
-      }
+      // At FIXED centroids (reused quantizer). The delta's sketches
+      // come off the merged sketch store — no re-decode of settled
+      // payloads; delta docs have no planted twins (plants re-key
+      // doc_id < PhashPlantCount, settled by construction).
+      val (sk, _) = phashSketchWithTwins(s, dir)
+      Some(old.unionByName(phashIvfAssign(
+        sk.join(delta.select(col("doc_id")), Seq("doc_id")), centsServe)
+        .select(col("doc_id"), col("phash"), col("cell"))
+        .withColumn("cents_tn", lit(centsTn))))
     }
     (centsServe, assigned)
   }
@@ -1433,20 +1413,20 @@ object Multimodal {
     // make reuse == rebuild.
     // APPEND-MERGE (round-19): [[Dedup.ccLabelsMerged]] star
     // contraction; the pair frame re-derives from the MERGED sketch
-    // store (no decode either lane). DECLINES across a
-    // [[phashChunkWidth]] step — the candidate chunk-bucket rule is
-    // width-dependent, so settled pairs are growth-invariant only
-    // while the derived width holds (the sketch-twin convention).
-    Artifacts.store(s, "phash_cc", dir, "documents")(
+    // store (no decode either lane). The knob is [[phashChunkWidth]]
+    // over the sketch table's rows (documents plus the planted twins)
+    // — the candidate chunk-bucket rule is width-dependent, so settled
+    // pairs are growth-invariant only while the derived width holds
+    // (the sketch-twin convention).
+    Artifacts.store(s, "phash_cc", dir, "documents",
+      knob = phashChunkWidth(
+        graft.sources.Warehouse.docsStats(s, dir)._1 + PhashPlantCount))(
       Dedup.connectedComponents(
         phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")))
     ) { (old, delta) =>
-      val n = graft.sources.Warehouse.docsStats(s, dir)._1
-      val deltaIds = delta.select(col("doc_id"))
-      if (phashWidthCrossed(n, deltaIds.count())) None
-      else Some(Dedup.ccLabelsMerged(old,
+      Some(Dedup.ccLabelsMerged(old,
         phashPairsQuery(s, dir).select(col("doc_a"), col("doc_b")),
-        deltaIds))
+        delta.select(col("doc_id"))))
     }
 
   val queries: Map[String, Q] = Map(

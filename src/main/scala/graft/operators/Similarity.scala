@@ -93,16 +93,6 @@ object Similarity {
   def derivePlanes(n: Long): Int =
     (1 to MaxPlanes).find(l => (1L << l) * TargetBucket >= n).getOrElse(MaxPlanes)
 
-  /** TRUE ⟺ appending `batch` vectors onto a corpus now counting `n`
-    * crossed a [[derivePlanes]] block boundary — THE decline predicate
-    * of every plane-knob append-merge lane (lsh_buckets, emb_pairs,
-    * emb_cc): old rows hash under the wrong planes past a crossing, so
-    * the lane rebuilds cold. ONE definition shared by the production
-    * callbacks and the WarehouseSpec decline pin (round-20, ADVICE), so
-    * the lanes and the spec can never drift. */
-  def planeBlockCrossed(n: Long, batch: Long): Boolean =
-    derivePlanes(n - batch) != derivePlanes(n)
-
   /** SQL twin of [[derivePlanes]]: same min-l scan, same integer
     * comparison, N taken from `count(*)` over `countFrom` at query time. */
   def planesParamsSql(countFrom: String): String = s"""
@@ -213,22 +203,19 @@ object Similarity {
     *
     * APPEND-MERGE: bucket rows are per-vector functions of the plane
     * set, so at a FIXED plane count the store merges by union of the
-    * delta's rows (the minhash_bands shape); the plane count is
-    * corpus-size-derived, so a growth step that crosses a
-    * [[derivePlanes]] block boundary DECLINES and rebuilds cold (the
-    * emb_pairs convention — old rows hash under the wrong planes). */
-  def lshBucketStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.store(s, "lsh_buckets", dir, "embeddings") {
-      val n = embCount(s, dir)
+    * delta's rows (the minhash_bands shape). The plane count is the
+    * store's knob: a growth step that crosses a [[derivePlanes]] block
+    * boundary rebuilds cold (old rows hash under the wrong planes). */
+  def lshBucketStore(s: SparkSession, dir: String): DataFrame = {
+    lazy val planes = derivePlanes(embCount(s, dir))
+    Artifacts.store(s, "lsh_buckets", dir, "embeddings", knob = planes) {
       bucketed(Tables.embeddings(s, dir)
-        .select(col("vec_id"), expr(quant).as("v")), derivePlanes(n))
+        .select(col("vec_id"), expr(quant).as("v")), planes)
     } { (old, batch) =>
-      val n = embCount(s, dir)
-      if (planeBlockCrossed(n, batch.count())) None
-      else Some(old.unionByName(bucketed(
-        batch.select(col("vec_id"), expr(quant).as("v")),
-        derivePlanes(n))))
+      Some(old.unionByName(bucketed(
+        batch.select(col("vec_id"), expr(quant).as("v")), planes)))
     }
+  }
 
   def lshTopK(vectors: DataFrame, probeFilter: Column, k: Int,
               planes: Int, probeBits: Int = ProbeBits): DataFrame = {
@@ -657,16 +644,6 @@ object Similarity {
   def derivePqCodes(n: Long): Int =
     (1 to 8).map(1 << _).find(k => k.toLong * k >= n).getOrElse(256)
 
-  /** TRUE ⟺ appending `batch` vectors onto a corpus now counting `n`
-    * stepped [[derivePqCodes]] — THE decline predicate of the pq_codes
-    * append-merge lane (the [[planeBlockCrossed]] convention: ONE
-    * definition shared by the lane and the WarehouseSpec pin). Codes
-    * are per-vector functions of the codebook; the first-K codebook is
-    * append-invariant at fixed K (ingest only adds larger vec_ids), so
-    * the K step is the only staleness source. */
-  def pqCodesBlockCrossed(n: Long, batch: Long): Boolean =
-    derivePqCodes(n - batch) != derivePqCodes(n)
-
   /** SQL twin of [[derivePqCodes]]: same min-l scan, same cap. The
     * `sfx` parameter (here and in the chain builders below) renames
     * every CTE so two tiers' chains can share one WITH — the
@@ -742,10 +719,6 @@ object Similarity {
       .groupBy(col("vec_id"), col("m"))
       .agg(min_by(col("k"), struct(col("key"), col("k"))).as("code"))
 
-  /** [[pqEncodeWith]] against the deterministic first-K codebook. */
-  def pqEncode(e: DataFrame, kCodes: Int): DataFrame =
-    pqEncodeWith(e, pqCodebook(e, kCodes))
-
   /** ADC top-k over PQ codes: probes keep exact subvectors, candidates
     * are their codes; approx dot = Σ_m lookup(probe, m, code). Codebook-
     * agnostic — the oracle-checked key passes the deterministic
@@ -790,43 +763,36 @@ object Similarity {
     * APPEND-MERGE: codes are per-vector functions of the codebook, and
     * the first-K codebook is append-invariant at fixed K (ingest only
     * adds larger vec_ids), so the grown store is old ∪ encode(delta) —
-    * batch-linear — while the derived K holds; a [[derivePqCodes]]
-    * step DECLINES and re-encodes cold (old codes index the wrong
-    * codebook — the lsh_buckets convention, predicate
-    * [[pqCodesBlockCrossed]]). */
-  def pqCodeStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.store(s, "pq_codes", dir, "embeddings") {
+    * batch-linear — while the derived K holds. K is the store's knob:
+    * a [[derivePqCodes]] step re-encodes cold (old codes index the
+    * wrong codebook — the lsh_buckets convention). */
+  def pqCodeStore(s: SparkSession, dir: String): DataFrame = {
+    lazy val kc = derivePqCodes(embCount(s, dir))
+    Artifacts.store(s, "pq_codes", dir, "embeddings", knob = kc) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      val n = embCount(s, dir)
-      pqEncodeWith(e, pqCodebook(e, derivePqCodes(n)))
+      pqEncodeWith(e, pqCodebook(e, kc))
     } { (old, batch) =>
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      val n = embCount(s, dir)
       // First-K append-invariance needs the batch to sit entirely
       // PAST the codebook prefix: an appended file carrying a
-      // vec_id < K changes the codebook while the K step check
-      // still passes — decline to cold (cheap: batch-sized agg).
-      if (pqCodesBlockCrossed(n, batch.count()) ||
-          batch.agg(min(col("vec_id"))).head().getLong(0)
-            < derivePqCodes(n).toLong) None
+      // vec_id < K changes the codebook while K holds — decline to
+      // cold (cheap: batch-sized agg).
+      if (batch.agg(min(col("vec_id"))).head().getLong(0) < kc.toLong) None
       else Some(old.unionByName(pqEncodeWith(
         batch.select(col("vec_id"), expr(quant).as("v")),
-        pqCodebook(e, derivePqCodes(n)))))
+        pqCodebook(e, kc))))
     }
+  }
 
-  /** TRUE ⟺ appending `batch` vectors onto a corpus now counting `n`
-    * stepped either derived knob of the residual chain — the coarse
-    * centroid count K = ⌈√N⌉ (the centroids are first-K, so a K step
-    * changes the centroid SET and with it every stored residual) or
-    * the PQ code count ([[derivePqCodes]]) — THE decline predicate of
-    * the res_codes append-merge lane (the [[pqCodesBlockCrossed]]
-    * convention: ONE definition shared by the lane and its spec). */
-  def resCodesBlockCrossed(n: Long, batch: Long): Boolean =
-    math.ceil(math.sqrt((n - batch).toDouble)).toInt !=
-      math.ceil(math.sqrt(n.toDouble)).toInt ||
-      pqCodesBlockCrossed(n, batch)
+  /** Both derived knobs of the residual chain as one value — the
+    * coarse centroid count K = ⌈√N⌉ (the centroids are first-K, so a K
+    * step changes the centroid SET and with it every stored residual)
+    * times 1000, plus the PQ code count ([[derivePqCodes]], ≤ 256):
+    * the res_codes store's knob, which steps when either K steps. */
+  def deriveResKnob(n: Long): Long =
+    math.ceil(math.sqrt(n.toDouble)).toLong * 1000 + derivePqCodes(n)
 
   /** The first-K RESIDUAL codebook computed from the corpus PREFIX
     * only: [[residualFrame]] is a row-wise map (broadcast-centroid
@@ -854,13 +820,14 @@ object Similarity {
     * codebook are append-invariant while neither derived K steps AND
     * the batch only adds vec_ids past both prefixes, so the grown
     * store is old ∪ residual-encode(delta at fixed centroids +
-    * codebook) — batch-linear. A K step (either knob) or a batch row
-    * inside a prefix DECLINES to cold: centroids or codewords moved,
-    * so every stored code indexes a stale table (the pq_codes
-    * convention, predicate [[resCodesBlockCrossed]] plus the min
-    * vec_id prefix guard). */
+    * codebook) — batch-linear. A K step (either K, the store's knob
+    * [[deriveResKnob]]) or a batch row inside a prefix rebuilds cold:
+    * centroids or codewords moved, so every stored code indexes a
+    * stale table (the pq_codes convention, plus the min vec_id prefix
+    * guard). */
   def resCodeStore(s: SparkSession, dir: String): DataFrame =
-    Artifacts.store(s, "res_codes", dir, "embeddings") {
+    Artifacts.store(s, "res_codes", dir, "embeddings",
+      knob = deriveResKnob(embCount(s, dir))) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
       val n = embCount(s, dir)
@@ -875,8 +842,7 @@ object Similarity {
       val n = embCount(s, dir)
       val kk = math.ceil(math.sqrt(n.toDouble)).toInt
       val kc = derivePqCodes(n)
-      if (resCodesBlockCrossed(n, batch.count()) ||
-          batch.agg(min(col("vec_id"))).head().getLong(0)
+      if (batch.agg(min(col("vec_id"))).head().getLong(0)
             < math.max(kk, kc).toLong) None
       else {
         val centroids = e.filter(col("vec_id") < kk)
@@ -962,24 +928,6 @@ object Similarity {
     pqTopKFromCodes(pqCodeStore(s, dir), e,
       pqCodebookArtifact(s, dir), nProbes, k)
 
-  /** IVF-PQ — the two quantizers COMPOSED, which is what production ANN
-    * systems actually deploy (FAISS's IVFPQ): the coarse quantizer
-    * restricts the search to the probe's cell (corpus/K candidates),
-    * and within the cell candidates are ranked by ADC over their PQ
-    * codes instead of their raw vectors — so the index stores
-    * (cell, M codes) per vector and the raw corpus never enters the
-    * query path at all. Index build co-locates cell + codes with one
-    * corpus-linear join (build-time, once); queries broadcast the
-    * probe's per-cell ADC lookup table and rank map-side. Both
-    * quantizers deterministic ⟹ oracle-exact; `q_knn_ivfpq_recall`
-    * measures the composed approximation against brute truth. */
-  def ivfPqTopK(e: DataFrame, kCentroids: Int, kCodes: Int,
-                nProbes: Int, k: Int, nprobe: Int = IvfNprobe): DataFrame = {
-    val centroids = e.filter(col("vec_id") < kCentroids)
-      .select(col("vec_id").as("cid"), col("v").as("c"))
-    ivfPqTopKWith(e, centroids, pqCodebook(e, kCodes), nProbes, k, nprobe)
-  }
-
   /** The IVF-PQ INDEX: (cand_id, cell, m, code) — the artifact a
     * production pipeline persists in place of the raw vectors (M bytes
     * + a cell id per vector). Built with one corpus-linear join of the
@@ -1000,7 +948,17 @@ object Similarity {
       .select(col("vec_id").as("cand_id"), col("cell"),
         col("m"), col("code").as("k"))
 
-  /** IVF-PQ search over arbitrary coarse centroids + PQ codebook —
+  /** IVF-PQ — the two quantizers COMPOSED, which is what production ANN
+    * systems actually deploy (FAISS's IVFPQ): the coarse quantizer
+    * restricts the search to the probe's cell (corpus/K candidates),
+    * and within the cell candidates are ranked by ADC over their PQ
+    * codes instead of their raw vectors — so the index stores
+    * (cell, M codes) per vector and the raw corpus never enters the
+    * query path at all. Index build co-locates cell + codes with one
+    * corpus-linear join (build-time, once); queries broadcast the
+    * probe's per-cell ADC lookup table and rank map-side.
+    *
+    * Search over arbitrary coarse centroids + PQ codebook —
     * deterministic first-K frames give the oracle-checked key; trained
     * ([[kmeansCentroids]] + [[kmeansPqCodebook]]) frames give the
     * production-quality composition (PipelineSpec). */
@@ -1281,39 +1239,29 @@ object Similarity {
         lloydCentroids(e, kk, corpusN = n).withColumn("trained_n", lit(n)))(
         (old, _) => reusedQuantizer(old, n)).localCheckpoint(true))
     val centsServe = cents.drop("trained_n")
-    // The centroid IDENTITY the index rows are assigned under — stamped
-    // into the index as the constant column `cents_tn` (round-21,
-    // ADVICE medium): trained_n names one training event, so an index
-    // whose stamp mismatches the served cents was assigned under a
-    // DIFFERENT quantizer (e.g. a retrain that published cents but died
-    // before the index published) and must never be merge-grown.
-    val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
+    // The centroid IDENTITY the index rows are assigned under — the
+    // index store's knob, also written as the constant column
+    // `cents_tn` (round-21, ADVICE medium): trained_n names one
+    // training event, so an index built at another stamp was assigned
+    // under a DIFFERENT quantizer (a fresh train at this corpus state,
+    // or a retrain that published cents but died before the index
+    // published) and the lane rebuilds it cold.
+    lazy val centsTn = cents.agg(max(col("trained_n"))).head().getLong(0)
     val table = graft.sources.Warehouse.tableName("ivf_trained", dir, fp)
     graft.operators.Artifacts.store(s, "ivf_trained", dir, "embeddings",
-      bucket = Some(("cell", TrainedIdxBuckets))) {
+      bucket = Some(("cell", TrainedIdxBuckets)), knob = centsTn) {
       assignCells(e, centsServe)
         .select(col("vec_id"), col("v"), col("cell"))
         .withColumn("cents_tn", lit(centsTn))
     } { (old, delta) =>
-      // Merge is valid ONLY at FIXED centroids: a reused quantizer
-      // keeps every settled assignment exact, so the index grows by
-      // assigning the delta alone. trained_n == n means THIS corpus
-      // state trained fresh — every centroid moved — decline → cold.
-      // The old index's recorded stamp must NAME the served cents'
-      // training event (min AND max witnessed, one RLE-column pass):
-      // any mismatch means mixed or foreign centroids — decline.
-      if (centsTn == n) None
-      else if (!old.columns.contains("cents_tn")) None
-      else {
-        val w = old.agg(min(col("cents_tn")), max(col("cents_tn"))).head()
-        if (w.isNullAt(0) || w.getLong(0) != centsTn ||
-            w.getLong(1) != centsTn) None
-        else Some(old.unionByName(
-          assignCells(delta.select(col("vec_id"), expr(quant).as("v")),
-            centsServe)
-            .select(col("vec_id"), col("v"), col("cell"))
-            .withColumn("cents_tn", lit(centsTn))))
-      }
+      // At FIXED centroids a reused quantizer keeps every settled
+      // assignment exact, so the index grows by assigning the delta
+      // alone.
+      Some(old.unionByName(
+        assignCells(delta.select(col("vec_id"), expr(quant).as("v")),
+          centsServe)
+          .select(col("vec_id"), col("v"), col("cell"))
+          .withColumn("cents_tn", lit(centsTn))))
     }
     (centsServe, table)
   }

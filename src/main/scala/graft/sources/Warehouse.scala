@@ -6,13 +6,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * artifacts (trained ANN indexes, centroid tables) — the round-15
   * judge items made code.
   *
-  * ONE ACCESSOR: every single-table store resolves through
+  * ONE ACCESSOR: every store resolves through
   * `operators.Artifacts.store`, which derives the source fingerprint,
   * memoizes the served frame and takes [[servedFrameMerged]]'s lanes —
   * hit, merge (or a declined merge) or cold. Every store therefore
-  * writes a source manifest and records its lane ([[drainLanes]]). Only
-  * the funnel's per-stage tables, whose semantic stage keys on two
-  * source tables, call [[servedFrameMerged]]/[[servedTable]] directly.
+  * writes a source manifest and records its lane ([[drainLanes]]). The
+  * manifest also records the store's DATA-DERIVED KNOB (plane count,
+  * shingle width, code count, centroid stamp — a build parameter the
+  * corpus decides), and the lane merges only a prior store built at
+  * the same knob: a knob step is a cold rebuild, decided once here
+  * instead of inside each merge callback.
   *
   *   1. KEYING. Table names were `graft_<family>_<dir.hashCode hex>`:
   *      a 32-bit hash over the RAW dir string, so `/x/sf0.1` vs a
@@ -343,10 +346,11 @@ object Warehouse {
   }
 
   /** (session, family@digest) → which [[servedFrameMerged]] lane the
-    * LAST resolution took: "hit" (current-fp table already on disk),
-    * "merge" (append-merge published), or "cold" (full rebuild — no
-    * prior variant, a non-append mutation, a declined merge, or a
-    * failed merge's fallback). Test-facing (round-20, ADVICE): lets
+    * LAST resolution took: "hit" (a complete current-fp table served
+    * without a build — the hit log's hit), "merge" (append-merge
+    * published), or "cold" (full rebuild — no prior variant, a
+    * non-append mutation, a knob step, a declined merge, a failed
+    * merge's fallback, or a corrupt current-fp directory). Test-facing (round-20, ADVICE): lets
     * WarehouseSpec drive the PRODUCTION store callbacks end-to-end and
     * assert a knob-step decline rebuilt cold, without replicating the
     * callbacks spec-side. */
@@ -374,8 +378,8 @@ object Warehouse {
     // (the append-merge seam state) — a v1 distribution-only table
     // must miss, and the merge lane must never union against one.
     // vb_matches/vb_offsets v2 (round-19): the stores gained the
-    // width-witness column `w` (accessor-stripped) — a v1 table
-    // without it would throw inside the merge callbacks' width check.
+    // width column `w` (accessor-stripped) — a v1 table without it
+    // must never be merge-grown into one with it.
     // ivf_trained/phash_ivf_tr v2 (round-21, ADVICE): the assignment
     // indexes gained the centroid-identity stamp column `cents_tn` —
     // the merge lane must never union a pre-stamp index (assigned
@@ -416,13 +420,16 @@ object Warehouse {
   private[sources] val ManifestFile = "_graft_src_manifest"
 
   /** Reserved manifest key carrying the BUILDER VERSION the store was
-    * written by ("_"-prefixed names never appear in [[corpusFiles]], so
-    * it cannot collide with a data file). The merge lane requires the
-    * prior variant's recorded version to EQUAL the current
-    * [[BuilderVersion]] — after a version bump an append-time
+    * written by and its DATA-DERIVED KNOB, as the line's two number
+    * slots ("_"-prefixed names never appear in [[corpusFiles]], so it
+    * cannot collide with a data file). The merge lane requires both to
+    * EQUAL the current values: after a version bump an append-time
     * resolution must rebuild cold, never union old-algorithm rows with
     * new-algorithm delta rows (the self-protecting form of the "bump
-    * AND make the merge decline" convention). */
+    * AND make the merge decline" convention), and after a knob step
+    * the old rows are no longer the restriction of the cold rebuild.
+    * Manifests written before the knob slot was filled carry 0 there,
+    * the knob of a store that has none. */
   private[sources] val ManifestVersionKey = "__builder_version"
 
   /** (file name → (byte length, modification time)) of
@@ -565,8 +572,10 @@ object Warehouse {
     * write the table (saveAsTable via [[Sinks.writeBucketed]] or a
     * plain bucketless write — pass `bucket` to match, it becomes the
     * re-registration DDL's CLUSTERED BY spec). */
-  def servedTable(s: SparkSession, family: String, dir: String, fp: String,
-                  bucket: Option[(String, Int)])(build: String => Unit)
+  private[sources] def servedTable(s: SparkSession, family: String,
+                                   dir: String, fp: String,
+                                   bucket: Option[(String, Int)])
+                                  (build: String => Unit)
       : (String, Boolean) =
     servedTableAt(s, family, dir, fp, BuilderVersion(family), bucket)(build)
 
@@ -725,44 +734,53 @@ object Warehouse {
     *      fingerprint name through the same atomic tmp+rename commit.
     *      The prior variant GCs AFTER the publish (it is the merge's
     *      own lazy input — the [[gcStaleVariants]] ordering note).
-    *   3. fp MISS otherwise (first build, non-append mutation, merge
-    *      declined) → cold build through [[servedTable]].
+    *   3. fp MISS otherwise (first build, non-append mutation, a
+    *      prior store built at another `knob`, merge declined) → cold
+    *      build through [[servedTable]].
     *
-    * `merge` returns None to DECLINE (fall back to cold) when the
-    * incremental identity does not hold for this growth step — e.g. a
-    * corpus-size-derived knob (LSH plane count) stepped across its
-    * block boundary, so old-store rows are no longer the restriction
-    * of the cold rebuild; a store with no merge lane declines always.
-    * A merge may also return the prior store UNCHANGED (the trained
-    * quantizers' carry-forward). Every path writes the CURRENT source
-    * manifest into the published table, so the next append can merge
-    * again (merges chain).
+    * `knob` is the store's data-derived build parameter at the current
+    * corpus state (0 for a store without one), evaluated only when a
+    * manifest is read or written. A prior store recorded at another
+    * knob is no merge candidate: a knob step (the LSH plane count
+    * crossing a block boundary, a shingle width step, a retrained
+    * quantizer) makes its rows stale, so the lane rebuilds cold and the
+    * callback never sees it. `merge` returns None to DECLINE (fall back
+    * to cold) for any other growth step the incremental identity does
+    * not cover; a store with no merge lane declines always. A merge may
+    * also return the prior store UNCHANGED (the trained quantizers'
+    * carry-forward). Every path writes the CURRENT source manifest and
+    * knob into the published table, so the next append can merge again
+    * (merges chain).
     *
     * CORRECTNESS CONTRACT (what makes merge == cold rebuild): the
     * caller's builder must be PER-ROW-GROUP decomposable over the
     * corpus — old rows' contribution independent of the batch (per-doc
     * sketches/chunks/bands are trivially so; pair stores via the
     * batch-touching slice whose union with old-state pairs is the full
-    * new-state pair set). WarehouseSpec pins merged ≡ cold bit for bit
-    * on both shapes; a family whose builder loses this property must
-    * bump [[BuilderVersion]] AND make its merge decline. Both the merge
+    * new-state pair set) AT A FIXED KNOB — a build parameter the corpus
+    * derives is passed as `knob`, never re-checked in the callback.
+    * WarehouseSpec pins merged ≡ cold bit for bit on both shapes; a
+    * family whose builder loses this property must bump
+    * [[BuilderVersion]] AND make its merge decline. Both the merge
     * and the cold lane log a warehouse MISS (either pays a build —
     * the ledger adjudicates against build cost, and the merge's
     * whole point is that its build is cheap). */
   def servedFrameMerged(s: SparkSession, family: String, dir: String,
                         srcTable: String, fp: String,
-                        bucket: Option[(String, Int)] = None)
+                        bucket: Option[(String, Int)] = None,
+                        knob: => Long = 0L)
                        (cold: => DataFrame)
                        (merge: (DataFrame, DataFrame) => Option[DataFrame])
       : DataFrame = {
     val name = tableName(family, dir, fp)
     val (whRoot, fs) = root(s)
     val loc = new org.apache.hadoop.fs.Path(whRoot, name)
-    val ver = BuilderVersion(family)
+    // The manifest stamp: builder version and data-derived knob.
+    lazy val stamp = (BuilderVersion(family).toLong, knob)
     val curFiles = corpusFiles(s, dir, srcTable)
     // `frame` BY-NAME: the hit path hands `cold` through here and must
     // never construct — let alone execute — the build chain. The
-    // manifest records the source files PLUS the builder version.
+    // manifest records the source files PLUS the stamp.
     // LISTING RE-VERIFY (round-19 review): the build executes LAZILY
     // against the live directory, after `curFiles` was listed — a part
     // file landing in between is read by the build yet absent from the
@@ -779,32 +797,35 @@ object Warehouse {
       }
       if (corpusFiles(s, dir, srcTable) == curFiles)
         writeManifest(fs, new org.apache.hadoop.fs.Path(whRoot, n),
-          curFiles + (ManifestVersionKey -> (ver.toLong, 0L)))
+          curFiles + (ManifestVersionKey -> stamp))
     }
+    // servedTable's full rebuild discipline (its early GC is safe here:
+    // the cold frame reads only the corpus). The lane is what
+    // servedTable did: a complete table it registered back or a racing
+    // writer published is a hit, a rebuild — also of a corrupt
+    // directory — is cold.
     def coldLane(): DataFrame = {
-      // servedTable's full rebuild discipline (its early GC is safe
-      // here: the cold frame reads only the corpus).
-      val (served, _) = servedTable(s, family, dir, fp, bucket = bucket)(
+      val (served, hit) = servedTable(s, family, dir, fp, bucket = bucket)(
         buildWithManifest(cold))
+      logLane(s, family, dir, if (hit) "hit" else "cold")
       s.table(served)
     }
-    if (fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
-      // Current-fingerprint table already on disk: the hit path is
-      // servedTable's verbatim (register-back, corrupt-dir fallback,
-      // immediate stale-variant GC — nothing lazily reads a variant).
-      logLane(s, family, dir, "hit")
+    // Current-fingerprint table already on disk: the hit path is
+    // servedTable's verbatim (register-back, corrupt-dir fallback,
+    // immediate stale-variant GC — nothing lazily reads a variant).
+    if (fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS")))
       return coldLane()
-    }
     // MISS. Newest complete prior-fingerprint variant carrying a
-    // source manifest WRITTEN BY THE SAME BUILDER VERSION — the merge
-    // candidate. A version-bumped process must not merge against a
-    // pre-bump store (old-algorithm rows unioned under the bumped
-    // name would be exactly the stale artifact the bump prevents).
+    // source manifest WRITTEN AT THE SAME STAMP — the merge candidate.
+    // A version-bumped process must not merge against a pre-bump store
+    // (old-algorithm rows unioned under the bumped name would be
+    // exactly the stale artifact the bump prevents), nor a store built
+    // at another knob.
     val prior: Option[(String, Map[String, (Long, Long)])] =
       completeVariants(fs, whRoot, family, dir, excluding = name).iterator
         .flatMap(st => readManifest(fs, st.getPath)
           .map(m => st.getPath.getName -> m))
-        .filter(_._2.get(ManifestVersionKey).map(_._1).contains(ver.toLong))
+        .filter(_._2.get(ManifestVersionKey).contains(stamp))
         .nextOption()
     val merged: Option[DataFrame] = prior.flatMap { case (oldName, oldMan) =>
       val oldFiles = oldMan - ManifestVersionKey
@@ -828,9 +849,7 @@ object Warehouse {
       }
     }
     merged match {
-      case None =>
-        logLane(s, family, dir, "cold")
-        coldLane()
+      case None => coldLane()
       case Some(frame) =>
         // Merge lane: publish FIRST (tmp+rename, the servedTable
         // commit), GC the superseded variant AFTER — the frame lazily
@@ -856,7 +875,6 @@ object Warehouse {
             // servedTable hits it if the race published under our name).
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"merge lane for $name failed (${e.getMessage}); rebuilding cold")
-            logLane(s, family, dir, "cold")
             coldLane()
         }
     }

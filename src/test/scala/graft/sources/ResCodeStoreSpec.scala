@@ -44,12 +44,12 @@ class ResCodeStoreSpec extends SparkSpec {
   }
 
   test("res_codes append-merge: delta-only residual encode at fixed quantizers; a derived-K step (either knob) declines to cold") {
-    // Shared predicate at the fixture counts (ONE definition with the
-    // production lane): 40 base → ceil(√40)=7 cells, 8 codes;
+    // The store's knob at the fixture counts (the lane compares the
+    // same function's values): 40 base → ceil(√40)=7 cells, 8 codes;
     // +8 → 48 keeps both (ceil(√48)=7, 64 ≥ 48); +80 → 128 steps both
     // (ceil(√128)=12, codes → 16).
-    assert(!Similarity.resCodesBlockCrossed(48L, 8L))
-    assert(Similarity.resCodesBlockCrossed(128L, 80L))
+    assert(Similarity.deriveResKnob(48L) == Similarity.deriveResKnob(40L))
+    assert(Similarity.deriveResKnob(128L) != Similarity.deriveResKnob(48L))
     val dir = java.nio.file.Files.createTempDirectory("rescodes").toString
     val esrc = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
       .orderBy(col("vec_id")).limit(128).localCheckpoint(true)

@@ -15,6 +15,22 @@ class WarehouseSpec extends SparkSpec {
   private def hitOf(m: Map[String, Boolean], fam: String): Option[Boolean] =
     m.collectFirst { case (k, v) if k.takeWhile(_ != '@') == fam => v }
 
+  /** Fabricate the crash state at (family, dir, fp)'s table: a
+    * directory with the completeness marker but unreadable parquet
+    * bytes (torn files on a bad disk). */
+  private def corruptTable(family: String, dir: String, fp: String): Unit = {
+    val whRoot = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = whRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val loc = new org.apache.hadoop.fs.Path(
+      whRoot, Warehouse.tableName(family, dir, fp))
+    fs.mkdirs(loc)
+    fs.create(new org.apache.hadoop.fs.Path(loc, "_SUCCESS")).close()
+    val bad = fs.create(new org.apache.hadoop.fs.Path(
+      loc, "part-00000.parquet"))
+    bad.write("not parquet".getBytes("UTF-8")); bad.close()
+  }
+
   test("dirDigest: symlink, trailing slash, and dot spellings of one dir key identically") {
     val real = java.nio.file.Paths.get(sfDir).toRealPath()
     val link = java.nio.file.Files.createTempDirectory("whlink")
@@ -117,18 +133,7 @@ class WarehouseSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("whcor").toString
     val fp = Warehouse.fpToken(2L, 1L)
-    // Fabricate the crash state: a directory with the completeness
-    // marker but unreadable parquet bytes (torn files on a bad disk).
-    val whRoot = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = whRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val loc = new org.apache.hadoop.fs.Path(
-      whRoot, Warehouse.tableName("whcorf", dir, fp))
-    fs.mkdirs(loc)
-    fs.create(new org.apache.hadoop.fs.Path(loc, "_SUCCESS")).close()
-    val bad = fs.create(new org.apache.hadoop.fs.Path(
-      loc, "part-00000.parquet"))
-    bad.write("not parquet".getBytes("UTF-8")); bad.close()
+    corruptTable("whcorf", dir, fp)
     var built = false
     val (name, hit) = Warehouse.servedTable(
       spark, "whcorf", dir, fp, bucket = Some(("k", 4))) { n =>
@@ -137,6 +142,24 @@ class WarehouseSpec extends SparkSpec {
     }
     assert(!hit && built, "corrupt directory must fall through to a rebuild")
     assert(spark.table(name).count() == 2)
+  }
+
+  test("servedFrameMerged: a corrupted _SUCCESS directory is lane cold and a miss, the lane and hit logs agree") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("whcorl").toString
+    Seq((0L, "web", "alpha beta")).toDF("doc_id", "source", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val fp = Warehouse.fpToken(1L, 0L)
+    corruptTable("whcorl", dir, fp)
+    val s2 = spark.newSession()
+    Warehouse.drainLanes(s2); Warehouse.drainHits(s2)
+    val served = Warehouse.servedFrameMerged(s2, "whcorl", dir, "documents", fp)(
+      Seq((0L, 7L), (1L, 7L)).toDF("k", "v"))((_, _) => None)
+    assert(served.count() == 2, "the corrupt directory must be rebuilt")
+    val lanes = Warehouse.drainLanes(s2)
+    assert(lanes.collectFirst { case (k, v) if k.startsWith("whcorl@") => v }
+      .contains("cold"), s"a rebuild is the cold lane: $lanes")
+    assert(hitOf(Warehouse.drainHits(s2), "whcorl").contains(false))
   }
 
   test("publish registers every artifactBuilders store with its footer schema, and a by-path read of it runs no inference job") {
@@ -575,19 +598,21 @@ class WarehouseSpec extends SparkSpec {
       "fixture must stay inside one width block for the merge arm")
     val colds = new java.util.concurrent.atomic.AtomicInteger(0)
     def resolveIdx(fp: String, w: Int) = Warehouse.servedFrameMerged(
-      spark, "whvbidx", dir, "documents", fp) {
+      spark, "whvbidx", dir, "documents", fp, knob = w) {
       colds.incrementAndGet()
       Curation.verbatimIndexStore(docsNow(), w)
     }(Curation.verbatimIndexMerged(w))
     def resolveM(fp: String, w: Int, idx: org.apache.spark.sql.DataFrame) =
-      Warehouse.servedFrameMerged(spark, "whvbm", dir, "documents", fp) {
+      Warehouse.servedFrameMerged(spark, "whvbm", dir, "documents", fp,
+        knob = w) {
         colds.incrementAndGet()
         Curation.verbatimMatchesFrom(idx.filter(col("doc_id").isNotNull)
           .select("sh_key", "doc_id", "pos")).withColumn("w", lit(w))
       }(Curation.verbatimMatchesMerged(w, idx))
     def resolveO(fp: String, w: Int, idx: org.apache.spark.sql.DataFrame,
                  m: org.apache.spark.sql.DataFrame) =
-      Warehouse.servedFrameMerged(spark, "whvbo", dir, "documents", fp) {
+      Warehouse.servedFrameMerged(spark, "whvbo", dir, "documents", fp,
+        knob = w) {
         colds.incrementAndGet()
         Curation.verbatimOffsetsFrom(m, w).withColumn("w", lit(w))
       }(Curation.verbatimOffsetsMerged(w, idx, m))
@@ -1293,11 +1318,11 @@ class WarehouseSpec extends SparkSpec {
 
   test("pq_codes append-merge: delta-only encode at a fixed code count; a derivePqCodes step declines to cold") {
     import graft.operators.Similarity
-    // Shared predicate at the fixture counts (one definition with the
-    // production lane): 40 base → K=8 (64 ≥ 40); +8 → 48 in-block;
-    // +80 → 128 crosses to K=16.
-    assert(!Similarity.pqCodesBlockCrossed(48L, 8L))
-    assert(Similarity.pqCodesBlockCrossed(128L, 80L))
+    // The store's knob at the fixture counts (the lane compares the
+    // same function's values): 40 base → K=8 (64 ≥ 40); +8 → 48
+    // in-block; +80 → 128 crosses to K=16.
+    assert(Similarity.derivePqCodes(48L) == Similarity.derivePqCodes(40L))
+    assert(Similarity.derivePqCodes(128L) != Similarity.derivePqCodes(48L))
     val dir = java.nio.file.Files.createTempDirectory("whpqc").toString
     val esrc = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
       .orderBy(col("vec_id")).limit(128).localCheckpoint(true)
@@ -1345,10 +1370,10 @@ class WarehouseSpec extends SparkSpec {
 
   test("doc_shingles append-merge: per-doc fold unions at a fixed width; a deriveShingleWidth step declines to cold; store-fed == inline for every consumer shape") {
     import graft.operators.Curation
-    // Shared predicate at the fixture counts (one definition with the
-    // production lane): width(80) = width(95) = 6, width(120) = 7.
-    assert(!Curation.shingleWidthCrossed(95L, 15L))
-    assert(Curation.shingleWidthCrossed(120L, 25L))
+    // The store's knob at the fixture counts: width(80) = width(95) =
+    // 6, width(120) = 7.
+    assert(Curation.deriveShingleWidth(95L) == Curation.deriveShingleWidth(80L))
+    assert(Curation.deriveShingleWidth(120L) != Curation.deriveShingleWidth(95L))
     val dir = java.nio.file.Files.createTempDirectory("whdsh").toString
     val dsrc = graft.Tables.documents(spark, "/root/testdata/sf0.01")
       .orderBy(col("doc_id")).limit(120).localCheckpoint(true)
@@ -1452,16 +1477,19 @@ class WarehouseSpec extends SparkSpec {
   test("emb_cc / phash_cc decline arms: PRODUCTION lanes — in-block append merges, a derivePlanes / phashChunkWidth step declines to cold") {
     import spark.implicits._
     import graft.operators.{Dedup, Multimodal, Similarity}
-    // The shared predicates at the exact fixture counts — the
-    // production callbacks call THESE functions (one definition,
-    // round-20 ADVICE), so pinning them here pins the lanes' knob.
-    assert(!Similarity.planeBlockCrossed(120L, 20L),
+    // The stores' knobs at the exact fixture counts — the production
+    // stores pass THESE functions' values to the lane, so pinning them
+    // here pins the lanes' knob.
+    assert(Similarity.derivePlanes(120L) == Similarity.derivePlanes(100L),
       "100→120 vectors must stay inside the 4-plane block")
-    assert(Similarity.planeBlockCrossed(160L, 40L),
+    assert(Similarity.derivePlanes(160L) != Similarity.derivePlanes(120L),
       "120→160 vectors must cross to 5 planes")
-    assert(!Multimodal.phashWidthCrossed(29L, 5L),
+    val twins = Multimodal.PhashPlantCount
+    assert(Multimodal.phashChunkWidth(29L + twins) ==
+      Multimodal.phashChunkWidth(24L + twins),
       "24→29 docs must stay at width 2 (with the planted rows)")
-    assert(Multimodal.phashWidthCrossed(61L, 32L),
+    assert(Multimodal.phashChunkWidth(61L + twins) !=
+      Multimodal.phashChunkWidth(29L + twins),
       "29→61 docs must step the chunk width")
     val dir = java.nio.file.Files.createTempDirectory("whccdec").toString
     // Embeddings: 100 base (4 planes), +20 in-block, +40 crossing.
@@ -1535,6 +1563,143 @@ class WarehouseSpec extends SparkSpec {
       df.collect().map(_.toSeq).sortBy(_.toString()).toSeq
     assert(rws(served) == rws(coldCc),
       "declined rebuild must equal the cold CC over the grown corpus")
+  }
+
+  test("the manifest knob gates the merge: a mismatched knob declines, a matching one merges; a pre-knob (version, 0) manifest declines a knob store but still merges minhash_bands") {
+    import graft.operators.{Curation, Dedup}
+    val dir = java.nio.file.Files.createTempDirectory("whknob").toString
+    val dsrc = graft.Tables.documents(spark, sfDir)
+      .orderBy(col("doc_id")).limit(95).localCheckpoint(true)
+    dsrc.filter(col("doc_id") < 70).coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def appendD(lo: Long, hi: Long): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("whknobb").toString
+      dsrc.filter(col("doc_id") >= lo && col("doc_id") < hi).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+        .foreach(f => java.nio.file.Files.move(f.toPath,
+          java.nio.file.Paths.get(s"$dir/documents.parquet/${f.getName}")))
+    }
+    def laneOf(m: Map[String, String], fam: String): Option[String] =
+      m.collectFirst { case (k, v) if k.takeWhile(_ != '@') == fam => v }
+    // The lane alone, over the minhash builder, at an explicit knob.
+    def resolve(knob: Long): Option[String] = {
+      val s2 = spark.newSession()
+      Warehouse.drainLanes(s2)
+      Warehouse.servedFrameMerged(s2, "whknobf", dir, "documents",
+        Warehouse.docsFp(s2, dir), knob = knob)(
+        Dedup.minhashBandIndex(graft.Tables.documents(s2, dir)))(
+        (old, batch) => Some(old.unionByName(Dedup.minhashBandIndex(batch))))
+        .count()
+      laneOf(Warehouse.drainLanes(s2), "whknobf")
+    }
+    assert(resolve(6L).contains("cold"))
+    appendD(70L, 75L)
+    assert(resolve(7L).contains("cold"), "a knob step must decline the merge")
+    appendD(75L, 80L)
+    assert(resolve(7L).contains("merge"), "an unchanged knob must merge")
+    // Two production stores, one without a knob (minhash_bands) and
+    // one with one (doc_shingles, the shingle width), whose manifests
+    // carry the knob slot as 0 — the form written before the slot was
+    // filled. Only the knob store must decline.
+    def resolveStores(): Map[String, String] = {
+      val s2 = spark.newSession()
+      Warehouse.drainLanes(s2)
+      Dedup.minhashBandStore(s2, dir).count()
+      Curation.docShingleStore(s2, dir).count()
+      Warehouse.drainLanes(s2)
+    }
+    val l1 = resolveStores()
+    assert(laneOf(l1, "minhash_bands").contains("cold") &&
+      laneOf(l1, "doc_shingles").contains("cold"), s"$l1")
+    val whRoot = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = whRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fp = Warehouse.docsFp(spark, dir)
+    for (fam <- Seq("minhash_bands", "doc_shingles")) {
+      val man = new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(whRoot, Warehouse.tableName(fam, dir, fp)),
+        Warehouse.ManifestFile)
+      val in = fs.open(man)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val ver = Warehouse.BuilderVersion(fam)
+      val out = fs.create(man, true)
+      out.write(text.split("\n").map { l =>
+        if (l.startsWith(Warehouse.ManifestVersionKey + "\t"))
+          s"${Warehouse.ManifestVersionKey}\t$ver\t0"
+        else l
+      }.mkString("\n").getBytes("UTF-8"))
+      out.close()
+    }
+    appendD(80L, 95L)
+    assert(Curation.deriveShingleWidth(95L) == Curation.deriveShingleWidth(80L),
+      "the append must stay inside one width block")
+    val l2 = resolveStores()
+    assert(laneOf(l2, "minhash_bands").contains("merge"),
+      s"a store without a knob keeps merging: $l2")
+    assert(laneOf(l2, "doc_shingles").contains("cold"),
+      s"a knob store declines a pre-knob manifest once: $l2")
+  }
+
+  test("trained index: centroids retrained and published at a corpus state whose index never published — the next index resolution is cold") {
+    import graft.operators.Similarity
+    // 100 vectors (trained_n 100) → 130 (past the ratio: retrain,
+    // trained_n 130) → 135 (within it: the 130 centroids are reused).
+    val dir = java.nio.file.Files.createTempDirectory("whstamp").toString
+    val esrc = graft.Tables.embeddings(spark, sfDir)
+      .orderBy(col("vec_id")).limit(135).localCheckpoint(true)
+    esrc.filter(col("vec_id") < 100).coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def appendE(lo: Long, hi: Long): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory("whstampb").toString
+      esrc.filter(col("vec_id") >= lo && col("vec_id") < hi).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      new java.io.File(tmp).listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+        .foreach(f => java.nio.file.Files.move(f.toPath,
+          java.nio.file.Paths.get(s"$dir/embeddings.parquet/${f.getName}")))
+    }
+    def resolve(): (Map[String, String], String) = {
+      val s2 = spark.newSession()
+      Warehouse.drainLanes(s2)
+      Similarity.trainedIndexArtifacts(s2, dir)
+      (Warehouse.drainLanes(s2),
+        Warehouse.tableName("ivf_trained", dir, Warehouse.embFp(s2, dir)))
+    }
+    def laneOf(m: Map[String, String], fam: String): Option[String] =
+      m.collectFirst { case (k, v) if k.takeWhile(_ != '@') == fam => v }
+    val whRoot = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = whRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (_, i1) = resolve()
+    // Keep the 100-state index aside, as files only.
+    val aside = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory("whstampk").toString, i1)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(whRoot, i1),
+      fs, aside, false, spark.sparkContext.hadoopConfiguration)
+    appendE(100L, 130L)
+    val (l2, i2) = resolve()
+    assert(laneOf(l2, "ivf_cents").contains("cold"), s"past the ratio: $l2")
+    // The crash state: the 130 centroids published, the 130 index did
+    // not, and the 100-state index is still on disk.
+    for (n <- Seq(i1, i2)) {
+      spark.sql(s"DROP TABLE IF EXISTS $n")
+      fs.delete(new org.apache.hadoop.fs.Path(whRoot, n), true)
+    }
+    org.apache.hadoop.fs.FileUtil.copy(fs, aside, fs,
+      new org.apache.hadoop.fs.Path(whRoot, i1), false,
+      spark.sparkContext.hadoopConfiguration)
+    appendE(130L, 135L)
+    val (l3, i3) = resolve()
+    assert(laneOf(l3, "ivf_cents").contains("merge"),
+      s"the 130 centroids are reused within the ratio: $l3")
+    assert(laneOf(l3, "ivf_trained").contains("cold"),
+      s"an index assigned under other centroids must not merge: $l3")
+    val st = spark.table(i3).agg(min(col("cents_tn")), max(col("cents_tn")),
+      count(lit(1))).head()
+    assert(st.getLong(0) == 130L && st.getLong(1) == 130L && st.getLong(2) == 135L,
+      s"every index row is assigned under the served centroids: $st")
   }
 
   test("one session across an append: fingerprint and data-derived knob move together, the store merges, and equals a from-scratch build") {
