@@ -352,8 +352,11 @@ object Bench {
       .mkString("{", ",", "}")
     val full = line.dropRight(1) +
       s""","shuffle_bytes":$sh,"retried":$rt,"artifact_builds":$ab,"artifact_builds_metric":$abm,"merge_builds":$mb,"warehouse_preexisting":$whp,"queries_cpu":$qcpu,"calibration":$cal}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      (full + "\n").getBytes("UTF-8"))
+    // Beside the build output, not over the tracked ledger: the ledger
+    // changes only by a deliberate copy of this file.
+    val out = java.nio.file.Paths.get("target", "BENCH_FULL.json")
+    java.nio.file.Files.createDirectories(out.getParent)
+    java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
     spark.stop()
   }
 }

@@ -23,10 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[store]] — fingerprint of its source tables, memo under
   * `family@dir`, and `Warehouse.servedFrameMerged`'s hit / merge /
   * cold lanes — so every store writes a source manifest with its
-  * data-derived knob and records the lane it took. [[cached]] stays
-  * for what is not a single store: derived views of a store (a
-  * localCheckpoint of a small table), session frames such as codebooks
-  * and centroids, and the funnel's stage set.
+  * data-derived knob and records the lane it took. The served table
+  * IS the store's materialization: callers use it as returned, never
+  * wrapped in a second key or a localCheckpoint (a checkpoint block
+  * lost with its executor has no lineage to recompute from, while the
+  * table it copies is still on disk). [[cached]] stays for SESSION
+  * FRAMES only — the res centroids and the res and pq codebooks,
+  * which no table stores.
   *
   * Contract: `build` must return a value that is already MATERIALIZED
   * (localCheckpoint, a warehouse table, or equivalent) — the cache

@@ -345,7 +345,7 @@ object Curation {
     // The frame is batch-sized; values unchanged.
     noveltyBatchFromShingles(
       shinglesWithPos(batch, width).select("doc_id", "sh_key")
-        .localCheckpoint(true), index)
+        .localCheckpoint(true), index) // multi-consumer: count and firsts
 
   /** [[noveltyBatch]] over a PREBUILT batch shingle frame — the
     * store-fed form (round-22): the registered incremental key filters
@@ -527,67 +527,58 @@ object Curation {
       emptied: DataFrame, s5: DataFrame,
       semanticDrops: DataFrame, s6: DataFrame)
 
-  /** ONE FunnelFrames build per (session, corpus state) — the round-9
-    * verdict's funnel-pair memoization: `q_corpus_funnel` and
-    * `q_corpus_funnel_reasons` are two VIEWS of the same checkpointed
-    * stage frames, so whichever runs first builds them and the other
-    * reads (the per-stage localCheckpoint already stands in for the
-    * stage table a production funnel writes — this memo is just the
-    * "read the table you already wrote" half of that story). The
-    * [[Artifacts]] entry carries the combined documents + embeddings
-    * fingerprint, the two tables the funnel reads. */
+  /** The funnel's stage frames over the six stage STORES:
+    * `q_corpus_funnel` and `q_corpus_funnel_reasons` are two VIEWS of
+    * the same stage tables, so whichever runs first builds them and
+    * the other reads. Each stage table is memoized by
+    * [[Artifacts.store]], so a repeat call re-plans six memo hits. */
   private[graft] def funnelFramesArtifact(s: SparkSession,
                                           dir: String): FunnelFrames = {
-    val docsFp = graft.sources.Warehouse.docsFp(s, dir)
-    val semFp = graft.sources.Warehouse.combineFp(
-      docsFp, graft.sources.Warehouse.embFp(s, dir))
-    Artifacts.cached(s, s"funnel-frames:$dir", semFp) {
-      // Warehouse materializer (round 16): s1 and the five drop sets
-      // persist as per-stage tables keyed by path digest + corpus
-      // fingerprint — the funnel's six stages resolve table-by-table,
-      // so a crash mid-build resumes from the last complete stage and
-      // a later JVM pays no stage compute at all (the by-need thunks
-      // mean a full hit never shingles, bands, or decodes anything;
-      // the one cost left is the fingerprint's stats pass).
-      // Deterministic stages (every one is integer/digest arithmetic,
-      // spec-pinned) make reuse == rebuild — all funnel hashes are
-      // state-independent.
-      //
-      // Per-stage fingerprints track each table's ACTUAL inputs: the
-      // five text stages key on the documents stamp, while stage 6
-      // (fn_semdrops) reads EMBEDDINGS too — a docs-only stamp there
-      // would serve a stale semantic drop set after an embeddings-only
-      // regeneration (exactly the stale-serve channel the lifecycle
-      // exists to close), and a combined stamp EVERYWHERE would
-      // rebuild the whole text pipeline when only the embeddings
-      // moved. WarehouseSpec pins both sides: an embeddings-only
-      // mutation misses fn_semdrops and hits fn_s1.
-      //
-      // fn_s1 is the ONE merge-lane funnel stage (round-19):
-      // qualityGate is a per-row filter, so s1(old ∪ delta) ≡
-      // s1(old) ∪ s1(delta) — an append pays a delta-sized regex pass
-      // instead of re-screening the corpus (and s1 is the funnel's only
-      // TEXT-carrying materialization, its costliest write). Every
-      // LATER stage declines by design: their drop sets carry
-      // corpus-global cross terms — the eval shingle index, the
-      // verbatim df cap, and the semantic cell count all re-derive from
-      // the FULL corpus, so a delta can re-flag SETTLED survivors — and
-      // computing those terms needs the settled corpus's shingles,
-      // which no stage table stores (SCALE.md §store-merge
-      // adjudications).
-      val mat: (String, () => DataFrame) => DataFrame = (family, build) =>
-        Artifacts.store(s, family, dir,
-          if (family == "fn_semdrops") "documents+embeddings"
-          else "documents")(build()) { (old, delta) =>
-          if (family == "fn_s1") Some(old.unionByName(qualityGate(delta)))
-          else None
-        }
-      val (nDocs, _) = graft.sources.Warehouse.docsStats(s, dir)
-      funnelFrames(Tables.documents(s, dir), Tables.embeddings(s, dir),
-        mat, nInputHint = nDocs,
-        bandIndex = Some(() => Dedup.minhashBandStore(s, dir)),
-        docShingles = Some(() => docShingleStore(s, dir)))
-    }
+    // Warehouse materializer (round 16): s1 and the five drop sets
+    // persist as per-stage tables keyed by path digest + corpus
+    // fingerprint — the funnel's six stages resolve table-by-table,
+    // so a crash mid-build resumes from the last complete stage and
+    // a later JVM pays no stage compute at all (the by-need thunks
+    // mean a full hit never shingles, bands, or decodes anything;
+    // the one cost left is the fingerprint's stats pass).
+    // Deterministic stages (every one is integer/digest arithmetic,
+    // spec-pinned) make reuse == rebuild — all funnel hashes are
+    // state-independent.
+    //
+    // Per-stage fingerprints track each table's ACTUAL inputs: the
+    // five text stages key on the documents stamp, while stage 6
+    // (fn_semdrops) reads EMBEDDINGS too — a docs-only stamp there
+    // would serve a stale semantic drop set after an embeddings-only
+    // regeneration (exactly the stale-serve channel the lifecycle
+    // exists to close), and a combined stamp EVERYWHERE would
+    // rebuild the whole text pipeline when only the embeddings
+    // moved. WarehouseSpec pins both sides: an embeddings-only
+    // mutation misses fn_semdrops and hits fn_s1.
+    //
+    // fn_s1 is the ONE merge-lane funnel stage (round-19):
+    // qualityGate is a per-row filter, so s1(old ∪ delta) ≡
+    // s1(old) ∪ s1(delta) — an append pays a delta-sized regex pass
+    // instead of re-screening the corpus (and s1 is the funnel's only
+    // TEXT-carrying materialization, its costliest write). Every
+    // LATER stage declines by design: their drop sets carry
+    // corpus-global cross terms — the eval shingle index, the
+    // verbatim df cap, and the semantic cell count all re-derive from
+    // the FULL corpus, so a delta can re-flag SETTLED survivors — and
+    // computing those terms needs the settled corpus's shingles,
+    // which no stage table stores (SCALE.md §store-merge
+    // adjudications).
+    val mat: (String, () => DataFrame) => DataFrame = (family, build) =>
+      Artifacts.store(s, family, dir,
+        if (family == "fn_semdrops") "documents+embeddings"
+        else "documents")(build()) { (old, delta) =>
+        if (family == "fn_s1") Some(old.unionByName(qualityGate(delta)))
+        else None
+      }
+    val (nDocs, _) = graft.sources.Warehouse.docsStats(s, dir)
+    funnelFrames(Tables.documents(s, dir), Tables.embeddings(s, dir),
+      mat, nInputHint = nDocs,
+      bandIndex = Some(() => Dedup.minhashBandStore(s, dir)),
+      docShingles = Some(() => docShingleStore(s, dir)))
   }
 
   /** Default materializer for [[funnelFrames]]'s stage frames — the
@@ -598,7 +589,7 @@ object Curation {
     * warehouse HIT never evaluates (or shingles for) a frame it
     * already has on disk. */
   private val matCheckpoint: (String, () => DataFrame) => DataFrame =
-    (_, f) => f().localCheckpoint(true)
+    (_, f) => f().localCheckpoint(true) // multi-consumer: later stages
 
   private def funnelFrames(docs: DataFrame,
                            embeddings: DataFrame,
@@ -661,7 +652,7 @@ object Curation {
     // a downstream drop table actually rebuilds.
     lazy val basePos = shinglesWithPos(
       corpus3.select(col("doc_id"), col("text")), width)
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: fn_flagged and fn_emptied
     // The eval shingle index serves from the doc-shingle store when the
     // artifact path provides it (round-22): the funnel's width IS the
     // full-corpus width the store was built at (both derive from
@@ -717,13 +708,14 @@ object Curation {
       val s4docs = s4.select(col("doc_id"), col("text"))
       val s4Shingles = basePos
         .join(s4.select("doc_id"), Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
+        .localCheckpoint(true) // multi-consumer: the index join and its df cap
       val s4Index = s4Shingles.join(
         s4Shingles.groupBy("sh_key")
           .agg(countDistinct(col("doc_id")).as("df"))
           .filter(col("df") <= VerbatimMaxDf)
           .select("sh_key"),
-        Seq("sh_key")).localCheckpoint(true)
+        Seq("sh_key"))
+        .localCheckpoint(true) // multi-consumer: both sides of the self-join
       verbatimRemoveFrom(s4docs,
         verbatimOffsetsFrom(verbatimMatchesFrom(s4Index), width), width)
         .filter(col("n_removed") === col("n_tokens"))
@@ -1237,7 +1229,8 @@ object Curation {
     val dsh = shinglesWithPos(
       deltaRaw.select(col("doc_id"), col("text")), width)
     val deltaDf = dsh.groupBy("sh_key")
-      .agg(countDistinct(col("doc_id")).as("dfd")).localCheckpoint(true)
+      .agg(countDistinct(col("doc_id")).as("dfd"))
+      .localCheckpoint(true) // merge-lane delta: touchedOld and perKey
     // df_old per delta-touched key — bounded: ≤ cap position rows or
     // one marker per key, keys limited to the delta's own key set.
     val touchedOld = old
@@ -1246,7 +1239,7 @@ object Curation {
     val perKey = deltaDf.join(touchedOld, Seq("sh_key"), "left")
       .select(col("sh_key"), col("dfd"), coalesce(col("dfo"), lit(0L)).as("dfo"))
       .withColumn("dfn", col("dfo") + col("dfd"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // merge-lane delta: four consumers below
     val underCap = perKey.filter(col("dfn") <= VerbatimMaxDf)
       .select(col("sh_key"), col("dfn"))
     val overCap = perKey.filter(col("dfn") > VerbatimMaxDf)
@@ -1327,15 +1320,19 @@ object Curation {
     val dsh = shinglesWithPos(
       deltaRaw.select(col("doc_id"), col("text")), width)
     val deltaDf = dsh.groupBy("sh_key")
-      .agg(countDistinct(col("doc_id")).as("dfd")).localCheckpoint(true)
-    val crossed = crossedKeys(index, deltaDf).localCheckpoint(true)
+      .agg(countDistinct(col("doc_id")).as("dfd"))
+      .localCheckpoint(true) // merge-lane delta: crossed and slice
+    val crossed = crossedKeys(index, deltaDf)
+      .localCheckpoint(true) // merge-lane delta: cap-crossed keys
     val keptOld = old.drop("w")
       .join(broadcast(crossed), Seq("sh_key"), "left_anti")
     val slice = index.filter(col("doc_id").isNotNull)
       .join(broadcast(deltaDf.select("sh_key")), Seq("sh_key"), "left_semi")
-      .select("sh_key", "doc_id", "pos").localCheckpoint(true)
+      .select("sh_key", "doc_id", "pos")
+      .localCheckpoint(true) // merge-lane delta: the slice self-join
     val dd = deltaRaw.select("doc_id").distinct()
-      .withColumn("isd", lit(true)).localCheckpoint(true)
+      .withColumn("isd", lit(true))
+      .localCheckpoint(true) // merge-lane delta: both sides' flags
     val touching = verbatimMatchesFrom(slice)
       .join(broadcast(dd.select(col("doc_id").as("doc_a"),
         col("isd").as("ia"))), Seq("doc_a"), "left")
@@ -1375,17 +1372,20 @@ object Curation {
     val dsh = shinglesWithPos(
       deltaRaw.select(col("doc_id"), col("text")), width)
     val deltaDf = dsh.groupBy("sh_key")
-      .agg(countDistinct(col("doc_id")).as("dfd")).localCheckpoint(true)
+      .agg(countDistinct(col("doc_id")).as("dfd"))
+      .localCheckpoint(true) // merge-lane delta: the cap probe
     if (crossedKeys(index, deltaDf).limit(1).count() > 0) return None
     val dd = deltaRaw.select("doc_id").distinct()
-      .withColumn("isd", lit(true)).localCheckpoint(true)
+      .withColumn("isd", lit(true))
+      .localCheckpoint(true) // merge-lane delta: both sides' flags
     val touchingPairs = matches
       .join(broadcast(dd.select(col("doc_id").as("doc_a"),
         col("isd").as("ia"))), Seq("doc_a"), "left")
       .join(broadcast(dd.select(col("doc_id").as("doc_b"),
         col("isd").as("ib"))), Seq("doc_b"), "left")
       .filter(col("ia").isNotNull || col("ib").isNotNull)
-      .select("doc_a", "doc_b").distinct().localCheckpoint(true)
+      .select("doc_a", "doc_b").distinct()
+      .localCheckpoint(true) // merge-lane delta: slice and keptOld
     val slice = matches.join(broadcast(touchingPairs),
       Seq("doc_a", "doc_b"), "left_semi")
     val keptOld = old.drop("w")
@@ -1607,7 +1607,8 @@ object Curation {
     // fold + posexplode subtree five times (the measured plan scanned
     // documents 5× with no pushed batch filter). The frame is
     // batch-sized (tokens × batch docs); values unchanged.
-    val bsh = shinglesWithPos(batch, width).localCheckpoint(true)
+    val bsh = shinglesWithPos(batch, width)
+      .localCheckpoint(true) // multi-consumer: five batch consumers
     val mc = bsh.as("b").join(index.as("c"), Seq("sh_key"))
       .select(col("b.doc_id").as("bdoc"), col("c.doc_id").as("odoc"),
         col("b.pos").as("bpos"), (col("b.pos") - col("c.pos")).as("diag"))
@@ -1997,7 +1998,7 @@ object Curation {
     val tf = docs.select(col("doc_id"), col("source"),
         explode(split(lower(col("text")), " ")).as("tok"))
       .groupBy("doc_id", "source", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: five tf consumers
     val cfRaw = tf.groupBy("tok").agg(sum(col("tf")).as("cf_r"))
     val cfTgt = tf.filter(col("source") === DsirTarget)
       .groupBy("tok").agg(sum(col("tf")).as("cf_t"))
@@ -2079,7 +2080,7 @@ object Curation {
     // this key was the suite's most expensive at 3.1 cpu s).
     val tf = bg.groupBy("doc_id", "source", "f")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: four consumers
     val cfRaw = tf.groupBy("f").agg(sum(col("tf")).as("cf_r"))
     val cfTgt = tf.filter(col("source") === DsirTarget)
       .groupBy("f").agg(sum(col("tf")).as("cf_t"))

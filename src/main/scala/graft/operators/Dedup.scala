@@ -640,6 +640,14 @@ object Dedup {
     parent.keys.toSeq.map(n => (n, find(n)))
   }
 
+  /** Both orientations of every edge as (n, peer), from ONE pass over
+    * `edges`: each edge explodes into its two directed rows, where a
+    * union of two projections would run the edge pipeline twice. */
+  private[operators] def undirected(edges: DataFrame): DataFrame =
+    edges.toDF("ea", "eb").select(inline(array(
+      struct(col("ea").as("n"), col("eb").as("peer")),
+      struct(col("eb").as("n"), col("ea").as("peer")))))
+
   def connectedComponents(edges: DataFrame, maxRounds: Int = 64,
                           checkpointDir: Option[String] = None,
                           onRunDir: String => Unit = _ => (),
@@ -688,14 +696,11 @@ object Dedup {
         // Read back with the schema just written (all long columns):
         // no footer-inference job per step.
         (df.sparkSession.read.schema(df.schema).parquet(path), Some(path))
-      case None => (df.localCheckpoint(true), None)
+      case None => (df.localCheckpoint(true), None) // iterative cut: one CC step
     }
     def release(df: DataFrame, path: Option[String]): Unit =
       path match { case Some(p) => delete(p); case None => df.unpersist(); () }
-    val (und, undPath) = materialize(edges.toDF("ea", "eb")
-      .select(col("ea").as("n"), col("eb").as("peer"))
-      .unionByName(edges.toDF("ea", "eb")
-        .select(col("eb").as("n"), col("ea").as("peer")))) // small edge list, once
+    val (und, undPath) = materialize(undirected(edges)) // small edge list, once
     var (labels, labelsPath) = materialize(und.select(col("n").as("id")).distinct()
       .withColumn("rep", col("id")))
     // Labels only ever decrease, so an unchanged sum ⇔ a fixed point.
@@ -762,8 +767,8 @@ object Dedup {
     * [[connectedComponents]]' schema. */
   private[graft] def ccLabelsMerged(old: DataFrame, pairs: DataFrame,
                                     deltaIds: DataFrame): DataFrame = {
-    val ids = broadcast(
-      deltaIds.toDF("did").localCheckpoint(true))
+    // merge-lane delta: read by both touching joins
+    val ids = broadcast(deltaIds.toDF("did").localCheckpoint(true))
     val p = pairs.toDF("a", "b")
     val touching = p.join(ids, col("a") === col("did"), "leftsemi")
       .unionByName(p.join(ids, col("b") === col("did"), "leftsemi"))
@@ -1030,11 +1035,11 @@ object Dedup {
 
   /** INCREMENTAL near-dup ingest — the banded twin of
     * `q_dedup_incremental`'s exact anti-join: the corpus's band index
-    * is built once and persisted (localCheckpoint stands in for the
-    * write); an arriving batch computes its own bands and band-joins
-    * against index ∪ own-bands, so candidates touch at least one batch
-    * doc by construction and corpus×corpus is NEVER re-banded or
-    * re-joined. The exact-Jaccard verify then reads word sets for
+    * is read once, so it fuses into the band join (the store-fed form
+    * is [[minhashPairsIncrementalFrom]]); an arriving batch computes
+    * its own bands and band-joins against index ∪ own-bands, so
+    * candidates touch at least one batch doc by construction and
+    * corpus×corpus is NEVER re-banded or re-joined. The exact-Jaccard verify then reads word sets for
     * candidate ids only (one linear fetch, not a rescan). Per-batch
     * cost: batch signatures (linear in the batch) + a band join whose
     * left side is the batch's bands. Output == the full recompute
@@ -1042,8 +1047,7 @@ object Dedup {
   def minhashPairsIncremental(docs: DataFrame, batchPred: Column,
                               threshold: Double): DataFrame =
     minhashPairsIncrementalFrom(
-      minhashBandIndex(docs.filter(!batchPred)).localCheckpoint(true),
-      docs, batchPred, threshold)
+      minhashBandIndex(docs.filter(!batchPred)), docs, batchPred, threshold)
 
   /** [[minhashPairsIncremental]] over a PREBUILT corpus-side band
     * index — the store-fed form (round-17): the registered key hands
@@ -1205,7 +1209,7 @@ object Dedup {
     // ONE evaluation of the verdict pipeline (the old loop's labels
     // checkpoint, kept): the probe and the final relabel join both
     // read the materialized frame instead of re-running semanticDedup.
-    val verdicts = verdicts0.localCheckpoint(true)
+    val verdicts = verdicts0.localCheckpoint(true) // multi-consumer
     val spark = verdicts.sparkSession
     // SMALL-CHAIN FAST PATH (round-22, the [[connectedComponents]] /
     // [[incrementalConnectedComponents]] production split): the parent
@@ -1251,7 +1255,7 @@ object Dedup {
     // rule with the same backstop-that-throws.
     var p = verdicts.filter(col("dup_of").isNotNull)
       .select(col("vec_id").as("rep"), col("dup_of").as("next"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // iterative cut: chain round 0
     def sumNext = p.agg(coalesce(sum(col("next")), lit(0L)))
       .collect()(0).getLong(0)
     var prev = -1L
@@ -1263,7 +1267,7 @@ object Dedup {
       val hop = p.select(col("rep").as("next"), col("next").as("next2"))
       p = p.join(hop, Seq("next"), "left")
         .select(col("rep"), coalesce(col("next2"), col("next")).as("next"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iterative cut: one pointer-jump round
       old.unpersist()
       cur = sumNext
       r += 1
@@ -1283,9 +1287,8 @@ object Dedup {
   /** INCREMENTAL SemDeDup — the semantic member of the incremental
     * family (exact anti-join, MinHash band index, contracted CC,
     * shingle gate, span positions… and now this): the corpus's cell
-    * assignment index (vec_id, v, cell, |v|²) is built ONCE and
-    * persisted (localCheckpoint stands in for the write — same
-    * convention as [[minhashPairsIncremental]]); an arriving batch
+    * assignment index (vec_id, v, cell, |v|²) is built ONCE per call
+    * (read once, so it fuses into the verdict join); an arriving batch
     * assigns against the SAME frozen centroid artifact, broadcasts,
     * and takes verdicts against (corpus ∪ batch) earlier neighbors.
     * Corpus×corpus pairs are never re-examined — per-batch cost is
@@ -1302,7 +1305,6 @@ object Dedup {
       graft.functions.VectorOps.longDot(col("v"), col("v")))
     val corpusIdx = withNorm(
       Similarity.assignCells(vectors.filter(!batchPred), centroids))
-      .localCheckpoint(true)
     val batch = withNorm(
       Similarity.assignCells(vectors.filter(batchPred), centroids))
     val earlier = corpusIdx.unionByName(batch)

@@ -754,7 +754,7 @@ object Events {
       .withColumn("src", lag(col("event_type"), 1).over(win))
       .groupBy(col("src"), col("event_type").as("dst"))
       .agg(count(lit(1)).as("wt"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: every PageRank round
     pageRankFromPairs(pairs)
   }
 
@@ -1106,7 +1106,7 @@ object Events {
       pageRankFromPairs(transDistStore(s, dir)
         .groupBy(col("prev_type").as("src"), col("event_type").as("dst"))
         .agg(sum(col("c")).as("wt"))
-        .localCheckpoint(true))),
+        .localCheckpoint(true))), // multi-consumer: every PageRank round
 
     // Volume/cadence bot screen — see [[eventsBots]].
     "q_events_bots" -> ((s, dir) => eventsBots(Tables.events(s, dir))),
@@ -1124,7 +1124,7 @@ object Events {
         .groupBy(col("prev_type"), col("event_type").as("dst"),
           col("gap_ms"))
         .agg(sum(col("c")).as("c"))
-        .localCheckpoint(true))),
+        .localCheckpoint(true))), // multi-consumer: window and totals branches
 
     // Daily growth accounting (new/retained/resurrected/churned) off
     // the (user, day) store.

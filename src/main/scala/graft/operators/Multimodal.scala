@@ -799,11 +799,11 @@ object Multimodal {
   /** INCREMENTAL image near-dup ingest — the multimodal member of the
     * incremental family (exact/minhash/CC/semantic/verbatim/decontam
     * all have one; production image pipelines ingest batches the same
-    * way). The corpus's chunk index is built once and persisted
-    * (localCheckpoint stands in for the write); an arriving batch
-    * chunks its own sketches and band-joins against index ∪ own-chunks,
-    * so every candidate touches a batch image by construction and
-    * corpus×corpus is never re-chunked or re-joined. Verify is inline —
+    * way). The corpus's chunk index is read once, so it fuses into
+    * the band join; an arriving batch chunks its own sketches and
+    * band-joins against index ∪ own-chunks, so every candidate
+    * touches a batch image by construction and corpus×corpus is never
+    * re-chunked or re-joined. Verify is inline —
     * the chunk rows carry both sketches, so exact `bit_count(a ⊕ b)`
     * needs no fetch join. Pigeonhole-exactness of the blocking makes
     * the output EQUAL to the full recompute restricted to
@@ -814,7 +814,6 @@ object Multimodal {
                             chunkWidth: Int,
                             hammingMax: Int = PhashHammingMax): DataFrame = {
     val index = phashChunks(sk.filter(!batchPred), chunkWidth)
-      .localCheckpoint(true)
     val batchChunks = phashChunks(sk.filter(batchPred), chunkWidth)
     batchChunks.as("a")
       .join(index.unionByName(batchChunks).as("b"), Seq("c", "v"))
@@ -1065,13 +1064,11 @@ object Multimodal {
     * Cell count K = ⌈√N⌉ (the Similarity rule). */
   private[graft] def phashIvfArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val cents = Artifacts.cached(s, s"phash-ivf-cents:$dir", docsFp(s, dir))(
-      Artifacts.store(s, "phash_cents", dir, "documents") {
-        val (sk, _) = phashSketchWithTwins(s, dir)
-        val n = graft.sources.Warehouse.docsStats(s, dir)._1 +
-          PhashPlantCount
-        phashIvfCells(sk, math.ceil(math.sqrt(n.toDouble)).toInt)
-      }((_, _) => None).localCheckpoint(true))
+    val cents = Artifacts.store(s, "phash_cents", dir, "documents") {
+      val (sk, _) = phashSketchWithTwins(s, dir)
+      val n = graft.sources.Warehouse.docsStats(s, dir)._1 + PhashPlantCount
+      phashIvfCells(sk, math.ceil(math.sqrt(n.toDouble)).toInt)
+    }((_, _) => None)
     // The persisted bucketed table IS the materialized artifact.
     val assigned = Artifacts.store(s, "phash_ivf", dir, "documents",
       bucket = Some(("cell", PhashIdxBuckets))) {
@@ -1108,7 +1105,9 @@ object Multimodal {
     * shuffles wide rows. localCheckpoint cuts per-round lineage. */
   def phashMajorityCentroids(sk: DataFrame, kk: Int,
                              iters: Int = PhashTrainIters): DataFrame = {
-    val cents0 = phashIvfCells(sk, kk).localCheckpoint(true)
+    val cents0 = phashIvfCells(sk, kk)
+      .localCheckpoint(true) // multi-consumer: assignment and round 0
+    // iterative cut: the assignment every training round reads
     phashMajorityCentroidsFrom(
       phashIvfAssign(sk, cents0).localCheckpoint(true), cents0, iters)
   }
@@ -1146,7 +1145,7 @@ object Multimodal {
         .join(refreshed.select(col("cell").as("cid"), col("cn")),
           Seq("cid"), "left")
         .select(col("cid"), coalesce(col("cn"), col("cent")).as("cent"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iterative cut: one training round
     }
     cents
   }
@@ -1240,7 +1239,6 @@ object Multimodal {
     * again. */
   private[graft] def phashIvfTrainedArtifacts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val fp = docsFp(s, dir)
     val n = graft.sources.Warehouse.docsStats(s, dir)._1
     // RETRAIN CYCLE (round-20): the Similarity.trainedIndexArtifacts
     // convention mirrored into hamming space — the trained centroid
@@ -1251,12 +1249,11 @@ object Multimodal {
     // already decoded only the new part files); a past-ratio step
     // declines to the cold lane, which retrains from the current
     // untrained chain and declines the index merge (cold reassign).
-    val cents = Artifacts.cached(s, s"phash-ivf-trained-cents:$dir", fp)(
-      Artifacts.store(s, "phash_tr_cents", dir, "documents") {
-        val (cents0, assigned0) = phashIvfArtifacts(s, dir)
-        phashMajorityCentroidsFrom(assigned0, cents0)
-          .withColumn("trained_n", lit(n))
-      }((old, _) => Similarity.reusedQuantizer(old, n)).localCheckpoint(true))
+    val cents = Artifacts.store(s, "phash_tr_cents", dir, "documents") {
+      val (cents0, assigned0) = phashIvfArtifacts(s, dir)
+      phashMajorityCentroidsFrom(assigned0, cents0)
+        .withColumn("trained_n", lit(n))
+    }((old, _) => Similarity.reusedQuantizer(old, n))
     val centsServe = cents.drop("trained_n")
     // Centroid-identity stamp (round-21, ADVICE medium) — the
     // Similarity.trainedIndexArtifacts rule in hamming space: the
@@ -1311,38 +1308,37 @@ object Multimodal {
     // round-17 — the knnBruteTruth twin): the exact pass is the
     // expensive audit input at lake scale; a warm process reads
     // probes×k rows.
-    Artifacts.cached(s, s"phash-brute-truth:$dir", docsFp(s, dir))(
-      Artifacts.store(s, "phash_truth", dir, "documents") {
-        val (sk, _) = phashSketchWithTwins(s, dir)
-        val probes = sk.filter(col("doc_id") < PhashProbeCount)
-          .select(col("doc_id").as("probe_id"),
-            col("phash").as("probe_hash"))
-        phashSearch(sk, probes, PhashTopK)
-      } { (old, deltaRaw) =>
-        // APPEND-MERGE (round-19, the knn_truth twin): hamming top-k
-        // under the total (score DESC, doc ASC) tie rule is
-        // re-rankable — topk(full) ≡ topk(old topk ∪ delta) — and the
-        // probe set (doc_id < PhashProbeCount) is settled under the
-        // append contract, so the truth refresh scores probes×delta
-        // sketches, read from the ALREADY-MERGED sketch store: nothing
-        // re-decodes, nothing rescores the settled corpus.
-        val (sk, _) = phashSketchWithTwins(s, dir)
-        val probes = sk.filter(col("doc_id") < PhashProbeCount)
-          .select(col("doc_id").as("probe_id"),
-            col("phash").as("probe_hash"))
-        val deltaSk = sk.join(broadcast(deltaRaw.select("doc_id")),
-          Seq("doc_id"), "left_semi")
-        def asScore(df: DataFrame) = df.select(col("probe_id"),
-          col("doc_id"),
-          (lit(PhashBits) - col("hamming")).cast("bigint").as("score"))
-        val scored = asScore(old)
-          .unionByName(asScore(phashSearch(deltaSk, probes, PhashTopK)))
-        Some(graft.functions.TopK.perKey(
-          scored, "probe_id", "score", "doc_id", PhashTopK)
-          .select(col("probe_id"), col("doc_id"),
-            (lit(PhashBits) - col("score")).cast("int").as("hamming"),
-            col("rk")))
-      }.localCheckpoint(true))
+    Artifacts.store(s, "phash_truth", dir, "documents") {
+      val (sk, _) = phashSketchWithTwins(s, dir)
+      val probes = sk.filter(col("doc_id") < PhashProbeCount)
+        .select(col("doc_id").as("probe_id"),
+          col("phash").as("probe_hash"))
+      phashSearch(sk, probes, PhashTopK)
+    } { (old, deltaRaw) =>
+      // APPEND-MERGE (round-19, the knn_truth twin): hamming top-k
+      // under the total (score DESC, doc ASC) tie rule is
+      // re-rankable — topk(full) ≡ topk(old topk ∪ delta) — and the
+      // probe set (doc_id < PhashProbeCount) is settled under the
+      // append contract, so the truth refresh scores probes×delta
+      // sketches, read from the ALREADY-MERGED sketch store: nothing
+      // re-decodes, nothing rescores the settled corpus.
+      val (sk, _) = phashSketchWithTwins(s, dir)
+      val probes = sk.filter(col("doc_id") < PhashProbeCount)
+        .select(col("doc_id").as("probe_id"),
+          col("phash").as("probe_hash"))
+      val deltaSk = sk.join(broadcast(deltaRaw.select("doc_id")),
+        Seq("doc_id"), "left_semi")
+      def asScore(df: DataFrame) = df.select(col("probe_id"),
+        col("doc_id"),
+        (lit(PhashBits) - col("hamming")).cast("bigint").as("score"))
+      val scored = asScore(old)
+        .unionByName(asScore(phashSearch(deltaSk, probes, PhashTopK)))
+      Some(graft.functions.TopK.perKey(
+        scored, "probe_id", "score", "doc_id", PhashTopK)
+        .select(col("probe_id"), col("doc_id"),
+          (lit(PhashBits) - col("score")).cast("int").as("hamming"),
+          col("rk")))
+    }
   }
 
   /** AUDIT-DRIVEN QUANTIZER SELECTION — the serving policy: compare
@@ -1386,18 +1382,17 @@ object Multimodal {
     * `phash_policy`, round-17): dependencies resolve INSIDE the cold
     * lane — the store accessor's by-name contract — so a warm process
     * reads the one-row table and touches neither quantizer's
-    * artifacts (Artifacts.cached is re-entrant by design; the old
+    * artifacts (the store memo is re-entrant by design; the old
     * hoisting convention predated that guarantee). */
   private def phashIvfPolicyQuery(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, s"phash-ivf-policy:$dir", docsFp(s, dir))(
-      Artifacts.store(s, "phash_policy", dir, "documents") {
-        val truth = phashBruteTruth(s, dir)
-        val (cents, assigned) = phashIvfArtifacts(s, dir)
-        val (tc, ta) = phashIvfTrainedArtifacts(s, dir)
-        val firstK = phashIvfServe(assigned, cents, PhashProbeCount, PhashTopK)
-        val trained = phashIvfServe(ta, tc, PhashProbeCount, PhashTopK)
-        phashIvfPolicy(truth, firstK, trained)
-      }((_, _) => None).localCheckpoint(true))
+    Artifacts.store(s, "phash_policy", dir, "documents") {
+      val truth = phashBruteTruth(s, dir)
+      val (cents, assigned) = phashIvfArtifacts(s, dir)
+      val (tc, ta) = phashIvfTrainedArtifacts(s, dir)
+      val firstK = phashIvfServe(assigned, cents, PhashProbeCount, PhashTopK)
+      val trained = phashIvfServe(ta, tc, PhashProbeCount, PhashTopK)
+      phashIvfPolicy(truth, firstK, trained)
+    }((_, _) => None)
 
   /** The policy's selection, as the serving switch reads it. */
   def phashIvfSelectedQuantizer(s: SparkSession, dir: String): String =

@@ -420,7 +420,7 @@ object Similarity {
         train.orderBy(col("vec_id")).limit(k)
       else train.filter(col("vec_id") < k))
       .select(col("vec_id").as("cid"), col("v").as("c"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // iterative cut: Lloyd's round-0 centroids
     for (_ <- 0 until iters) {
       val perDim = assignCells(train, cents)
         .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -436,7 +436,7 @@ object Similarity {
       cents = cents
         .join(refreshed, Seq("cid"), "left")
         .select(col("cid"), coalesce(col("cn"), col("c")).as("c"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iterative cut: one Lloyd round
     }
     cents
   }
@@ -870,7 +870,7 @@ object Similarity {
       val kk = math.ceil(math.sqrt(embCount(s, dir).toDouble)).toInt
       e.filter(col("vec_id") < kk)
         .select(col("vec_id").as("cid"), col("v").as("c"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // multi-consumer: codebook, code store and serving
     }
   }
 
@@ -886,7 +886,8 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
       residualCodebook(e, resCentroidsArtifact(s, dir),
-        derivePqCodes(embCount(s, dir))).localCheckpoint(true)
+        derivePqCodes(embCount(s, dir)))
+        .localCheckpoint(true) // multi-consumer: session codebook
     }
   }
 
@@ -912,7 +913,8 @@ object Similarity {
     Artifacts.cached(s, s"pq-codebook:$dir", fp) {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      pqCodebook(e, derivePqCodes(embCount(s, dir))).localCheckpoint(true)
+      pqCodebook(e, derivePqCodes(embCount(s, dir)))
+        .localCheckpoint(true) // multi-consumer: session codebook
     }
   }
 
@@ -1233,11 +1235,10 @@ object Similarity {
     // oracle replay of Lloyd at the current corpus stays hash-exact;
     // the carry-forward engages only on append-grown directory corpora
     // (its recall drift is what the recall-audit keys measure).
-    val cents = graft.operators.Artifacts.cached(
-      s, s"ivf-trained-cents:$dir", fp)(
-      graft.operators.Artifacts.store(s, "ivf_cents", dir, "embeddings")(
-        lloydCentroids(e, kk, corpusN = n).withColumn("trained_n", lit(n)))(
-        (old, _) => reusedQuantizer(old, n)).localCheckpoint(true))
+    val cents = graft.operators.Artifacts.store(
+      s, "ivf_cents", dir, "embeddings")(
+      lloydCentroids(e, kk, corpusN = n).withColumn("trained_n", lit(n)))(
+      (old, _) => reusedQuantizer(old, n))
     val centsServe = cents.drop("trained_n")
     // The centroid IDENTITY the index rows are assigned under — the
     // index store's knob, also written as the constant column
@@ -1447,8 +1448,7 @@ object Similarity {
     import spark.implicits._
     val e = e0.select(col("vec_id"), expr(quant).as("x"))
     val d = e.select(size(col("x"))).head.getInt(0) // bounded 1-row action
-    var pv = Seq(Tuple1(Array.fill(d)(PowerVScale)))
-      .toDF("pv").localCheckpoint(true)
+    var pv = Seq(Tuple1(Array.fill(d)(PowerVScale))).toDF("pv")
     for (_ <- 0 until PowerIters) {
       val dots = e.crossJoin(broadcast(pv))
         .select(col("x"),
@@ -1468,7 +1468,7 @@ object Similarity {
               CASE WHEN um = 0 THEN ${PowerVScale}L
                    WHEN y >= 0 THEN y * $PowerVScale div um
                    ELSE -(((-y) * $PowerVScale) div um) END)""").as("pv"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iterative cut: one power round
     }
     pv
   }
@@ -1779,31 +1779,28 @@ object Similarity {
     * generation and ships to every evaluation job (the round-16
     * verdict's top ask). Deterministic (quantized dots, fixed tie
     * rule) ⟹ reuse == rebuild bit for bit. */
-  private[graft] def knnBruteTruth(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.embFp(s, dir)
-    graft.operators.Artifacts.cached(s, s"knn-brute-truth:$dir", fp)(
-      graft.operators.Artifacts.store(s, "knn_truth", dir, "embeddings")(
-        brute(s, dir, 64, 5)) { (old, deltaRaw) =>
-        // APPEND-MERGE (round-19): top-k under the TOTAL (dot DESC,
-        // cand ASC) tie rule is re-rankable — top5(full) ≡
-        // top5(top5(settled) ∪ delta candidates) — and the probe set
-        // (vec_id < 64) is settled by the append contract (ingest only
-        // adds larger ids), so the truth refresh scores probes×delta
-        // instead of probes×corpus: the most expensive ANN compute
-        // becomes batch-linear per corpus growth step.
-        val probes = Tables.embeddings(s, dir).filter(col("vec_id") < 64)
-          .select(col("vec_id").as("probe_id"), expr(quant).as("v_p"))
-        val deltaScored = broadcast(probes)
-          .join(deltaRaw.select(col("vec_id").as("cand_id"),
-            expr(quant).as("v_c")),
-            col("probe_id") =!= col("cand_id"))
-          .withColumn("dot", dotAB)
-          .select("probe_id", "cand_id", "dot")
-        Some(graft.functions.TopK.perKey(
-          old.select("probe_id", "cand_id", "dot").unionByName(deltaScored),
-          "probe_id", "dot", "cand_id", 5).orderBy("probe_id", "rk"))
-      }.localCheckpoint(true))
-  }
+  private[graft] def knnBruteTruth(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Artifacts.store(s, "knn_truth", dir, "embeddings")(
+      brute(s, dir, 64, 5)) { (old, deltaRaw) =>
+      // APPEND-MERGE (round-19): top-k under the TOTAL (dot DESC,
+      // cand ASC) tie rule is re-rankable — top5(full) ≡
+      // top5(top5(settled) ∪ delta candidates) — and the probe set
+      // (vec_id < 64) is settled by the append contract (ingest only
+      // adds larger ids), so the truth refresh scores probes×delta
+      // instead of probes×corpus: the most expensive ANN compute
+      // becomes batch-linear per corpus growth step.
+      val probes = Tables.embeddings(s, dir).filter(col("vec_id") < 64)
+        .select(col("vec_id").as("probe_id"), expr(quant).as("v_p"))
+      val deltaScored = broadcast(probes)
+        .join(deltaRaw.select(col("vec_id").as("cand_id"),
+          expr(quant).as("v_c")),
+          col("probe_id") =!= col("cand_id"))
+        .withColumn("dot", dotAB)
+        .select("probe_id", "cand_id", "dot")
+      Some(graft.functions.TopK.perKey(
+        old.select("probe_id", "cand_id", "dot").unionByName(deltaScored),
+        "probe_id", "dot", "cand_id", 5).orderBy("probe_id", "rk"))
+    }
 
   /** ONE policy decision per CORPUS STATE for the EMBEDDING IVF
     * family — the audit convention's 64 probes, k = 5: brute truth vs
@@ -1814,19 +1811,16 @@ object Similarity {
     * reads one row and never touches the chains (a hoisted
     * ivfTrainedServe would eagerly collect its probe-cell list even
     * on a hit). */
-  private def knnIvfPolicyQuery(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.embFp(s, dir)
-    graft.operators.Artifacts.cached(s, s"knn-ivf-policy:$dir", fp)(
-      graft.operators.Artifacts.store(s, "knn_policy", dir, "embeddings") {
-        val n = embCount(s, dir)
-        val kk = math.ceil(math.sqrt(n.toDouble)).toInt
-        val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-        val firstK = ivfTopK(s, dir, kk, 64, 5).select("probe_id", "cand_id")
-        val trained = ivfTrainedServe(s, dir, 64, 5)
-          .select("probe_id", "cand_id")
-        quantizerPolicy(truth, firstK, trained)
-      }((_, _) => None).localCheckpoint(true))
-  }
+  private def knnIvfPolicyQuery(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Artifacts.store(s, "knn_policy", dir, "embeddings") {
+      val n = embCount(s, dir)
+      val kk = math.ceil(math.sqrt(n.toDouble)).toInt
+      val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
+      val firstK = ivfTopK(s, dir, kk, 64, 5).select("probe_id", "cand_id")
+      val trained = ivfTrainedServe(s, dir, 64, 5)
+        .select("probe_id", "cand_id")
+      quantizerPolicy(truth, firstK, trained)
+    }((_, _) => None)
 
   /** The embedding policy's selection, as the serving switch reads
     * it. */
@@ -1893,31 +1887,28 @@ object Similarity {
     * 64-probe chains and the shared persisted truth run only inside
     * the miss callback; a warm process registers + reads 3 rows. The
     * decision re-derives from them per call (cheap). */
-  private[graft] def knnTierRows(s: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.embFp(s, dir)
-    graft.operators.Artifacts.cached(s, s"knn-tier-policy:$dir", fp)(
-      graft.operators.Artifacts.store(s, "knn_tier_rows", dir, "embeddings") {
-        val n = embCount(s, dir)
-        val kk = math.ceil(math.sqrt(n.toDouble)).toInt
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), expr(quant).as("v"))
-        val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-        Seq(
-          ("ivf_flat", 512L, ivfTopK(s, dir, kk, 64, 5)
-            .select("probe_id", "cand_id")),
-          ("pq", 8L, pqTopKServed(s, dir, e, 64, 5)
-            .select("probe_id", "cand_id")),
-          ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, 64, 5)
-            .select("probe_id", "cand_id")))
-          .map { case (name, bytes, apx) =>
-            truth.join(broadcast(apx.select(col("probe_id"), col("cand_id"),
-                lit(1).as("hit"))), Seq("probe_id", "cand_id"), "left")
-              .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
-              .select(lit(name).as("tier"), lit(bytes).as("bytes_per_vec"),
-                col("n_true"), col("n_hit"))
-          }.reduce(_ unionByName _)
-      }((_, _) => None).localCheckpoint(true))
-  }
+  private[graft] def knnTierRows(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Artifacts.store(s, "knn_tier_rows", dir, "embeddings") {
+      val n = embCount(s, dir)
+      val kk = math.ceil(math.sqrt(n.toDouble)).toInt
+      val e = Tables.embeddings(s, dir)
+        .select(col("vec_id"), expr(quant).as("v"))
+      val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
+      Seq(
+        ("ivf_flat", 512L, ivfTopK(s, dir, kk, 64, 5)
+          .select("probe_id", "cand_id")),
+        ("pq", 8L, pqTopKServed(s, dir, e, 64, 5)
+          .select("probe_id", "cand_id")),
+        ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, 64, 5)
+          .select("probe_id", "cand_id")))
+        .map { case (name, bytes, apx) =>
+          truth.join(broadcast(apx.select(col("probe_id"), col("cand_id"),
+              lit(1).as("hit"))), Seq("probe_id", "cand_id"), "left")
+            .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
+            .select(lit(name).as("tier"), lit(bytes).as("bytes_per_vec"),
+              col("n_true"), col("n_hit"))
+        }.reduce(_ unionByName _)
+    }((_, _) => None)
 
   /** The storage tier the audit selected — the serving switch reads
     * the cached decision (one 3-row frame, no chain re-run). */
@@ -1986,9 +1977,7 @@ object Similarity {
     * inside the miss callback. */
   private[graft] def knnQuantRows(s: SparkSession, dir: String): DataFrame = {
     val base = knnTierRows(s, dir)
-    val fp = graft.sources.Warehouse.embFp(s, dir)
-    val trainedRow = graft.operators.Artifacts.cached(
-      s, s"knn-quant-trained-row:$dir", fp)(
+    val trainedRow =
       graft.operators.Artifacts.store(s, "knn_quant_row", dir, "embeddings") {
         val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
         val trained = ivfTrainedServe(s, dir, 64, 5)
@@ -1998,7 +1987,7 @@ object Similarity {
           .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
           .select(lit("ivf_trained").as("tier"),
             lit(512L).as("bytes_per_vec"), col("n_true"), col("n_hit"))
-      }((_, _) => None).localCheckpoint(true))
+      }((_, _) => None)
     base.unionByName(trainedRow)
   }
 

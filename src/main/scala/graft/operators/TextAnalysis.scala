@@ -578,7 +578,7 @@ object TextAnalysis {
     val cf1 = toks.filter(col("doc_id") % 2 === 0)
       .select(explode(col("ts")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cf"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: the total and both backoff joins
     val nTok = cf1.agg(sum(col("cf")).as("n"))
     val cf2 = tf2.filter(col("doc_id") % 2 === 0)
       .groupBy("w1", "w2").agg(sum(col("tf")).as("cf2"))
@@ -666,7 +666,7 @@ object TextAnalysis {
     // once (round-21, the lmScore rule).
     val scored = lmScore(docs).select(col("doc_id"), col("lm_score"))
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: cutoff aggregate and bucket join
     val cuts = scored.groupBy(col("lang"))
       .agg(expr(s"percentile(lm_score, ${CcnetP1})").as("c1"),
         expr(s"percentile(lm_score, ${CcnetP2})").as("c2"))
@@ -695,7 +695,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(split(lower(col("text")), " ")).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // multi-consumer: cf derivation and score join
     val cf = tf.groupBy("tok").agg(sum(col("tf")).as("cf"))
     tf.join(cf, Seq("tok"))
       .groupBy("doc_id")
@@ -978,7 +978,7 @@ object TextAnalysis {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
     var state = wf
       .select(col("cnt"), expr(bpeSymSql("word")).as("sym"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // iterative cut: BPE round-0 symbols
     val merges = scala.collection.mutable.ArrayBuffer[
       (Int, String, String, String, Long)]()
     for (r <- 1 to nMerges) {
@@ -1000,7 +1000,7 @@ object TextAnalysis {
       state = state
         .withColumn("sym", replace(col("sym"),
           lit(" " + l + " " + rr + " "), lit(" " + l + rr + " ")))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // iterative cut: one BPE merge round
     }
     merges.toSeq.toDF("rk", "left", "right", "merged", "pair_count")
       .withColumn("rk", col("rk").cast("int"))
@@ -1013,13 +1013,9 @@ object TextAnalysis {
     * rows where a cold one pays the sequential training rounds.
     * Deterministic training (spec-pinned) ⟹ reuse == rebuild. */
   private[graft] def bpeMergesArtifact(s: SparkSession,
-                                       dir: String): DataFrame = {
-    val fp = graft.sources.Warehouse.docsFp(s, dir)
-    Artifacts.cached(s, s"bpe-merges:$dir", fp)(
-      Artifacts.store(s, "bpe_merges", dir, "documents")(
-        bpeTrain(Tables.documents(s, dir)))((_, _) => None)
-        .localCheckpoint(true))
-  }
+                                       dir: String): DataFrame =
+    Artifacts.store(s, "bpe_merges", dir, "documents")(
+      bpeTrain(Tables.documents(s, dir)))((_, _) => None)
 
   /** APPLY the trained merges: per doc, symbolize every word and run
     * the merge table in rank order (same replace semantics as

@@ -12,7 +12,7 @@ package graft.tools
   * ≤ ~N× in cpu; superlinear rows get adjudicated in SCALE.md.
   *
   * The builders memoize per (session, dir, corpus fingerprint)
-  * (`Artifacts.cached`), so within this one session the src and replica
+  * (`Artifacts`), so within this one session the src and replica
   * builds are independent cold builds by construction — and a second
   * call would measure the warm cache, which is why each dir is built
   * exactly once.

@@ -1378,6 +1378,20 @@ class PipelineSpec extends SparkSpec {
     assert(local.values.toSet.size > 1, "degenerate fixture: one component")
   }
 
+  test("full CC: the undirected edge frame holds the edges subtree once") {
+    // The distributed loop's first materialization reads the edge
+    // pipeline ONCE: both orientations come from one pass, not from a
+    // union of two projections of `edges`.
+    val edges = spark.range(40).filter(col("id") % 3 =!= 0)
+      .select(col("id").as("a"), (col("id") / 2).cast("long").as("b"))
+    val und = Dedup.undirected(edges)
+    val leaves = und.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size == 1, und.queryExecution.optimizedPlan.treeString)
+    val rows = und.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val e = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows.sorted == (e ++ e.map(_.swap)).sorted)
+  }
+
   test("incremental CC equals full recompute: merges, fresh islands, bridge nodes") {
     import spark.implicits._
     // Existing graph: {1-2}, {3-4}, {10-11}. Batch: 2-3 bridges the

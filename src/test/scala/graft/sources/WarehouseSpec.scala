@@ -1769,4 +1769,56 @@ class WarehouseSpec extends SparkSpec {
     assert(rows(s2) == rows(st),
       "merged store after a same-session append != from-scratch build")
   }
+
+  /** A fresh copy of the corpus whose ten served-table stores
+    * (ivf_cents, knn_truth, knn_policy, knn_tier_rows, knn_quant_row,
+    * phash_cents, phash_tr_cents, phash_truth, phash_policy,
+    * bpe_merges) are resolved through their Bench rows. knn_policy
+    * has no row of its own: its serving switch resolves it. */
+  private lazy val servedStoresDir: String = {
+    val dir = sfCopy("whserved")
+    val rows = Set("ivf_trained_index", "phash_ivf_index",
+      "phash_ivf_trained", "phash_ivf_policy", "bpe_merges",
+      "knn_tier_policy", "knn_quant_policy")
+    graft.Bench.artifactBuilders.filter(r => rows(r._1))
+      .foreach(_._2(spark, dir))
+    graft.operators.Similarity.knnIvfSelectedQuantizer(spark, dir)
+    dir
+  }
+
+  test("served stores survive the loss of every persisted block: their consumers re-read the tables") {
+    import graft.operators.{Multimodal, Similarity, TextAnalysis}
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    val dir = servedStoresDir
+    def read() = (Similarity.knnSelectedTier(spark, dir),
+      Similarity.knnIvfSelectedQuantizer(spark, dir),
+      Multimodal.phashIvfSelectedQuantizer(spark, dir),
+      Similarity.knnBruteTruth(spark, dir).collect().toSeq,
+      TextAnalysis.bpeMergesArtifact(spark, dir).collect().toSeq)
+    val before = read()
+    // The in-JVM stand-in for executor loss: every block this corpus's
+    // builds persisted is gone (blocks other suites hold are kept).
+    val dropped = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !held(id) }
+    assert(dropped.nonEmpty, "the builds persisted no block to lose")
+    dropped.values.foreach(_.unpersist(blocking = true))
+    assert(read() == before)
+  }
+
+  test("a warm served store costs its serving switch no job of its own in a fresh session") {
+    import graft.operators.{Multimodal, Similarity}
+    val dir = servedStoresDir
+    val s2 = spark.newSession()
+    assert(jobsRun(Similarity.knnTierRows(s2, dir)) == 0,
+      "resolving a warm store must run no job")
+    // The tier switch runs exactly the jobs of its decision over the
+    // table (its broadcast aggregates), nothing more.
+    val tiers = Warehouse.tableName("knn_tier_rows", dir,
+      Warehouse.embFp(spark, dir))
+    val overTable = jobsRun(Similarity.tierDecision(
+      spark.newSession().table(tiers)).filter(col("selected")).collect())
+    assert(jobsRun(Similarity.knnSelectedTier(spark.newSession(), dir)) ==
+      overTable)
+    assert(jobsRun(Multimodal.phashIvfSelectedQuantizer(s2, dir)) == 1)
+  }
 }
