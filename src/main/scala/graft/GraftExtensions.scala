@@ -11,9 +11,9 @@ import graft.functions.LongDot
   *
   *   spark.sql("SELECT long_dot(a, b) FROM vecs")
   *
-  * Wire up with either
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * or `GraftExtensions.install(builder)`.
+  * Wire up through the `spark.sql.extensions` conf:
+  *   .config("spark.sql.extensions", GraftExtensions.className)
+  * (`className` is "graft.GraftExtensions").
   *
   * Only expressions live here; whole-operator semantics in this library
   * deliberately stay in the DataFrame layer because Catalyst's built-in

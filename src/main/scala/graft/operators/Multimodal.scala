@@ -1341,23 +1341,26 @@ object Multimodal {
     }
   }
 
-  /** AUDIT-DRIVEN QUANTIZER SELECTION — the serving policy: compare
-    * the two quantizers' recall audits against the shared brute truth
-    * and pick the winner (micro-averaged: total hits over total truth
-    * rows — the n_true sides are identical, so the DECISION is a pure
-    * integer comparison with no float in the loop; ties go to first-K,
-    * the quantizer with no training build to amortize). The engine
+  /** AUDIT-DRIVEN QUANTIZER SELECTION — the serving policy: the two
+    * quantizers' audit rows ([[Similarity.auditRow]]: first-K as
+    * `ivf_flat`, trained as `ivf_trained`, both 512 B) against the
+    * shared brute truth, decided by [[Similarity.selectTier]] — on
+    * the flat pair, trained iff it has more hits; ties go to first-K,
+    * the quantizer with no training build to amortize. The engine
     * MEASURES both recalls anyway (`q_mm_phash_ivf_recall` /
     * `_trained_recall`); letting a caller serve the loser was the gap
     * — now [[phashIvfServePersisted]] reads this policy and serves the
-    * winner's index. All three inputs are probes×k frames (tiny,
-    * broadcast); output is ONE row (quantizer, recall_firstk,
-    * recall_trained), rounding exactly the recallVs convention. */
+    * winner's index. All three inputs are probes×k frames; output is
+    * ONE row (quantizer, recall_firstk, recall_trained)
+    * ([[Similarity.quantizerRow]]). */
   def phashIvfPolicy(truth: DataFrame, firstK: DataFrame,
                      trained: DataFrame): DataFrame = {
     def c(df: DataFrame) =
       df.select(col("probe_id"), col("doc_id").as("cand_id"))
-    Similarity.quantizerPolicy(c(truth), c(firstK), c(trained))
+    Similarity.quantizerRow(
+      Similarity.auditRow(c(truth), "ivf_flat", 512L, c(firstK))
+        .unionByName(Similarity.auditRow(c(truth), "ivf_trained", 512L,
+          c(trained))))
   }
 
   /** Fixture-drivable policy: brute truth + both quantizers computed
@@ -2251,7 +2254,8 @@ object Multimodal {
     * `_t` suffix; cents0 aliases the shared first-K seed so the
     * training rounds replay unchanged), plus the brute truth and the
     * policy comparison: `pol` is one row (n_true, hit_f, hit_t) — the
-    * integer hit counts [[phashIvfPolicy]] decides on. */
+    * integer hit counts [[Similarity.selectTier]] decides on over
+    * [[phashIvfPolicy]]'s flat pair. */
   private def phashIvfPolicySqlCtes: String = {
     val rounds = (0 until PhashTrainIters)
       .map(phashTrainRoundSql).mkString(",\n      ")

@@ -1694,36 +1694,41 @@ object Similarity {
       recallVs(truth, approx)
     }),
 
-    // THE EMBEDDING SERVING POLICY — see quantizerPolicy: the decision
+    // THE EMBEDDING SERVING POLICY — see [[quantizerRow]]: the decision
     // row naming which quantizer (first-K vs the trained lifecycle)
-    // the 64-probe recall audit selects; q_knn_ivf_policy_served
+    // the 64-probe recall audit selects, rendered from the flat and
+    // trained rows of the persisted audit table; q_knn_ivf_policy_served
     // serves by it. The q_mm_phash_ivf_policy pattern on the text-ANN
     // side — an index that publishes recall audits should SERVE by
     // them.
     "q_knn_ivf_policy" -> ((s, dir) =>
-      knnIvfPolicyQuery(s, dir).orderBy("quantizer")),
+      quantizerRow(knnQuantRows(s, dir)).orderBy("quantizer")),
 
     // Policy-ROUTED serving: whichever quantizer the audit selected
     // answers the standard 8-probe/top-5 query; the oracle replays
     // both chains gated by the same integer hit comparison, so the
     // hash match holds at every SF regardless of the winner.
     "q_knn_ivf_policy_served" -> ((s, dir) =>
-      ivfServePolicyRouted(s, dir, 8, 5).orderBy("probe_id", "rk")),
+      tierServe(s, dir,
+        if (knnIvfSelectedQuantizer(s, dir) == "trained") "ivf_trained"
+        else "ivf_flat", 8, 5)
+        .withColumnRenamed("score", "dot").orderBy("probe_id", "rk")),
 
-    // THE STORAGE-TIER DECISION TABLE — see [[storageTierPolicy]]:
-    // flat IVF vs PQ vs residual IVF-PQ on the shared brute truth,
-    // cheapest tier within 4/5 of the best recall selected (integer
-    // cross-multiply). The three-way widening of the quantizer policy
-    // (ROADMAP round-16 candidate).
+    // THE STORAGE-TIER DECISION TABLE — see [[quantDecision]]: flat
+    // IVF (raw 64×8-byte vectors), PQ (8 one-byte codes) and residual
+    // IVF-PQ (codes + a cell id) on the shared brute truth, cheapest
+    // tier within 4/5 of the best recall selected (integer
+    // cross-multiply).
     "q_knn_tier_policy" -> ((s, dir) =>
-      tierDecision(knnTierRows(s, dir)).orderBy("bytes_per_vec")),
+      quantDecision(knnTierRows(s, dir)).orderBy("bytes_per_vec")),
 
-    // Tier-policy-ROUTED serving — see [[knnTierServeRouted]]: the
-    // oracle replays all three 8-probe chains gated by the same
-    // integer decision, so the hash holds at every SF regardless of
-    // which tier wins.
+    // Tier-policy-ROUTED serving — see [[tierServe]]: the oracle
+    // replays all three 8-probe chains gated by the same integer
+    // decision, so the hash holds at every SF regardless of which
+    // tier wins.
     "q_knn_tier_policy_served" -> ((s, dir) =>
-      knnTierServeRouted(s, dir, 8, 5).orderBy("probe_id", "rk")),
+      tierServe(s, dir, knnSelectedTier(s, dir), 8, 5)
+        .orderBy("probe_id", "rk")),
 
     // THE UNIFIED QUANTIZER DECISION TABLE — see [[quantDecision]]:
     // the storage tiers AND the trained-flat lifecycle in ONE
@@ -1738,35 +1743,94 @@ object Similarity {
     // chains by the same selection, so the hash holds at every SF
     // regardless of which quantizer wins.
     "q_knn_quant_policy_served" -> ((s, dir) =>
-      knnQuantServeRouted(s, dir, 8, 5).orderBy("probe_id", "rk")),
+      tierServe(s, dir, knnSelectedQuant(s, dir), 8, 5)
+        .orderBy("probe_id", "rk")),
   )
 
-  /** GENERIC audit-driven serving policy (shared by the embedding and
-    * phash IVF families): compare two quantizers' top-k answers
-    * against the brute truth and name the winner — micro-averaged
-    * (total hits over total truth rows; n_true is identical on both
-    * sides, so the DECISION is a pure integer hit-count comparison
-    * with no float in the loop), ties to first-K (no training build to
-    * amortize). All inputs are (probe_id, cand_id) probes×k frames —
-    * tiny, broadcast; output is ONE row (quantizer, recall_firstk,
-    * recall_trained), rounded the recallVs way. */
-  def quantizerPolicy(truth: DataFrame, firstK: DataFrame,
-                      trained: DataFrame): DataFrame =
+  /** ONE AUDIT ROW — what every recall-at-cost policy decides on:
+    * (tier, bytes_per_vec, n_true, n_hit) of one quantizer's top-k
+    * answer `approx` against the brute `truth`, micro-averaged (total
+    * hits over total truth rows, so the decision is an integer
+    * comparison with no float in the loop). Both inputs are (probe_id,
+    * cand_id) probes×k frames — tiny, the approx side broadcast. */
+  def auditRow(truth: DataFrame, tier: String, bytes: Long,
+               approx: DataFrame): DataFrame =
     truth.select(col("probe_id"), col("cand_id"))
-      .join(broadcast(firstK.select(col("probe_id"), col("cand_id"),
-        lit(1).as("hit_f"))), Seq("probe_id", "cand_id"), "left")
-      .join(broadcast(trained.select(col("probe_id"), col("cand_id"),
-        lit(1).as("hit_t"))), Seq("probe_id", "cand_id"), "left")
-      .agg(count(lit(1)).as("n_true"),
-        count(col("hit_f")).as("hit_f"),
-        count(col("hit_t")).as("hit_t"))
-      .select(
-        when(col("hit_t") > col("hit_f"), lit("trained"))
-          .otherwise(lit("firstk")).as("quantizer"),
-        round(col("hit_f").cast("double") / col("n_true").cast("double"), 4)
-          .as("recall_firstk"),
-        round(col("hit_t").cast("double") / col("n_true").cast("double"), 4)
-          .as("recall_trained"))
+      .join(broadcast(approx.select(col("probe_id"), col("cand_id"),
+        lit(1).as("hit"))), Seq("probe_id", "cand_id"), "left")
+      .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
+      .select(lit(tier).as("tier"), lit(bytes).as("bytes_per_vec"),
+        col("n_true"), col("n_hit"))
+
+  /** The quantizer tiers the engine serves, in tie-break preference
+    * order: flat < trained (no training build to amortize) < pq < res.
+    * [[tierServe]] has one arm per entry. */
+  val Tiers: Seq[String] = Seq("ivf_flat", "ivf_trained", "pq", "ivfpq_res")
+
+  /** One collected audit row. */
+  final case class Audit(tier: String, bytes: Long, nTrue: Long, nHit: Long)
+
+  /** A policy's ≤ 4 audit rows, read in ONE job. */
+  private def audits(rows: DataFrame): Seq[Audit] =
+    rows.select("tier", "bytes_per_vec", "n_true", "n_hit").collect()
+      .map(r => Audit(r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSeq
+
+  /** THE RECALL-AT-COST DECISION — the one rule every quantizer policy
+    * applies: among the tiers whose hits reach 4/5 of the best
+    * (integer cross-multiply 5·hit ≥ 4·best, no float), the minimum of
+    * (bytes_per_vec, −n_hit, pref) — cheapest storage first, then
+    * higher recall at equal storage (the two flat tiers share
+    * 512 B/vec, where the rule is the duel "trained iff it has more
+    * hits"), then the [[Tiers]] preference order. Fully deterministic;
+    * the oracles replay it as ORDER BY … LIMIT 1. */
+  def selectTier(rows: Seq[Audit]): String = {
+    val best = rows.map(_.nHit).max
+    rows.filter(r => 5L * r.nHit >= 4L * best)
+      .minBy(r => (r.bytes, -r.nHit, Tiers.indexOf(r.tier))).tier
+  }
+
+  private def recall(hit: Column, n: Column): Column =
+    round(hit.cast("double") / n.cast("double"), 4)
+
+  /** The decision TABLE a policy key answers: every audit row with its
+    * recall (rounded the recallVs way) and whether [[selectTier]]
+    * selected it. The rows are read once; the table renders from the
+    * collected values, so the key reads the store in one job. */
+  def quantDecision(rows: DataFrame): DataFrame = {
+    val au = audits(rows)
+    val sel = selectTier(au)
+    import rows.sparkSession.implicits._
+    au.map(r => (r.tier, r.bytes, r.nTrue, r.nHit))
+      .toDF("tier", "bytes_per_vec", "n_true", "n_hit")
+      .select(col("tier"), col("bytes_per_vec"), col("n_true"), col("n_hit"),
+        recall(col("n_hit"), col("n_true")).as("recall"),
+        (col("tier") === sel).as("selected"))
+  }
+
+  /** The two-quantizer view of the decision, shared by the embedding
+    * and phash IVF families: [[selectTier]] over the flat pair
+    * (`ivf_flat` = first-K, `ivf_trained` = the trained lifecycle)
+    * rendered as ONE row (quantizer, recall_firstk, recall_trained),
+    * `quantizer` named `trained` or `firstk`. Other tiers in `rows`
+    * are ignored. */
+  def quantizerRow(rows: DataFrame): DataFrame = {
+    val au = flatAudits(rows)
+    def of(t: String) = au.find(_.tier == t).get
+    val (f, t) = (of("ivf_flat"), of("ivf_trained"))
+    import rows.sparkSession.implicits._
+    Seq((quantizerName(au), f.nHit, f.nTrue, t.nHit, t.nTrue))
+      .toDF("quantizer", "hit_f", "n_f", "hit_t", "n_t")
+      .select(col("quantizer"),
+        recall(col("hit_f"), col("n_f")).as("recall_firstk"),
+        recall(col("hit_t"), col("n_t")).as("recall_trained"))
+  }
+
+  private def flatAudits(rows: DataFrame): Seq[Audit] =
+    audits(rows.filter(col("tier").isin("ivf_flat", "ivf_trained")))
+
+  private def quantizerName(flatPair: Seq[Audit]): String =
+    if (selectTier(flatPair) == "ivf_trained") "trained" else "firstk"
 
   /** THE SHARED BRUTE TRUTH of the embedding audit family (64 probes,
     * k = 5), built once per CORPUS STATE — not per session, not per
@@ -1802,224 +1866,71 @@ object Similarity {
         "probe_id", "dot", "cand_id", 5).orderBy("probe_id", "rk"))
     }
 
-  /** ONE policy decision per CORPUS STATE for the EMBEDDING IVF
-    * family — the audit convention's 64 probes, k = 5: brute truth vs
-    * the first-K quantizer (`q_knn_ivf_recall`'s approx) vs the
-    * trained-lifecycle serve. The decision row persists through the
-    * warehouse (keyed embFp): dependencies resolve INSIDE the cold
-    * lane — the store accessor's by-name contract — so a warm process
-    * reads one row and never touches the chains (a hoisted
-    * ivfTrainedServe would eagerly collect its probe-cell list even
-    * on a hit). */
-  private def knnIvfPolicyQuery(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.store(s, "knn_policy", dir, "embeddings") {
-      val n = embCount(s, dir)
-      val kk = math.ceil(math.sqrt(n.toDouble)).toInt
-      val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-      val firstK = ivfTopK(s, dir, kk, 64, 5).select("probe_id", "cand_id")
-      val trained = ivfTrainedServe(s, dir, 64, 5)
-        .select("probe_id", "cand_id")
-      quantizerPolicy(truth, firstK, trained)
-    }((_, _) => None)
-
-  /** The embedding policy's selection, as the serving switch reads
-    * it. */
-  def knnIvfSelectedQuantizer(s: SparkSession, dir: String): String =
-    knnIvfPolicyQuery(s, dir).collect().head.getString(0)
-
-  /** POLICY-ROUTED embedding serving — the q_mm_phash_ivf_served
-    * pattern on the text-ANN side: serve whichever quantizer the
-    * recall audit selected (first-K in-memory chain or the trained
-    * persisted lifecycle; both end in the same (probe_id, cand_id,
-    * dot, rk) shape). */
-  def ivfServePolicyRouted(s: SparkSession, dir: String, nProbes: Int,
-                           k: Int): DataFrame =
-    knnIvfSelectedQuantizer(s, dir) match {
-      case "trained" => ivfTrainedServe(s, dir, nProbes, k)
-      case _ =>
-        val n = embCount(s, dir)
-        ivfTopK(s, dir, math.ceil(math.sqrt(n.toDouble)).toInt, nProbes, k)
-    }
-
-  /** THE STORAGE-TIER DECISION TABLE — [[quantizerPolicy]] widened from
-    * a two-quantizer duel to the memory/recall frontier a production
-    * deployment actually chooses on: flat IVF (raw 64×8-byte vectors,
-    * highest fidelity), PQ (8 one-byte codes — the ~64× compression),
-    * and residual IVF-PQ (codes + a cell id — PQ in the tighter
-    * residual domain). Each tier's 64-probe top-5 is audited against
-    * ONE shared brute truth; the selection rule is "cheapest tier
-    * whose recall holds ≥ 4/5 of the best" — an integer cross-multiply
-    * (5·hit ≥ 4·best_hit), no float in the decision. Output: one row
-    * per tier (bytes_per_vec, hit counts, recall, selected).
-    *
-    * Scale shape: the three chains are the already-shaped audit paths
-    * (probes broadcast, corpus never shuffles on the query side); the
-    * decision itself runs over a 3-row localCheckpointed frame. */
-  def storageTierPolicy(truth: DataFrame,
-                        tiers: Seq[(String, Long, DataFrame)]): DataFrame = {
-    val rows = tiers.map { case (name, bytes, apx) =>
-      truth.join(broadcast(apx.select(col("probe_id"), col("cand_id"),
-          lit(1).as("hit"))), Seq("probe_id", "cand_id"), "left")
-        .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
-        .select(lit(name).as("tier"), lit(bytes).as("bytes_per_vec"),
-          col("n_true"), col("n_hit"))
-    }.reduce(_ unionByName _)
-    tierDecision(rows)
-  }
-
-  /** The decision over a (tier, bytes_per_vec, n_true, n_hit) frame —
-    * split out so the registered key can cache the audited hit rows
-    * and re-derive the (cheap) decision. */
-  def tierDecision(rows: DataFrame): DataFrame = {
-    val best = rows.agg(max(col("n_hit")).as("best_hit"))
-    val sel = rows.crossJoin(broadcast(best))
-      .filter(lit(5L) * col("n_hit") >= lit(4L) * col("best_hit"))
-      .agg(min(col("bytes_per_vec")).as("sel_bytes"))
-    rows.crossJoin(broadcast(sel))
-      .select(col("tier"), col("bytes_per_vec"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_true").cast("double"), 4)
-          .as("recall"),
-        (col("bytes_per_vec") === col("sel_bytes")).as("selected"))
-  }
-
   /** The embedding family's tier audit rows, built once per CORPUS
     * STATE (warehouse family `knn_tier_rows`, keyed embFp): the three
     * 64-probe chains and the shared persisted truth run only inside
-    * the miss callback; a warm process registers + reads 3 rows. The
-    * decision re-derives from them per call (cheap). */
+    * the miss callback; a warm process registers + reads 3 rows. */
   private[graft] def knnTierRows(s: SparkSession, dir: String): DataFrame =
     graft.operators.Artifacts.store(s, "knn_tier_rows", dir, "embeddings") {
       val n = embCount(s, dir)
       val kk = math.ceil(math.sqrt(n.toDouble)).toInt
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), expr(quant).as("v"))
-      val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-      Seq(
-        ("ivf_flat", 512L, ivfTopK(s, dir, kk, 64, 5)
-          .select("probe_id", "cand_id")),
-        ("pq", 8L, pqTopKServed(s, dir, e, 64, 5)
-          .select("probe_id", "cand_id")),
-        ("ivfpq_res", 12L, ivfPqResTopKServed(s, dir, e, 64, 5)
-          .select("probe_id", "cand_id")))
-        .map { case (name, bytes, apx) =>
-          truth.join(broadcast(apx.select(col("probe_id"), col("cand_id"),
-              lit(1).as("hit"))), Seq("probe_id", "cand_id"), "left")
-            .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
-            .select(lit(name).as("tier"), lit(bytes).as("bytes_per_vec"),
-              col("n_true"), col("n_hit"))
-        }.reduce(_ unionByName _)
+      val truth = knnBruteTruth(s, dir)
+      auditRow(truth, "ivf_flat", 512L, ivfTopK(s, dir, kk, 64, 5))
+        .unionByName(auditRow(truth, "pq", 8L, pqTopKServed(s, dir, e, 64, 5)))
+        .unionByName(auditRow(truth, "ivfpq_res", 12L,
+          ivfPqResTopKServed(s, dir, e, 64, 5)))
     }((_, _) => None)
 
-  /** The storage tier the audit selected — the serving switch reads
-    * the cached decision (one 3-row frame, no chain re-run). */
-  def knnSelectedTier(s: SparkSession, dir: String): String =
-    tierDecision(knnTierRows(s, dir))
-      .filter(col("selected")).collect().head.getString(0)
-
-  /** TIER-POLICY-ROUTED serving — the policy_served pattern one level
-    * up: the standard 8-probe/top-5 query answered by whichever
-    * STORAGE tier the recall-at-cost audit selected, score column
-    * unified so callers are tier-agnostic (exact dot for the flat
-    * tier, ADC approximation for the code tiers — the score SEMANTICS
-    * follow the tier, which is the point of the policy). */
-  def knnTierServeRouted(s: SparkSession, dir: String,
-                         nProbes: Int, k: Int): DataFrame = {
-    val n = embCount(s, dir)
-    val kk = math.ceil(math.sqrt(n.toDouble)).toInt
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-    val served = knnSelectedTier(s, dir) match {
-      case "pq" =>
-        pqTopKServed(s, dir, e, nProbes, k)
-          .withColumnRenamed("adot", "score")
-      case "ivfpq_res" =>
-        ivfPqResTopKServed(s, dir, e, nProbes, k)
-          .withColumnRenamed("adot", "score")
-      case _ =>
-        ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")
-    }
-    served.select(col("probe_id"), col("cand_id"), col("score"), col("rk"))
-  }
-
-  /** THE UNIFIED QUANTIZER DECISION — the round-15 verdict's three-way
-    * ask landed as the FULL four-way table: [[storageTierPolicy]]'s
-    * tiers (flat IVF, PQ, residual IVF-PQ) JOINED by the trained-flat
-    * lifecycle that [[quantizerPolicy]] alone used to arbitrate, so
-    * one recall-at-cost decision covers every quantizer the engine can
-    * serve. Selection = among tiers within 4/5 of the best recall
-    * (integer cross-multiply), the minimum of (bytes_per_vec, −n_hit,
-    * pref) — cheapest storage first, then higher recall at equal
-    * storage (the two flat tiers share 512 B/vec), then the fixed
-    * preference order flat < trained (no training build to amortize —
-    * quantizerPolicy's tie rule) < pq < res. Fully deterministic, no
-    * float in the decision; `pref` is derived from the tier name here
-    * so callers can't desynchronize it. */
-  def quantDecision(rows: DataFrame): DataFrame = {
-    val withPref = rows.withColumn("pref", expr(
-      """CASE tier WHEN 'ivf_flat' THEN 0 WHEN 'ivf_trained' THEN 1
-              WHEN 'pq' THEN 2 ELSE 3 END"""))
-    val best = withPref.agg(max(col("n_hit")).as("best_hit"))
-    val sel = withPref.crossJoin(broadcast(best))
-      .filter(lit(5L) * col("n_hit") >= lit(4L) * col("best_hit"))
-      .agg(min_by(col("tier"), struct(col("bytes_per_vec"),
-        (-col("n_hit")).as("nh"), col("pref"))).as("sel_tier"))
-    withPref.crossJoin(broadcast(sel))
-      .select(col("tier"), col("bytes_per_vec"), col("n_true"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_true").cast("double"), 4)
-          .as("recall"),
-        (col("tier") === col("sel_tier")).as("selected"))
-  }
-
-  /** The four audit rows behind [[quantDecision]]: the persisted
+  /** The four audit rows of the unified policy: the persisted
     * three-tier frame ([[knnTierRows]]) plus the trained-lifecycle
     * row, itself persisted (warehouse family `knn_quant_row`, keyed
     * embFp) — a warm process reads 3+1 rows; the trained 64-probe
     * serve (which eagerly collects its probe-cell list) runs only
-    * inside the miss callback. */
-  private[graft] def knnQuantRows(s: SparkSession, dir: String): DataFrame = {
-    val base = knnTierRows(s, dir)
-    val trainedRow =
-      graft.operators.Artifacts.store(s, "knn_quant_row", dir, "embeddings") {
-        val truth = knnBruteTruth(s, dir).select("probe_id", "cand_id")
-        val trained = ivfTrainedServe(s, dir, 64, 5)
-          .select("probe_id", "cand_id")
-        truth.join(broadcast(trained.withColumn("hit", lit(1))),
-            Seq("probe_id", "cand_id"), "left")
-          .agg(count(lit(1)).as("n_true"), count(col("hit")).as("n_hit"))
-          .select(lit("ivf_trained").as("tier"),
-            lit(512L).as("bytes_per_vec"), col("n_true"), col("n_hit"))
-      }((_, _) => None)
-    base.unionByName(trainedRow)
-  }
+    * inside the miss callback. Its flat pair is the embedding
+    * first-K-vs-trained policy. */
+  private[graft] def knnQuantRows(s: SparkSession, dir: String): DataFrame =
+    knnTierRows(s, dir).unionByName(
+      graft.operators.Artifacts.store(s, "knn_quant_row", dir, "embeddings")(
+        auditRow(knnBruteTruth(s, dir), "ivf_trained", 512L,
+          ivfTrainedServe(s, dir, 64, 5)))((_, _) => None))
 
-  /** The quantizer the unified audit selected. */
+  /** The embedding first-K-vs-trained selection (`trained`/`firstk`),
+    * as the serving switch reads it. */
+  def knnIvfSelectedQuantizer(s: SparkSession, dir: String): String =
+    quantizerName(flatAudits(knnQuantRows(s, dir)))
+
+  /** The storage tier the three-tier audit selected — a serving
+    * switch reads its rows in one job. */
+  def knnSelectedTier(s: SparkSession, dir: String): String =
+    selectTier(audits(knnTierRows(s, dir)))
+
+  /** The quantizer the four-way audit selected. */
   def knnSelectedQuant(s: SparkSession, dir: String): String =
-    quantDecision(knnQuantRows(s, dir))
-      .filter(col("selected")).collect().head.getString(0)
+    selectTier(audits(knnQuantRows(s, dir)))
 
-  /** UNIFIED-POLICY-ROUTED serving: the standard 8-probe/top-5 query
-    * answered by whichever of the FOUR quantizers the recall-at-cost
-    * audit selected (the knnTierServeRouted shape, trained arm
-    * included); score semantics follow the tier — exact dot on the
-    * flat arms, ADC approximation on the code arms. */
-  def knnQuantServeRouted(s: SparkSession, dir: String,
-                          nProbes: Int, k: Int): DataFrame = {
-    // Corpus stats come from the memoized countMax pass the policy
-    // already paid — no fresh count() job on the routed serve (the
-    // trained arm needs neither n nor e at all).
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), expr(quant).as("v"))
-    lazy val n = embCount(s, dir)
-    lazy val kk = math.ceil(math.sqrt(n.toDouble)).toInt
-    val served = knnSelectedQuant(s, dir) match {
+  /** THE TIER SWITCH — every policy-routed embedding serve ends here:
+    * the nProbes/top-k chain of one [[Tiers]] entry as (probe_id,
+    * cand_id, score, rk). Score semantics follow the tier — exact dot
+    * on the flat arms, ADC approximation on the code arms — which is
+    * the point of the policy. The trained arm needs neither the corpus
+    * frame nor its count. */
+  def tierServe(s: SparkSession, dir: String, tier: String, nProbes: Int,
+                k: Int): DataFrame = {
+    lazy val e = Tables.embeddings(s, dir)
+      .select(col("vec_id"), expr(quant).as("v"))
+    val served = tier match {
+      case "ivf_flat" =>
+        val kk = math.ceil(math.sqrt(embCount(s, dir).toDouble)).toInt
+        ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")
       case "ivf_trained" =>
         ivfTrainedServe(s, dir, nProbes, k).withColumnRenamed("dot", "score")
       case "pq" =>
-        pqTopKServed(s, dir, e, nProbes, k)
-          .withColumnRenamed("adot", "score")
+        pqTopKServed(s, dir, e, nProbes, k).withColumnRenamed("adot", "score")
       case "ivfpq_res" =>
         ivfPqResTopKServed(s, dir, e, nProbes, k)
           .withColumnRenamed("adot", "score")
-      case _ =>
-        ivfTopK(s, dir, kk, nProbes, k).withColumnRenamed("dot", "score")
     }
     served.select(col("probe_id"), col("cand_id"), col("score"), col("rk"))
   }
@@ -2515,7 +2426,7 @@ object Similarity {
   /** BOTH quantizers' chains + brute truth + the policy comparison in
     * one WITH: c0 (the first-K seed) feeds the untrained chain
     * directly AND the Lloyd rounds; `pol` carries the integer hit
-    * counts [[quantizerPolicy]] decides on. */
+    * counts [[selectTier]] decides on over the flat pair. */
   private def knnPolicyCtes: String = s"""q AS (
         SELECT vec_id,
                list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
@@ -2587,7 +2498,7 @@ object Similarity {
     * four-row hit table (flat and trained audits come from
     * [[knnPolicyCtes]]'s apx/apx_t against its truth), and the
     * (bytes, −hits, pref) selection as ORDER BY … LIMIT 1 — the exact
-    * total order [[quantDecision]]'s min_by struct encodes. */
+    * total order [[selectTier]]'s minBy key encodes. */
   private def quantPolicyCtes: String = s"""qapx_pq AS (
         SELECT probe_id, cand_id FROM (
           SELECT probe_id, cand_id,

@@ -1392,6 +1392,54 @@ class PipelineSpec extends SparkSpec {
     assert(rows.sorted == (e ++ e.map(_.swap)).sorted)
   }
 
+  test("bounded fast paths: exactly N rows solve locally at bound N and distributed at N-1, both equal to bound 0") {
+    import spark.implicits._
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // Full CC: a 12-edge chain plus two islands — exactly 15 edges, so
+    // the limit(N+1) probe sees all of them at bound 15 (local
+    // union-find) and one past the bound at 14 (the distributed loop).
+    val edges = ((1L until 13L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (21L, 22L), (30L, 31L))).toDF("a", "b")
+    val n = edges.count().toInt
+    assert(n == 15)
+    val cc0 = pairs(Dedup.connectedComponents(edges, localMaxEdges = 0))
+    for (bound <- Seq(n, n - 1))
+      assert(pairs(Dedup.connectedComponents(edges, localMaxEdges = bound)) ==
+        cc0, s"full CC at bound $bound")
+    // Incremental CC: the contracted batch graph has one row per batch
+    // edge — 6 edges bridging, attaching and adding islands.
+    val labels0 = Dedup.connectedComponents(
+      Seq((1L, 2L), (3L, 4L), (10L, 11L)).toDF("a", "b"), localMaxEdges = 0)
+    val batch = Seq((2L, 3L), (20L, 21L), (4L, 40L), (11L, 50L),
+      (60L, 61L), (61L, 62L)).toDF("a", "b")
+    val nb = batch.count().toInt
+    assert(nb == 6)
+    val inc0 = pairs(Dedup.incrementalConnectedComponents(labels0, batch,
+      localCcMaxEdges = 0))
+    for (bound <- Seq(nb, nb - 1))
+      assert(pairs(Dedup.incrementalConnectedComponents(labels0, batch,
+        localCcMaxEdges = bound)) == inc0, s"incremental CC at bound $bound")
+    // Dup chains: exactly 7 parents (non-null dup_of), chains of depth
+    // 1 to 4 through dropped intermediates.
+    val verdicts = Seq[(Long, Long, Boolean, Option[Long])](
+      (0L, 0L, true, None), (1L, 0L, false, Some(0L)),
+      (2L, 0L, false, Some(1L)), (3L, 0L, false, Some(2L)),
+      (4L, 0L, false, Some(3L)), (5L, 1L, true, None),
+      (6L, 1L, false, Some(5L)), (7L, 1L, false, Some(6L)),
+      (8L, 2L, true, None), (9L, 2L, false, Some(8L)))
+      .toDF("vec_id", "cell", "keep", "dup_of")
+    val np = verdicts.filter(col("dup_of").isNotNull).count().toInt
+    assert(np == 7)
+    def reps(bound: Int) = Dedup.resolveDupChains(verdicts,
+        localMaxParents = bound).collect()
+      .map(r => r.getLong(0) -> (r.getBoolean(2), r.getLong(3))).toMap
+    val reps0 = reps(0)
+    assert(reps0(4L) == ((false, 0L)) && reps0(7L) == ((false, 5L)), reps0)
+    for (bound <- Seq(np, np - 1))
+      assert(reps(bound) == reps0, s"dup chains at bound $bound")
+  }
+
   test("incremental CC equals full recompute: merges, fresh islands, bridge nodes") {
     import spark.implicits._
     // Existing graph: {1-2}, {3-4}, {10-11}. Batch: 2-3 bridges the
@@ -2659,18 +2707,19 @@ class PipelineSpec extends SparkSpec {
       .toDF("probe_id", "cand_id")
     def tier(hits: Int) =
       truth.limit(hits).toDF("probe_id", "cand_id")
+    def decide(tiers: (String, Long, org.apache.spark.sql.DataFrame)*) =
+      Similarity.quantDecision(tiers.map { case (name, bytes, apx) =>
+          Similarity.auditRow(truth, name, bytes, apx) }.reduce(_ unionByName _))
+        .collect().map(r => r.getString(0) -> r.getBoolean(5)).toMap
     // pq has exactly 8/10 hits: 5*8 = 40 >= 4*10 = 40 — ON the 4/5
     // boundary, qualifies, and being cheapest (8 B) takes the slot
     // from the perfect flat tier; res at 7 hits misses the boundary.
-    val sel = Similarity.storageTierPolicy(truth, Seq(
-      ("flat", 512L, tier(10)), ("pq", 8L, tier(8)), ("res", 12L, tier(7))))
-      .collect().map(r => r.getString(0) -> r.getBoolean(5)).toMap
-    assert(sel == Map("flat" -> false, "pq" -> true, "res" -> false))
+    val sel = decide(("ivf_flat", 512L, tier(10)), ("pq", 8L, tier(8)),
+      ("ivfpq_res", 12L, tier(7)))
+    assert(sel == Map("ivf_flat" -> false, "pq" -> true, "ivfpq_res" -> false))
     // One hit fewer and pq no longer qualifies: fidelity wins.
-    val sel2 = Similarity.storageTierPolicy(truth, Seq(
-      ("flat", 512L, tier(10)), ("pq", 8L, tier(7))))
-      .collect().map(r => r.getString(0) -> r.getBoolean(5)).toMap
-    assert(sel2 == Map("flat" -> true, "pq" -> false))
+    val sel2 = decide(("ivf_flat", 512L, tier(10)), ("pq", 8L, tier(7)))
+    assert(sel2 == Map("ivf_flat" -> true, "pq" -> false))
   }
 
   test("audio staging: header fields parse back from bytes; features hand-exact; garbage is unknown") {
@@ -2761,7 +2810,7 @@ class PipelineSpec extends SparkSpec {
       Similarity.quantDecision(df).collect()
         .map(r => r.getString(0) -> r.getBoolean(5)).toMap
     // Equal storage (both flat tiers qualify): HIGHER RECALL wins the
-    // 512-byte slot — the quantizerPolicy duel inside the big table.
+    // 512-byte slot — the first-K-vs-trained duel inside the big table.
     assert(sel(rows(("ivf_flat", 512L, 8L), ("ivf_trained", 512L, 9L),
       ("pq", 8L, 5L), ("ivfpq_res", 12L, 6L))) ==
       Map("ivf_flat" -> false, "ivf_trained" -> true,

@@ -1770,11 +1770,12 @@ class WarehouseSpec extends SparkSpec {
       "merged store after a same-session append != from-scratch build")
   }
 
-  /** A fresh copy of the corpus whose ten served-table stores
-    * (ivf_cents, knn_truth, knn_policy, knn_tier_rows, knn_quant_row,
-    * phash_cents, phash_tr_cents, phash_truth, phash_policy,
-    * bpe_merges) are resolved through their Bench rows. knn_policy
-    * has no row of its own: its serving switch resolves it. */
+  /** A fresh copy of the corpus whose nine served-table stores
+    * (ivf_cents, knn_truth, knn_tier_rows, knn_quant_row, phash_cents,
+    * phash_tr_cents, phash_truth, phash_policy, bpe_merges) are
+    * resolved through their Bench rows. Every policy switch reads
+    * these stores: the embedding first-K-vs-trained switch reads the
+    * flat pair of knn_tier_rows + knn_quant_row. */
   private lazy val servedStoresDir: String = {
     val dir = sfCopy("whserved")
     val rows = Set("ivf_trained_index", "phash_ivf_index",
@@ -1782,7 +1783,6 @@ class WarehouseSpec extends SparkSpec {
       "knn_tier_policy", "knn_quant_policy")
     graft.Bench.artifactBuilders.filter(r => rows(r._1))
       .foreach(_._2(spark, dir))
-    graft.operators.Similarity.knnIvfSelectedQuantizer(spark, dir)
     dir
   }
 
@@ -1811,14 +1811,31 @@ class WarehouseSpec extends SparkSpec {
     val s2 = spark.newSession()
     assert(jobsRun(Similarity.knnTierRows(s2, dir)) == 0,
       "resolving a warm store must run no job")
-    // The tier switch runs exactly the jobs of its decision over the
-    // table (its broadcast aggregates), nothing more.
-    val tiers = Warehouse.tableName("knn_tier_rows", dir,
-      Warehouse.embFp(spark, dir))
-    val overTable = jobsRun(Similarity.tierDecision(
-      spark.newSession().table(tiers)).filter(col("selected")).collect())
-    assert(jobsRun(Similarity.knnSelectedTier(spark.newSession(), dir)) ==
-      overTable)
+    // Every switch reads its ≤ 4 audit rows once and decides on them:
+    // exactly one job each, nothing more.
+    assert(jobsRun(Similarity.knnSelectedTier(spark.newSession(), dir)) == 1)
+    assert(jobsRun(Similarity.knnSelectedQuant(spark.newSession(), dir)) == 1)
+    assert(jobsRun(
+      Similarity.knnIvfSelectedQuantizer(spark.newSession(), dir)) == 1)
     assert(jobsRun(Multimodal.phashIvfSelectedQuantizer(s2, dir)) == 1)
+  }
+
+  test("policy keys serve only stores the Bench rows built: every lane is hit") {
+    // The accounting rule on Bench.artifactBuilders: after every row
+    // has resolved its stores, a timed policy key pays no build.
+    val dir = sfCopy("whpolicy")
+    graft.Bench.artifactBuilders.foreach(_._2(spark, dir))
+    Warehouse.drainLanes(spark); Warehouse.drainHits(spark)
+    val s2 = spark.newSession()
+    val keys = Seq("q_knn_ivf_policy", "q_knn_ivf_policy_served",
+      "q_knn_tier_policy", "q_knn_tier_policy_served",
+      "q_knn_quant_policy", "q_knn_quant_policy_served",
+      "q_mm_phash_ivf_policy", "q_mm_phash_ivf_served")
+    for (k <- keys) graft.SparkEntry.queries(k)(s2, dir).collect()
+    val lanes = Warehouse.drainLanes(s2)
+    assert(lanes.nonEmpty, "the keys resolved no store")
+    assert(lanes.values.forall(_ == "hit"), s"non-hit lanes: $lanes")
+    for (fam <- Seq("knn_tier_rows", "knn_quant_row", "phash_policy"))
+      assert(lanes.keys.exists(_.startsWith(fam + "@")), s"$fam: $lanes")
   }
 }
